@@ -120,9 +120,9 @@ def main() -> None:
         # total stays the median sum for cross-round comparability.
         "queries_min": times_min,
         "value_min": round(sum(times_min.values()), 4),
-        # Per-query REP-1 (cold) time — r15 verdict #2: the session memos
-        # (_CC_MEMO / _PQ_MODEL_MEMO / _KM_CENT_MEMO) make reps 2+ of the
-        # trained-model queries memo-hit serving numbers; rep 1 is the
+        # Per-query REP-1 (cold) time — r15 verdict #2: the session memo
+        # store's model families (registry.memoized_frame) make reps 2+ of
+        # the trained-model queries memo-hit serving numbers; rep 1 is the
         # only rep that pays training, so ceiling adjudications for
         # memoized queries anchor HERE, not on median/min. (Rep 1 also
         # carries the per-query persist/cache build — for non-memoized

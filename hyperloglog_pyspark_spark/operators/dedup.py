@@ -962,49 +962,6 @@ def _cc_stats(e: DataFrame) -> tuple:
     return (row.n, row.h)
 
 
-#: session-scoped memo of fixpoint results, keyed by (application id,
-#: semantic hash of the edge plan). The fixpoint's output rides
-#: checkpoint-truncated lineage, so two invocations over the SAME edges
-#: can never be plan-canonical-equal and tracked_persist's cache lookup
-#: can't dedupe them — yet three registered queries (cluster components,
-#: canonical pick, the curation pipeline) all run CC over the same LSH
-#: pair graph. Entries are node-sized frames over "_memo"-owned
-#: checkpoint blocks (registry.checkpoint_memoized) that survive the
-#: per-query cache release; a FULL release_caches() frees the blocks and
-#: empties this dict (it is registered in registry.SESSION_MEMOS).
-_CC_MEMO: dict[tuple[str, int], tuple] = {}  # key -> (analyzed jplan, frame)
-registry_mod.SESSION_MEMOS.append(_CC_MEMO)
-
-#: entry bound: a long exploratory session can run CC over many DISTINCT
-#: edge plans; beyond this many memoized fixpoints the oldest entry's
-#: checkpoint blocks are unpersisted (FIFO — the registered queries share
-#: ONE pair graph, so any sensible cap keeps their hit rate intact).
-_CC_MEMO_CAP = 8
-
-
-def _cc_memo_store(key: tuple, jplan, out: DataFrame) -> None:
-    """Insert/replace a memo entry, releasing evicted frames' blocks: a
-    replaced entry (semanticHash collision recompute) and FIFO overflow
-    beyond _CC_MEMO_CAP both unpersist through release_memo_frame — the
-    memo never strands "_memo"-owned blocks in _live_caches.
-
-    Eviction invalidates HELD handles: an evicted frame rides
-    checkpoint-truncated lineage, so a caller that kept the DataFrame
-    across > _CC_MEMO_CAP distinct later CC edge plans cannot collect it
-    again (missing blocks, no recompute path) — the standard cache-
-    eviction contract. The registered queries are safe by construction:
-    each invocation re-calls connected_components (a memo hit returns
-    the live frame) and consumes it within the query, never holding a
-    result across other queries' CC calls."""
-    old = _CC_MEMO.pop(key, None)
-    if old is not None:
-        registry_mod.release_memo_frame(old[1])
-    while len(_CC_MEMO) >= _CC_MEMO_CAP:
-        _, evicted = _CC_MEMO.pop(next(iter(_CC_MEMO)))
-        registry_mod.release_memo_frame(evicted)
-    _CC_MEMO[key] = (jplan, out)
-
-
 def connected_components(edges: DataFrame) -> DataFrame:
     """Connected components of an undirected graph given as (u, v) pairs;
     returns (node, component) with component = min node id reachable.
@@ -1015,21 +972,12 @@ def connected_components(edges: DataFrame) -> DataFrame:
     Rounds are O(log² n) in component size — not O(diameter) like plain
     label propagation — and the loop raises rather than returning
     silently-wrong labels if CC_MAX_ROUNDS is ever hit. Results memoize
-    per (session, edge-plan) — see ``_CC_MEMO``.
+    per (session, edge plan) in the registry's memo store (family "cc").
     """
-    try:
-        jplan = edges._jdf.queryExecution().analyzed()
-        key = (
-            edges.sparkSession.sparkContext.applicationId,
-            jplan.canonicalized().semanticHash(),
-        )
-    except Exception:  # unexpected py4j surface change: skip memoization
-        jplan, key = None, None
-    hit = _CC_MEMO.get(key) if key is not None else None
-    # sameResult guards the (unlikely) semanticHash collision: a hash hit
-    # over a DIFFERENT edge plan must recompute, never alias
-    if hit is not None and hit[0].sameResult(jplan):
-        return hit[1]
+    return registry_mod.memoized_frame("cc", (edges,), lambda: _cc_fixpoint(edges))
+
+
+def _cc_fixpoint(edges: DataFrame) -> DataFrame:
     e = _cc_materialize(
         edges.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
         .where(F.col("u") != F.col("v"))
@@ -1049,17 +997,11 @@ def connected_components(edges: DataFrame) -> DataFrame:
             f"connected_components did not converge in {CC_MAX_ROUNDS} rounds"
         )
     # Fixpoint = stars: (u, root) for every non-root u; roots label themselves.
-    out = (
+    return (
         e.select(F.col("u").alias("node"), F.col("v").alias("component"))
         .union(e.select(F.col("v").alias("node"), F.col("v").alias("component")))
         .distinct()
     )
-    if key is not None:
-        # checkpoint_memoized detaches the result from `e`'s round blocks
-        # (released when the NEXT query runs) so the memo stays servable
-        out = registry_mod.checkpoint_memoized(out)
-        _cc_memo_store(key, jplan, out)
-    return out
 
 
 @register(

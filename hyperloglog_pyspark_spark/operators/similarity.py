@@ -1197,19 +1197,6 @@ def embedding_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-scoped memo of the trained k-means centroid row, keyed by
-#: (application id, semantic hash of the milli-vector plan) — the
-#: _PQ_MODEL_MEMO / _CC_MEMO discipline applied to the third
-#: execution-coupled loop in the engine: the looped centroid state rides
-#: checkpoint-truncated lineage, so bench reps can never be
-#: plan-canonical-equal and re-run all KM_ITERS rounds each invocation.
-#: Execution-time only (EAGER_CACHES); plan-only consumers keep the
-#: unrolled interior visible to the plan audits.
-_KM_CENT_MEMO: dict[tuple[str, int], tuple] = {}
-registry_mod.SESSION_MEMOS.append(_KM_CENT_MEMO)
-_KM_CENT_MEMO_CAP = 8
-
-
 def _km_assign(ev: DataFrame, cents_row: DataFrame) -> DataFrame:
     """Nearest-centroid assignment of the milli-vector frame ``ev``
     against the one-row centroid set: BroadcastNestedLoopJoin + per-row
@@ -1226,21 +1213,11 @@ def _km_trained_centroids(ev: DataFrame) -> DataFrame:
     """KM_ITERS Lloyd rounds over the persisted milli-vector frame ``ev``;
     returns the one-row trained centroid set. Split out of
     embedding_kmeans_lloyd so the trained model memoizes per
-    (session, ev-plan) like the PQ codebook."""
-    key = jplan = None
-    if registry_mod.EAGER_CACHES:
-        try:
-            jplan = ev._jdf.queryExecution().analyzed()
-            key = (
-                ev.sparkSession.sparkContext.applicationId,
-                jplan.canonicalized().semanticHash(),
-            )
-        except Exception:  # unexpected py4j surface change: skip memoization
-            key = jplan = None
-    hit = _KM_CENT_MEMO.get(key) if key is not None else None
-    if hit is not None and hit[0].sameResult(jplan):
-        return hit[1]
+    (session, ev-plan) in the registry's memo store (family "km")."""
+    return registry_mod.memoized_frame("km", (ev,), lambda: _km_lloyd(ev))
 
+
+def _km_lloyd(ev: DataFrame) -> DataFrame:
     # seed goes unchained: round 1's two references to it dedupe via
     # exchange reuse, and the first round's checkpoint resets lineage —
     # a seed checkpoint only adds a materialization job (measured)
@@ -1286,16 +1263,6 @@ def _km_trained_centroids(ev: DataFrame) -> DataFrame:
                 " AS cents"
             )
         )
-    if key is not None:
-        cent = registry_mod.checkpoint_memoized(cent)
-        if key in _KM_CENT_MEMO:  # semanticHash-collision recompute
-            registry_mod.release_memo_frame(_KM_CENT_MEMO.pop(key)[1])
-        while len(_KM_CENT_MEMO) >= _KM_CENT_MEMO_CAP:  # FIFO cap — the
-            # _PQ_MODEL_MEMO discipline: a long session over many sf_dirs
-            # must not accumulate unevictable checkpointed frames
-            oldest = next(iter(_KM_CENT_MEMO))
-            registry_mod.release_memo_frame(_KM_CENT_MEMO.pop(oldest)[1])
-        _KM_CENT_MEMO[key] = (jplan, cent)
     return cent
 
 
@@ -1441,28 +1408,6 @@ def _pq_nearest_sub(sv: str = "sv") -> Column:
     )
 
 
-#: session-scoped memo of trained PQ codebooks, keyed by (application id,
-#: semantic hash of the subvector plan, semantic hash of the seed-model
-#: plan) — the connected_components `_CC_MEMO` discipline applied to the
-#: OTHER execution-coupled loop output in the engine. The trained model's
-#: lineage is checkpoint-truncated per round, so two invocations over the
-#: SAME inputs can never be plan-canonical-equal and tracked_persist's
-#: cache lookup cannot dedupe them — yet the residual index family
-#: (residual/rerank top-k + recall twins + the persisted-index sink) and
-#: the trained-codebook query each re-train an identical 1-row codebook
-#: on every invocation (bench reps included): ~2 eager checkpoint jobs
-#: plus the assignment passes, measured ~2.5 s of every warm rep.
-#: Entries are 1-row frames over "_memo"-owned checkpoint blocks that
-#: survive the per-query cache release; a FULL release_caches() frees
-#: them and empties this dict (registered in registry.SESSION_MEMOS).
-#: Memoization only engages at execution time (EAGER_CACHES) — plan-only
-#: consumers keep the unrolled interior visible to the plan audits, and
-#: storing would otherwise require running a checkpoint job.
-_PQ_MODEL_MEMO: dict[tuple[str, int, int], tuple] = {}
-registry_mod.SESSION_MEMOS.append(_PQ_MODEL_MEMO)
-_PQ_MODEL_MEMO_CAP = 8
-
-
 def _pq_lloyd_train(sub: DataFrame, model0: DataFrame) -> DataFrame:
     """PQ_TRAIN_ITERS Lloyd rounds over a (vec_id, m, sv) subvector frame,
     jointly for all M subspaces — the embedding_kmeans_lloyd discipline
@@ -1474,29 +1419,14 @@ def _pq_lloyd_train(sub: DataFrame, model0: DataFrame) -> DataFrame:
     their previous centroid — the oracle's per-(k, m, j) LEFT JOIN
     COALESCE); the model row is checkpointed per round (each round
     references it twice, so an unchained plan doubles per round).
-    Trained models memoize per (session, input plans) — see
-    ``_PQ_MODEL_MEMO``."""
-    key = jsub = jm0 = None
-    if registry_mod.EAGER_CACHES:
-        try:
-            jsub = sub._jdf.queryExecution().analyzed()
-            jm0 = model0._jdf.queryExecution().analyzed()
-            key = (
-                sub.sparkSession.sparkContext.applicationId,
-                jsub.canonicalized().semanticHash(),
-                jm0.canonicalized().semanticHash(),
-            )
-        except Exception:  # unexpected py4j surface change: skip memoization
-            key = jsub = jm0 = None
-    hit = _PQ_MODEL_MEMO.get(key) if key is not None else None
-    # sameResult guards the (unlikely) semanticHash collision: a hash hit
-    # over DIFFERENT inputs must retrain, never alias
-    if (
-        hit is not None
-        and hit[0].sameResult(jsub)
-        and hit[1].sameResult(jm0)
-    ):
-        return hit[2]
+    Trained models memoize per (session, input plans) in the registry's
+    memo store (family "pq")."""
+    return registry_mod.memoized_frame(
+        "pq", (sub, model0), lambda: _pq_lloyd_rounds(sub, model0)
+    )
+
+
+def _pq_lloyd_rounds(sub: DataFrame, model0: DataFrame) -> DataFrame:
     model = model0
     for _ in range(PQ_TRAIN_ITERS):
         best = _pq_nearest_sub("sv")
@@ -1535,20 +1465,6 @@ def _pq_lloyd_train(sub: DataFrame, model0: DataFrame) -> DataFrame:
                 "   struct(c.m AS m, c.k AS k, j AS j)), x)) AS cv)) AS cents"
             )
         )
-    if key is not None:
-        # detach the memoized row from the training rounds' "_current
-        # query"-owned checkpoint blocks and store under "_memo" so it
-        # survives the per-query release (the _cc_memo_store discipline,
-        # including FIFO eviction through release_memo_frame)
-        model = registry_mod.checkpoint_memoized(model)
-        if key in _PQ_MODEL_MEMO:  # semanticHash-collision recompute:
-            # release the replaced entry's "_memo"-owned blocks (they
-            # would otherwise leak until a FULL release_caches)
-            registry_mod.release_memo_frame(_PQ_MODEL_MEMO.pop(key)[2])
-        while len(_PQ_MODEL_MEMO) >= _PQ_MODEL_MEMO_CAP:
-            oldest = next(iter(_PQ_MODEL_MEMO))
-            registry_mod.release_memo_frame(_PQ_MODEL_MEMO.pop(oldest)[2])
-        _PQ_MODEL_MEMO[key] = (jsub, jm0, model)
     return model
 
 

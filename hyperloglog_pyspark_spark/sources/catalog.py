@@ -16,7 +16,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from hyperloglog_pyspark_spark.registry import SESSION_MEMOS
+from hyperloglog_pyspark_spark.registry import memo_get, memo_key, memo_put
 from hyperloglog_pyspark_spark.session import configure, cpu_count
 
 TABLES = [
@@ -95,20 +95,6 @@ def spread(df: DataFrame, splits: int | None = None) -> DataFrame:
     return df.repartition(n, F.xxhash64(*df.columns))
 
 
-#: Session-scoped memo of ``load_table``'s analyzed plan, keyed by
-#: (applicationId, sf_dir, table, spread_scan). DataFrames are immutable
-#: plan handles, so handing the same object back is semantically
-#: transparent — but it skips the per-call ``spark.read.parquet`` footer
-#: pass, the dtype-normalization rebuild and their ~0.2-0.3 s of JVM
-#: analysis, which a round-16 cProfile showed every WARM bench rep of
-#: every query paying 1-4× (guide §1.2: the driver's per-rep work).
-#: Plan-only: nothing here executes or persists, so there is no
-#: EAGER_CACHES gate and no ownership hazard; registered in
-#: SESSION_MEMOS purely so a full release_caches() resets it.
-_LOAD_MEMO: dict[tuple[str, str, str, bool], DataFrame] = {}
-SESSION_MEMOS.append(_LOAD_MEMO)
-
-
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, *, spread_scan: bool = False
 ) -> DataFrame:
@@ -117,15 +103,11 @@ def load_table(
     ``spread_scan=True`` is the opt-in for operators whose pre-shuffle map
     work is expensive (word shingling, multi-hash signatures): it fans the
     scan out to all cores when the file's row-group count can't (see
-    ``spread``).
+    ``spread``). The normalized scan is memoized per session (family
+    "load" of the registry's memo store).
     """
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        name,
-        spread_scan,
-    )
-    hit = _LOAD_MEMO.get(key)
+    key = memo_key("load", spark, os.path.abspath(sf_dir), name, spread_scan)
+    hit = memo_get(key)
     if hit is not None:
         return hit
     configure(spark)
@@ -149,7 +131,7 @@ def load_table(
             df = df.withColumn(col, F.col(col).cast("timestamp"))
     if spread_scan:
         df = spread(df, _scan_splits(os.path.join(sf_dir, f"{name}.parquet")))
-    _LOAD_MEMO[key] = df
+    memo_put(key, df)
     return df
 
 

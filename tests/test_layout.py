@@ -738,25 +738,36 @@ def test_eager_caches_defaults_off_in_fresh_import():
 
 def test_load_table_plan_memo(spark, sf_dir):
     """r16: load_table memoizes its analyzed plan per (application,
-    sf_dir, table, spread_scan) — same handle back on a hit (skipping
-    the per-call parquet footer pass every warm bench rep paid),
-    distinct handles across keys, and a full release_caches() resets
-    the memo (SESSION_MEMOS discipline). Plan-only machinery: nothing
-    executes or persists on either path."""
+    session, sf_dir, table, spread_scan) — same handle back on a hit
+    (skipping the per-call parquet footer pass every warm bench rep
+    paid), distinct handles across keys, and a full release_caches()
+    resets the memo (the store's "load" family). Plan-only machinery:
+    nothing executes or persists on either path."""
     from hyperloglog_pyspark_spark import registry
-    from hyperloglog_pyspark_spark.sources.catalog import _LOAD_MEMO
 
     registry.release_caches()
-    assert not _LOAD_MEMO
+    assert not registry.memo_entries("load")
     a = load_table(spark, sf_dir, "nation")
     assert load_table(spark, sf_dir, "nation") is a
     assert load_table(spark, sf_dir, "nation", spread_scan=True) is not a
     assert load_table(spark, sf_dir, "region") is not a
     registry.release_caches()
-    assert not _LOAD_MEMO
+    assert not registry.memo_entries("load")
     b = load_table(spark, sf_dir, "nation")
     assert b is not a  # fresh build after the reset
     assert b.schema == a.schema
+
+
+def test_load_table_memo_is_per_session(spark, sf_dir):
+    """A second session on the same SparkContext (same applicationId)
+    never gets the first session's memoized scan: each handle belongs to
+    its own session's conf, temp views and UDFs."""
+    a = load_table(spark, sf_dir, "nation")
+    other = spark.newSession()
+    b = load_table(other, sf_dir, "nation")
+    assert b is not a
+    assert b.sparkSession is other
+    assert load_table(other, sf_dir, "nation") is b
 
 
 def test_spread_is_noop_when_scan_already_parallel(spark, sf_dir):

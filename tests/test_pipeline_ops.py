@@ -1153,10 +1153,7 @@ def test_connected_components_memo_survives_query_release(spark):
     per-query caches (its blocks are "_memo"-owned); (d) a FULL
     release_caches() empties the memo and a fresh call recomputes."""
     from hyperloglog_pyspark_spark import registry
-    from hyperloglog_pyspark_spark.operators.dedup import (
-        _CC_MEMO,
-        connected_components,
-    )
+    from hyperloglog_pyspark_spark.operators.dedup import connected_components
 
     registry.release_caches()  # start clean
     e1 = spark.createDataFrame(
@@ -1179,60 +1176,54 @@ def test_connected_components_memo_survives_query_release(spark):
     # real flow: the registered dedup queries derive their edge plans
     # from canonical parquet scans, so re-invocation memo-HITS (one
     # entry serves cluster_components AND canonical_pick)
-    n_before = len(_CC_MEMO)
+    n_before = len(registry.memo_entries("cc"))
     ALL["dedup_cluster_components"](spark, "/root/testdata/sf0.001").collect()
-    assert len(_CC_MEMO) == n_before + 1
+    assert len(registry.memo_entries("cc")) == n_before + 1
     ALL["dedup_cluster_components"](spark, "/root/testdata/sf0.001").collect()
     ALL["dedup_canonical_pick"](spark, "/root/testdata/sf0.001").collect()
-    assert len(_CC_MEMO) == n_before + 1
+    assert len(registry.memo_entries("cc")) == n_before + 1
     registry.release_caches()  # full release empties the memo
-    assert not _CC_MEMO
+    assert not registry.memo_entries("cc")
     cc3 = connected_components(e1)
     assert cc3 is not cc1
     assert {(r["node"], r["component"]) for r in cc3.collect()} == got1
     registry.release_caches()
 
 
-def test_connected_components_memo_evicts_replaced_and_overflow(spark):
-    """Memo hygiene: (a) FIFO overflow beyond _CC_MEMO_CAP unpersists the
-    evicted entry's "_memo"-owned checkpoint blocks and drops its
-    _live_caches row (a long exploratory session over many distinct edge
-    plans must not accumulate blocks unboundedly); (b) replacing an
-    existing key releases the old frame's blocks too."""
+def test_connected_components_memo_evicts_replaced_and_overflow(spark, monkeypatch):
+    """Memo hygiene: (a) FIFO overflow beyond the store's MEMO_CAP
+    unpersists the evicted entry's "_memo"-owned checkpoint blocks and
+    drops its _live_caches row (a long exploratory session over many
+    distinct edge plans must not accumulate blocks unboundedly);
+    (b) replacing an existing key releases the old frame's blocks too."""
     from hyperloglog_pyspark_spark import registry
-    from hyperloglog_pyspark_spark.operators import dedup
-    from hyperloglog_pyspark_spark.operators.dedup import (
-        _CC_MEMO,
-        _cc_memo_store,
-        connected_components,
-    )
+    from hyperloglog_pyspark_spark.operators.dedup import connected_components
 
     registry.release_caches()  # start clean
 
     def n_memo_rows():
         return sum(1 for owner, *_ in registry._live_caches if owner == "_memo")
 
-    old_cap = dedup._CC_MEMO_CAP
-    dedup._CC_MEMO_CAP = 2
+    monkeypatch.setattr(registry, "MEMO_CAP", 2)
     try:
         frames = []
         for i in range(3):  # 3 distinct edge plans > cap of 2
             e = spark.createDataFrame([(10 * i + 1, 10 * i + 2)], "u long, v long")
             frames.append(connected_components(e))
             frames[-1].collect()
-        assert len(_CC_MEMO) == 2  # FIFO evicted the first entry
+        assert len(registry.memo_entries("cc")) == 2  # FIFO evicted the first
         assert n_memo_rows() == 2  # ...and released its _live_caches row
         # the survivors still serve
         assert {tuple(r) for r in frames[1].collect()} == {(11, 11), (12, 11)}
         assert {tuple(r) for r in frames[2].collect()} == {(21, 21), (22, 21)}
         # replacement under an existing key releases the old frame
-        key = next(iter(_CC_MEMO))
-        jplan, old_frame = _CC_MEMO[key]
-        _cc_memo_store(key, jplan, registry.checkpoint_memoized(old_frame.limit(1)))
-        assert len(_CC_MEMO) == 2
+        key, (jplans, old_frame) = next(iter(registry.memo_entries("cc").items()))
+        registry.memo_put(
+            key, registry._checkpoint(old_frame.limit(1), "_memo"), jplans
+        )
+        assert len(registry.memo_entries("cc")) == 2
         assert n_memo_rows() == 2
     finally:
-        dedup._CC_MEMO_CAP = old_cap
         registry.release_caches()
     assert n_memo_rows() == 0
     assert not spark.sparkContext._jsc.getPersistentRDDs().size()

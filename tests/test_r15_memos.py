@@ -1,6 +1,6 @@
-"""Round-15 trained-model session memos (similarity._KM_CENT_MEMO /
-_PQ_MODEL_MEMO): the _CC_MEMO discipline applied to the k-means centroid
-row and the trained PQ codebook. Contract mirrored from
+"""Round-15 trained-model session memos (the "km" and "pq" families of
+registry's memo store): the k-means centroid row and the trained PQ
+codebook memoize like the connected-components fixpoint. Contract mirrored from
 test_connected_components_memo_survives_query_release: re-invocation of
 the registered query memo-HITS with bit-identical results, the memoized
 frame survives another query's per-query cache release, a FULL
@@ -9,11 +9,15 @@ never memoizes (building a plan must not run a checkpoint job)."""
 
 from __future__ import annotations
 
-from hyperloglog_pyspark_spark.registry import queries
+import os
+
+from hyperloglog_pyspark_spark import registry
+from hyperloglog_pyspark_spark.registry import memo_entries, queries
 
 ALL = queries()
 
 SF = "/root/testdata/sf0.001"
+SF01 = os.path.join(os.path.dirname(SF), "sf0.01")
 
 
 def _rows(df):
@@ -21,88 +25,97 @@ def _rows(df):
 
 
 def test_km_centroid_memo_hits_and_releases(spark):
-    from hyperloglog_pyspark_spark import registry
-    from hyperloglog_pyspark_spark.operators.similarity import _KM_CENT_MEMO
-
     registry.release_caches()
-    assert not _KM_CENT_MEMO
+    assert not memo_entries("km")
     got1 = _rows(ALL["embedding_kmeans_lloyd"](spark, SF))
-    assert len(_KM_CENT_MEMO) == 1
+    assert len(memo_entries("km")) == 1
     # re-invocation memo-hits (entry count stable) with identical rows
     got2 = _rows(ALL["embedding_kmeans_lloyd"](spark, SF))
-    assert len(_KM_CENT_MEMO) == 1
+    assert len(memo_entries("km")) == 1
     assert got2 == got1
     # another query's invocation releases per-query caches; memo survives
     # and the trained row is still servable
     ALL["text_stats"](spark, SF).collect()
-    assert len(_KM_CENT_MEMO) == 1
+    assert len(memo_entries("km")) == 1
     assert _rows(ALL["embedding_kmeans_lloyd"](spark, SF)) == got1
     # FULL release empties the memo; a fresh call retrains to the same rows
     registry.release_caches()
-    assert not _KM_CENT_MEMO
+    assert not memo_entries("km")
     assert _rows(ALL["embedding_kmeans_lloyd"](spark, SF)) == got1
     registry.release_caches()
 
 
 def test_pq_model_memo_hits_and_releases(spark):
-    from hyperloglog_pyspark_spark import registry
-    from hyperloglog_pyspark_spark.operators.similarity import _PQ_MODEL_MEMO
-
     registry.release_caches()
-    assert not _PQ_MODEL_MEMO
+    assert not memo_entries("pq")
     got1 = _rows(ALL["similarity_pq_trained_codebook"](spark, SF))
-    n1 = len(_PQ_MODEL_MEMO)
+    n1 = len(memo_entries("pq"))
     assert n1 >= 1
     got2 = _rows(ALL["similarity_pq_trained_codebook"](spark, SF))
-    assert len(_PQ_MODEL_MEMO) == n1  # hit, no new entry
+    assert len(memo_entries("pq")) == n1  # hit, no new entry
     assert got2 == got1
     # the residual index trains a DIFFERENT codebook (residual subvectors)
     # -> a second entry, never a false hit on the first
     res1 = _rows(ALL["similarity_ivf_pq_residual_topk"](spark, SF))
-    n2 = len(_PQ_MODEL_MEMO)
+    n2 = len(memo_entries("pq"))
     assert n2 == n1 + 1
     assert _rows(ALL["similarity_ivf_pq_residual_topk"](spark, SF)) == res1
-    assert len(_PQ_MODEL_MEMO) == n2
+    assert len(memo_entries("pq")) == n2
     registry.release_caches()
-    assert not _PQ_MODEL_MEMO
+    assert not memo_entries("pq")
     assert _rows(ALL["similarity_pq_trained_codebook"](spark, SF)) == got1
     registry.release_caches()
 
 
 def test_km_memo_fifo_cap_evicts_oldest(spark, monkeypatch):
-    """r16 (from r15 advice): _KM_CENT_MEMO carries the same FIFO cap +
-    release_memo_frame eviction as _PQ_MODEL_MEMO — a long session over
+    """r16 (from r15 advice): the "km" family carries the store's FIFO
+    cap + eviction release like every model family — a long session over
     many distinct ev plans must not accumulate unevictable checkpointed
     frames. With the cap pinned to 1, training over a second sf_dir
-    evicts the first entry (dict size stays 1) and both queries still
+    evicts the first entry (family size stays 1) and both queries still
     serve correct, re-derivable rows afterwards."""
-    from hyperloglog_pyspark_spark import registry
-    from hyperloglog_pyspark_spark.operators import similarity
-
     registry.release_caches()
-    monkeypatch.setattr(similarity, "_KM_CENT_MEMO_CAP", 1)
+    monkeypatch.setattr(registry, "MEMO_CAP", 1)
     got1 = _rows(ALL["embedding_kmeans_lloyd"](spark, SF))
-    assert len(similarity._KM_CENT_MEMO) == 1
-    key1 = next(iter(similarity._KM_CENT_MEMO))
-    ALL["embedding_kmeans_lloyd"](spark, "/root/testdata/sf0.01").collect()
-    assert len(similarity._KM_CENT_MEMO) == 1  # capped: oldest evicted
-    assert next(iter(similarity._KM_CENT_MEMO)) != key1
+    assert len(memo_entries("km")) == 1
+    key1 = next(iter(memo_entries("km")))
+    ALL["embedding_kmeans_lloyd"](spark, SF01).collect()
+    assert len(memo_entries("km")) == 1  # capped: oldest evicted
+    assert next(iter(memo_entries("km"))) != key1
     # the evicted plan retrains cleanly (its blocks were released, not
     # left dangling) and reproduces the same rows
     assert _rows(ALL["embedding_kmeans_lloyd"](spark, SF)) == got1
     registry.release_caches()
 
 
-def test_memos_disabled_in_plan_only_mode(spark):
-    from hyperloglog_pyspark_spark import registry
-    from hyperloglog_pyspark_spark.operators.similarity import (
-        _KM_CENT_MEMO,
-        _PQ_MODEL_MEMO,
-    )
+def test_model_eviction_purges_dependent_plans_soak(spark, monkeypatch):
+    """Soak over more trained models than the cap: with MEMO_CAP pinned to
+    1, k-means and PQ training alternate between two sf_dirs in one
+    session. A consumer's second invocation memoizes a plan that embeds
+    the trained model's "_memo" checkpoint; training over the other
+    sf_dir evicts that model, and the eviction must purge the plan entry
+    (its checkpoint has no lineage to recompute from), so the consumer's
+    next invocation rebuilds and serves the first run's rows. A full
+    release then leaves an empty store and no persisted RDD."""
+    registry.release_caches()
+    monkeypatch.setattr(registry, "MEMO_CAP", 1)
+    jsc = spark.sparkContext._jsc
+    for _ in range(2):
+        for name in ("embedding_kmeans_lloyd", "similarity_pq_trained_codebook"):
+            first = _rows(ALL[name](spark, SF))
+            ALL[name](spark, SF)  # model memo hit: a job-free build
+            assert any(k[-1] == name for k in memo_entries("plan"))
+            ALL[name](spark, SF01).collect()  # evicts the SF model
+            assert _rows(ALL[name](spark, SF)) == first
+    registry.release_caches()
+    assert not registry._MEMO
+    assert jsc.getPersistentRDDs().size() == 0, "leaked persisted RDDs"
 
+
+def test_memos_disabled_in_plan_only_mode(spark):
     registry.release_caches()
     with registry.lazy_caches():
         ALL["embedding_kmeans_lloyd"](spark, SF)
         ALL["similarity_pq_trained_codebook"](spark, SF)
-    assert not _KM_CENT_MEMO and not _PQ_MODEL_MEMO
+    assert not memo_entries("km") and not memo_entries("pq")
     registry.release_caches()

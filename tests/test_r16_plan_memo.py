@@ -1,14 +1,15 @@
-"""Round-16 registered-query plan memo (registry._PLAN_MEMO): a PURE
-builder's second invocation reuses the rep-1 DataFrame handle (plan
-construction only — every job still executes per invocation); a builder
-that runs jobs at build time (eager cache counts, sink writes, training
-checkpoints) is never memoized; releasing a query's caches drops its plan
+"""Round-16 registered-query plan memo (the "plan" family of registry's
+memo store): a PURE builder's second invocation reuses the rep-1
+DataFrame handle (plan construction only — every job still executes per
+invocation); a builder that runs jobs at build time (eager cache counts,
+sink writes, training checkpoints) is never memoized, also when it runs
+under the caller's job group; releasing a query's caches drops its plan
 entries; plan-only mode (lazy_caches) never memoizes."""
 
 from __future__ import annotations
 
 from hyperloglog_pyspark_spark import registry
-from hyperloglog_pyspark_spark.registry import _PLAN_MEMO, queries
+from hyperloglog_pyspark_spark.registry import memo_entries, queries
 
 ALL = queries()
 
@@ -19,9 +20,13 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _planned(name):
+    return any(k[-1] == name for k in memo_entries("plan"))
+
+
 def test_pure_builder_memoizes_and_results_stable(spark):
     registry.release_caches()
-    assert not _PLAN_MEMO
+    assert not memo_entries("plan")
     # The first-ever read of a table runs a parquet footer job, so the
     # FIRST build is (correctly) not memoized; the second build runs
     # zero jobs and is; the third reuses its handle.
@@ -32,7 +37,7 @@ def test_pure_builder_memoizes_and_results_stable(spark):
     assert c is b  # same plan handle back — construction reused
     assert _rows(c) == got1  # execution repeats, bit-identical
     registry.release_caches()
-    assert not _PLAN_MEMO
+    assert not memo_entries("plan")
 
 
 def test_job_running_builder_is_never_memoized(spark):
@@ -41,10 +46,26 @@ def test_job_running_builder_is_never_memoized(spark):
     # (EAGER_CACHES) — a job runs during build, so no plan entry may
     # exist for it and re-invocation must rebuild.
     a = ALL["dedup_simhash"](spark, SF)
-    assert not any(k[2] == "dedup_simhash" for k in _PLAN_MEMO)
+    assert not _planned("dedup_simhash")
     b = ALL["dedup_simhash"](spark, SF)
     assert b is not a
     assert _rows(b) == _rows(a)
+    registry.release_caches()
+
+
+def test_job_running_builder_under_job_group_is_never_memoized(spark):
+    # the honesty gate counts jobs in the caller's job group: a builder
+    # whose build-time count() runs inside a group is still seen
+    registry.release_caches()
+    sc = spark.sparkContext
+    sc.setJobGroup("memo-gate", "builder under a job group")
+    try:
+        a = ALL["dedup_simhash"](spark, SF)
+        b = ALL["dedup_simhash"](spark, SF)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert not _planned("dedup_simhash")
+    assert b is not a
     registry.release_caches()
 
 
@@ -56,10 +77,10 @@ def test_release_drops_owned_plan_entries(spark):
     # unpersisted frames would silently recompute them per scan site).
     ALL["text_tfidf_topk"](spark, SF).collect()
     a = ALL["text_tfidf_topk"](spark, SF)
-    if any(k[2] == "text_tfidf_topk" for k in _PLAN_MEMO):
-        ALL["text_stats"](spark, SF).collect()
-        assert not any(k[2] == "text_tfidf_topk" for k in _PLAN_MEMO)
-        assert ALL["text_tfidf_topk"](spark, SF) is not a
+    assert _planned("text_tfidf_topk")
+    ALL["text_stats"](spark, SF).collect()
+    assert not _planned("text_tfidf_topk")
+    assert ALL["text_tfidf_topk"](spark, SF) is not a
     registry.release_caches()
 
 
@@ -67,5 +88,5 @@ def test_plan_only_mode_never_memoizes(spark):
     registry.release_caches()
     with registry.lazy_caches():
         ALL["scan_project_filter"](spark, SF)
-    assert not _PLAN_MEMO
+    assert not memo_entries("plan")
     registry.release_caches()
