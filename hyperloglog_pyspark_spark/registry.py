@@ -16,11 +16,15 @@ Hash-match discipline (see tests/helpers.py for the mirror harness):
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 import re
 import sys
 from collections.abc import Callable
+from contextlib import contextmanager
 from dataclasses import dataclass, field
+from itertools import zip_longest
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -43,7 +47,7 @@ REGISTRY: dict[str, Query] = {}
 # ---------------------------------------------------------------------------
 # Tracked persists. Operators persist intermediates (e.g. the LSH signature
 # table) that must stay cached across re-invocations of the SAME query
-# (bench reps, warm reruns) but must NOT accumulate across a 108-query
+# (bench reps, warm reruns) but must NOT accumulate across a full
 # sweep — that is a session-long memory leak. Invoking a registered query
 # releases every cache owned by a DIFFERENT query, so at most one query's
 # caches are live at a time; release_caches() frees the rest (tests call it
@@ -71,20 +75,15 @@ _live_caches: list[tuple[str, DataFrame, tuple[int, ...]]] = []
 EAGER_CACHES = False
 
 
+@contextmanager
 def lazy_caches():
-    """Context manager: suppress eager cache builds (plan inspection)."""
-    from contextlib import contextmanager
-
-    @contextmanager
-    def _ctx():
-        global EAGER_CACHES
-        prev, EAGER_CACHES = EAGER_CACHES, False
-        try:
-            yield
-        finally:
-            EAGER_CACHES = prev
-
-    return _ctx()
+    """Suppress eager cache builds (plan inspection)."""
+    global EAGER_CACHES
+    prev, EAGER_CACHES = EAGER_CACHES, False
+    try:
+        yield
+    finally:
+        EAGER_CACHES = prev
 
 
 def tracked_persist(df: DataFrame) -> DataFrame:
@@ -287,17 +286,20 @@ def _job_probe(spark: SparkSession) -> Callable[[], int | None]:
     memoization (the safe direction)."""
     try:
         sc = spark.sparkContext
-        tracker = sc.statusTracker()
+        jtracker = sc._jsc.statusTracker()
+        arrays = sc._jvm.java.util.Arrays
         group = sc.getLocalProperty("spark.jobGroup.id")
     except Exception:
         return lambda: None
 
     def probe() -> int | None:
+        # max on the JVM: list() over the returned array would pay one
+        # py4j round-trip per job the status store retains
         try:
-            ids = tracker.getJobIdsForGroup(group)
+            ids = jtracker.getJobIdsForGroup(group)
+            return arrays.stream(ids).max().orElse(-1)
         except Exception:
             return None
-        return max(ids) if ids else -1
 
     return probe
 
@@ -388,248 +390,49 @@ def register(
     return deco
 
 
-# Queries that already have a green driver CORRECTNESS row (round 1: 50/50;
-# round 2: 46/50; round 3: 50/50 including the four re-proven window/NTZ
-# queries; round 4: 50/50; round 5: 50/50 — every query registered through
-# round 5 now has a hard driver row). The per-round correctness sweep samples
-# a prefix of queries() in order, so we surface not-yet-driver-verified
-# queries FIRST; once everything is verified, ordering exists to ROTATE
-# re-attestation onto the names whose green row is oldest (see
-# SWEEP_PRIORITY below).
-DRIVER_VERIFIED: frozenset[str] = frozenset({
-    # round 14 greens (CORRECTNESS_r14.json) — new names only; the other 38
-    # r14 samples were re-attestations of names already listed below
-    "sink_ddsketch_store", "governance_l_diversity",
-    "governance_dp_sensitivity", "entity_resolution_blocked",
-    "survival_km_table", "cdc_snapshot_diff", "join_cardinality_estimate",
-    "sink_ann_index_compact", "governance_t_closeness",
-    "timeseries_theil_sen", "dedup_weighted_jaccard",
-    "funnel_significance_ztest",
-    # round 13 greens (CORRECTNESS_r13.json) — new names only; the other 45
-    # r13 samples were re-attestations of names already listed below
-    "dedup_normalized_exact", "mixture_source_share_cap",
-    "ann_rebuild_policy", "governance_k_anonymity", "quality_ks_drift",
-    # round 12 greens (CORRECTNESS_r12.json) — new names only; the other 44
-    # r12 samples were re-attestations of names already listed below
-    "timeseries_ewma_unbounded", "embedding_anisotropy_report",
-    "quality_zipf_audit", "text_hashed_ngram_features",
-    "sink_hll_sketch_store", "quality_heaps_law",
-    # round 11 greens (CORRECTNESS_r11.json) — new names only; the other 39
-    # r11 samples were re-attestations of names already listed below
-    "sink_ann_index_append", "dedup_exact_substring",
-    "similarity_matryoshka_topk", "similarity_matryoshka_recall",
-    "layout_compaction_plan", "hll_overlap_matrix",
-    "sink_matryoshka_prefix_sidecar", "quality_benford_audit",
-    "text_ngram_novelty", "timeseries_ewma_smooth", "split_cluster_safe",
-    # round 10 greens (CORRECTNESS_r10.json) — new names only; the other 42
-    # r10 samples were re-attestations of names already listed below
-    "multimodal_dedup_canonical", "similarity_pq_trained_codebook",
-    "similarity_ivf_pq_residual_topk", "similarity_ivf_pq_residual_recall",
-    "sink_ann_index_partitioned", "sample_dedup_weighted",
-    "similarity_ivf_pq_rerank_topk", "similarity_ivf_pq_rerank_recall",
-    # round 9 greens (CORRECTNESS_r09.json) — new names only; the other 44
-    # r9 samples were re-attestations of names already listed below
-    "multimodal_dedup_perceptual", "multimodal_dedup_audio_fp",
-    "text_repeated_spans", "text_repeated_spans_trim",
-    "similarity_ivf_pq_topk", "similarity_ivf_pq_recall",
-    # round 8 greens (CORRECTNESS_r08.json) — new names only; the other 49
-    # r8 samples were re-attestations of names already listed below
-    "similarity_hybrid_rrf_ann",
-    # round 6 greens (CORRECTNESS_r06.json) — new names only; the other 48
-    # r6 samples were re-attestations of names already listed below
-    "multimodal_decode_gif", "dedup_incremental_epochs",
-    # round 5 greens (CORRECTNESS_r05.json) — new names only; the other 19
-    # r5 samples were re-attestations of r1 names already listed below
-    "attribution_multi_touch", "dedup_canonical_pick", "dedup_prefix_filter",
-    "embedding_kmeans_lloyd", "event_pattern_cep", "event_rfm_segmentation",
-    "funnel_time_to_convert", "governance_erasure_sweep",
-    "join_explosion_audit", "layout_range_sort_buckets",
-    "mixture_importance_weights", "multimodal_decode_png",
-    "quality_anomaly_volume_spike", "quality_freshness_watermark",
-    "quality_key_discovery", "quality_psi_drift", "quality_schema_drift",
-    "quality_winsorize_clamp", "retrieval_mrr_report",
-    "retrieval_ndcg_report", "sample_bootstrap_ci",
-    "sample_neyman_allocation", "semdedup_centroid_prune",
-    "similarity_hybrid_rrf", "snapshot_diff_cdc", "source_binaryfile_media",
-    "temporal_point_in_time", "text_boilerplate_lines",
-    "text_lang_confusion", "text_pmi_collocations", "text_tfidf_topk",
-    # round 4 greens (CORRECTNESS_r04.json)
-    "agg_histogram_equiwidth", "chunk_documents_overlap",
-    "dedup_containment", "dedup_incremental_probe", "dedup_minhash_accuracy",
-    "embedding_centroid_confusion", "event_cooccurrence_lift",
-    "experiment_ab_ttest", "graph_bfs_levels", "graph_pagerank_nations",
-    "graph_triangle_count", "hll_sliding_distinct", "ivm_delta_join",
-    "join_asof_nearest", "join_interval_overlap", "join_salted_skew",
-    "layout_skipping_report", "mixture_budget_rates", "multimodal_decode",
-    "pipeline_curation_v2", "pivot_multi_value", "quality_constraint_audit",
-    "quality_k_anonymity", "quality_referential_orphans",
-    "sample_exact_k_stratified", "sample_weighted_reservoir",
-    "scalar_try_errors", "sessionize_salted_stitch",
-    "similarity_pq_adc_topk", "similarity_pq_codebook",
-    "sink_dynamic_partition_overwrite", "sketch_ddsketch_quantiles",
-    "skew_key_audit", "source_schema_evolution", "source_xml_roundtrip",
-    "split_leakage_audit", "sql_parameterized", "sql_scalar_udf",
-    "text_bm25_topk", "text_dup_shingle_ratio", "text_unigram_logprob",
-    "timeseries_drift_cusum", "timeseries_interpolate_linear",
-    "timeseries_seasonal_index", "tpch_q11_inventory_value",
-    "tpch_q16_supplier_cnt", "tpch_q20_excess_stock",
-    "tpch_q2_min_cost_supplier", "tpch_q9_product_profit",
-    "zorder_morton_buckets",
-    # round 3 greens (CORRECTNESS_r03.json)
-    "approx_quantile_check", "array_higher_order", "bitmap_distinct_rollup",
-    "bitwise_funcs", "bloom_membership", "cms_frequency", "corpus_dashboard",
-    "corpus_overlap_grams", "curriculum_quality_bins",
-    "embedding_quantize_int8", "event_path_mining", "explode_positional",
-    "hll_accuracy_report", "hll_merge_compat", "hll_set_intersection",
-    "json_variant", "map_funcs", "map_higher_order", "null_safe_arithmetic",
-    "profile_table", "sample_weighted_systematic", "scalar_serde_roundtrip",
-    "scd2_status_history", "sessionize_gap_ids", "similarity_recall_report",
-    "sink_python_datasink", "source_python_datasource",
-    "source_text_roundtrip", "text_decontaminate", "text_outlier_zscore",
-    "text_pii_redact", "text_repetition", "text_token_bpe",
-    "theta_set_algebra", "tpch_q12_priority_lines", "tpch_q13_custdist",
-    "tpch_q15_top_supplier", "tpch_q17_small_quantity",
-    "tpch_q19_disjunctive_revenue", "tpch_q21_waiting_supplier",
-    "tpch_q22_idle_balances", "tpch_q4_priority_count",
-    "window_distribution", "window_lag_lead", "window_range_frame",
-    "window_range_interval", "window_rank_dense_ntile", "window_session",
-    "window_sliding", "window_tumbling",
-    # round 2 greens (CORRECTNESS_r02.json)
-    "ivm_incremental_agg", "cogroup_asof_attribution",
-    "similarity_topk_bruteforce", "funnel_conversion", "date_funcs",
-    "lateral_topk", "set_union_intersect_except",
-    "approx_distinct_users_daily", "sql_q3", "subquery_scalar_avg",
-    "pivot_order_status", "text_stats", "pack_sequences_greedy",
-    "window_topk_per_group", "orderby_limit_topk", "source_csv_roundtrip",
-    "sink_partitioned_parquet", "percentile_exact", "udtf_bigrams",
-    "similarity_ann_lsh", "retention_cohorts", "math_funcs",
-    "join_bucketed_colocated", "set_intersect_all_counts",
-    "hll_sketch_rollup", "sql_pricing", "subquery_exists_notin",
-    "unpivot_nation_metrics", "text_langid",
-    "mixture_downsample_temperature", "window_running_sum",
-    "source_json_roundtrip", "similarity_ivf", "event_transition_matrix",
-    "array_funcs", "set_union_by_name", "hll64_parity", "text_fingerprint",
-    "shard_manifest_balanced", "source_orc_roundtrip",
-    "embedding_norm_quant", "timeseries_anomaly_mad", "json_funcs",
-    "heavy_hitters_mg", "timeseries_resample_ffill", "text_token_freq",
-    # round 1 greens (CORRECTNESS_r01.json)
-    "agg_pricing_summary", "agg_stats", "agg_distinct_exact", "agg_cube",
-    "agg_rollup", "agg_grouping_sets", "agg_salted_skew", "agg_stats_moments",
-    "agg_filter_clause", "agg_regression", "agg_argminmax", "agg_listagg",
-    "tpch_q3_shipping_priority", "tpch_q5_local_supplier_volume",
-    "tpch_q6_forecast_revenue", "tpch_q7_volume_shipping",
-    "tpch_q8_market_share", "tpch_q10_returned_items",
-    "tpch_q14_promo_revenue", "tpch_q18_large_orders",
-    "dedup_exact", "dedup_minhash_lsh", "dedup_ngram_jaccard",
-    "dedup_simhash", "dedup_embedding_cosine", "dedup_cluster_components",
-    "dedup_fuzzy_name",
-    "multimodal_meta", "multimodal_frame_sample", "multimodal_dedup_digest",
-    "pipeline_corpus_curation",
-    "scan_project_filter", "filter_in_like_between", "expr_case_arith",
-    "join_broadcast_dim", "join_shuffle_agg", "join_semi", "join_anti",
-    "join_outer_histogram", "join_full_outer", "join_range", "join_asof",
-    "cdc_upsert_merge", "join_null_safe", "recursive_cte_spine",
-    "cross_join_dense_matrix",
-    "sample_deterministic", "split_train_val_test", "sample_stratified",
-    "string_funcs",
-})
-
-
-# Sweep-order pins. Every registered query through round 14 is
-# driver-green; the ~50-query prefix the driver samples each round
-# exists to (a) attest queries with no driver row yet, (b) RE-attest
-# queries whose OPERATOR CODE CHANGED since their last green row, and
-# (c) rotate the oldest greens through the remaining slots.
-# Round 15: the six new queries lead (weighted prefix filter,
-# Nelson-Aalen, subject access, Cramér's V, CUPED, autocorrelation),
-# then the FULL 44-name r9-aged cohort — the oldest attestation age in
-# the registry (age 6 at r15 judging, same age the r8 cohort rotated at
-# in r14). 6 + 44 = 50 leaves ZERO changed-block slots; the r15
-# changed-code queries are all age-1 r14 greens re-verified locally at
-# sf0.001/0.01/0.1 AND through a bare-session driver-contract run after
-# their oracle fixes (dedup_weighted_jaccard length-bucket symmetry,
-# sink_ddsketch_store n_days population, join_cardinality_estimate est
-# widening — commit 8c8eebf), so deferring their driver re-attestation
-# one round is the verdict-sanctioned trade (full-oldest-cohort-in
-# outranks re-attesting young changed greens; r14 precedent). Also
-# deferred on the same grounds: survival_km_table (consumed unchanged
-# by the new Nelson-Aalen op), hll64_parity (hash_func kwarg is
-# additive, default path byte-identical, md5 parity tests added), and
-# entity_resolution_blocked / dedup_weighted_jaccard's probe-only
-# block_cap / df_cap knobs (registered default None is plan-identical;
-# both re-verified at three SFs after the change, stop-block fixture
-# in tests/test_round15_ops.py).
-#
-# Rotation schedule (attestation age stays <= ~5-6 rounds):
-# r16 = the changed-code block above + the 46-name r10 cohort (46 + a
-# few new fills 50). ALWAYS recompute the cohorts from the
-# CORRECTNESS_r*.json artifacts (latest green round per name) rather
-# than trusting this comment — the r9, r10 AND r12 reviews all caught
-# comment drift here.
-SWEEP_PRIORITY: tuple[str, ...] = (
-    # round-15 new queries (no driver row yet), locally verified at
-    # sf0.001, sf0.01 AND sf0.1 against their oracles. 9 new + 41 of the
-    # 44 r9-aged names = 50 slots: the three cohort names that no longer
-    # fit (window_session / window_sliding / window_tumbling, all
-    # unchanged-code stable greens) are deferred to the FRONT of the
-    # r16 rotation.
-    "quality_model_score", "curriculum_model_bins",
-    "quality_signal_agreement",
-    "dedup_weighted_prefix_filter", "survival_nelson_aalen",
-    "governance_subject_access", "quality_cramers_v",
-    "experiment_cuped_adjustment", "timeseries_autocorrelation",
-    # latest green = round 9 (the full remaining stale cohort, 44 names
-    # recomputed from CORRECTNESS_r1..r14 artifacts this round)
-
-    "agg_histogram_equiwidth", "approx_quantile_check", "array_higher_order",
-    "bitwise_funcs", "chunk_documents_overlap", "curriculum_quality_bins",
-    "dedup_containment", "dedup_minhash_accuracy", "event_cooccurrence_lift",
-    "explode_positional", "graph_pagerank_nations", "graph_triangle_count",
-    "hll_sliding_distinct", "join_interval_overlap", "join_salted_skew",
-    "json_variant", "map_funcs", "map_higher_order", "null_safe_arithmetic",
-    "profile_table", "sample_weighted_systematic", "scalar_serde_roundtrip",
-    "sink_python_datasink", "source_python_datasource",
-    "source_text_roundtrip", "text_decontaminate", "text_pii_redact",
-    "text_token_bpe", "tpch_q12_priority_lines", "tpch_q13_custdist",
-    "tpch_q15_top_supplier", "tpch_q17_small_quantity",
-    "tpch_q19_disjunctive_revenue", "tpch_q21_waiting_supplier",
-    "tpch_q22_idle_balances", "tpch_q4_priority_count", "window_distribution",
-    "window_lag_lead", "window_range_frame", "window_range_interval",
-    "window_rank_dense_ntile",
-    # window_session / window_sliding / window_tumbling (also r9-aged)
-    # deferred to r16 — displaced by the three new round-15
-    # quality-model queries above
-)
+# The driver writes one CORRECTNESS_r<round>.json per round next to the
+# package (the repo root __spark_entry__ puts on sys.path).
+ARTIFACT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def ordered_names() -> list[str]:
     """Registry names in driver-sweep order.
 
-    Never-driver-verified names lead: SWEEP_PRIORITY pins first (new
-    queries front the pin list), then any remaining unverified names
-    interleaved round-robin by category (so a sweep prefix of any length
-    touches the widest category spread). Then come the verified
-    SWEEP_PRIORITY pins — the oldest-green cohort queued for
-    re-attestation — and finally the rest of the verified registry.
+    The driver checks a prefix of queries() each round and records it in
+    CORRECTNESS_r<round>.json under ARTIFACT_ROOT. Each name's age is the
+    latest round whose row has rows_match, schema_match and hash_match
+    all true (0 when it has none, or no artifact exists); names come
+    oldest first, and within one round round-robin by category (registry
+    order within a category), so any prefix touches the widest category
+    spread. Unreadable files and malformed rows are skipped.
     """
-    from itertools import zip_longest
-
-    pins = [n for n in SWEEP_PRIORITY if n in REGISTRY]
-    pin_set = set(pins)
-    unverified_pins = [n for n in pins if n not in DRIVER_VERIFIED]
-    verified_pins = [n for n in pins if n in DRIVER_VERIFIED]
-    by_cat: dict[str, list[str]] = {}
+    latest: dict[str, int] = {}
+    checks = ("rows_match", "schema_match", "hash_match")
+    for path in glob.glob(os.path.join(ARTIFACT_ROOT, "CORRECTNESS_r*.json")):
+        m = re.search(r"_r(\d+)\.json$", path)
+        if m is None:
+            continue
+        try:
+            with open(path) as f:
+                rows = json.load(f)
+        except (OSError, ValueError, RecursionError):
+            continue
+        if not isinstance(rows, dict):
+            continue
+        for name, row in rows.items():
+            if isinstance(row, dict) and all(row.get(k) is True for k in checks):
+                latest[name] = max(latest.get(name, 0), int(m.group(1)))
+    by_round: dict[int, dict[str, list[str]]] = {}
     for name, q in REGISTRY.items():
-        if name not in DRIVER_VERIFIED and name not in pin_set:
-            by_cat.setdefault(q.category, []).append(name)
-    interleaved = [
-        n for batch in zip_longest(*by_cat.values()) for n in batch if n is not None
+        cats = by_round.setdefault(latest.get(name, 0), {})
+        cats.setdefault(q.category, []).append(name)
+    return [
+        n
+        for r in sorted(by_round)
+        for batch in zip_longest(*by_round[r].values())
+        for n in batch
+        if n is not None
     ]
-    tail = [
-        n for n in REGISTRY
-        if n in DRIVER_VERIFIED and n not in pin_set
-    ]
-    return unverified_pins + interleaved + verified_pins + tail
 
 
 def queries() -> dict[str, QueryFn]:

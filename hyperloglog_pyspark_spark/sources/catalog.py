@@ -88,6 +88,8 @@ def spread(df: DataFrame, splits: int | None = None) -> DataFrame:
     no sort. Base tables carry unique keys, so the hash spreads evenly;
     a pathological all-duplicate input would collapse to one partition —
     acceptable for a helper that only ever wraps catalog base tables.
+    ``xxhash64`` rejects MapType columns; no catalog table has one
+    (checked on documents, events, embeddings and lineitem).
     """
     n = cpu_count()
     if splits is not None and splits >= n:

@@ -12,10 +12,14 @@ written down; this test locks that convention:
 
 from __future__ import annotations
 
+import json
 import os
 import re
 
-from hyperloglog_pyspark_spark.registry import REGISTRY, queries
+import pytest
+
+from hyperloglog_pyspark_spark import registry
+from hyperloglog_pyspark_spark.registry import REGISTRY, ordered_names, queries
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -150,43 +154,118 @@ def test_plans_audit_census():
         )
 
 
-def test_sweep_prefix_fronts_new_then_changed_queries():
-    """The driver samples a ~50-name prefix of queries() each round; the
-    round-15 contract is: the nine queries with no driver row yet lead
-    (new this round), then 41 of the 44 r9-aged names — which consumes
-    every remaining slot, so the changed-code block is EMPTY this round
-    (the r15 oracle-fix queries are all age-1 r14 greens, re-verified
-    locally at three SFs + bare session; window_session/window_sliding/
-    window_tumbling defer to the front of r16; see the SWEEP_PRIORITY
-    comment for the deferral rationale). Locks the prefix composition
-    against accidental reordering."""
-    import __spark_entry__ as E
+_GREEN = {"rows_match": True, "schema_match": True, "hash_match": True}
 
-    names = list(E.queries())
-    changed: list[str] = []
-    from hyperloglog_pyspark_spark.registry import (
-        DRIVER_VERIFIED,
-        SWEEP_PRIORITY,
-    )
 
-    n_new = sum(1 for n in names if n not in DRIVER_VERIFIED)
-    assert names[n_new : n_new + len(changed)] == changed, (
-        "changed-operator block drifted"
-    )
-    # every never-driver-verified name must be pinned (a new query left
-    # off SWEEP_PRIORITY would still front the sample, but silently
-    # displace an aged-cohort pin past slot 50)
-    unpinned_new = [
-        n for n in names[:n_new] if n not in set(SWEEP_PRIORITY)
-    ]
-    assert not unpinned_new, f"new queries missing from pins: {unpinned_new}"
-    # pin-pool integrity: registry names dedupe through the dict, so
-    # assert on SWEEP_PRIORITY itself — a duplicate there silently
-    # shrinks the 50-slot rotation
-    from hyperloglog_pyspark_spark.registry import SWEEP_PRIORITY
+def _artifact(root, name: str, rows) -> None:
+    with open(os.path.join(root, name), "w") as f:
+        json.dump(rows, f)
 
-    assert len(SWEEP_PRIORITY) == 50
-    assert len(set(SWEEP_PRIORITY)) == 50, "duplicate name in SWEEP_PRIORITY"
+
+def _category_round_robin(names: list[str]) -> list[str]:
+    """Take each category's next name in turn, categories in order of
+    first appearance, names in the order given."""
+    queues: dict[str, list[str]] = {}
+    for n in names:
+        queues.setdefault(REGISTRY[n].category, []).append(n)
+    out: list[str] = []
+    while any(queues.values()):
+        for q in queues.values():
+            if q:
+                out.append(q.pop(0))
+    return out
+
+
+@pytest.fixture
+def artifact_root(tmp_path, monkeypatch):
+    """An empty artifact directory in place of the repo root."""
+    queries()
+    monkeypatch.setattr(registry, "ARTIFACT_ROOT", str(tmp_path))
+    return tmp_path
+
+
+def test_sweep_order_never_green_name_leads(artifact_root):
+    new = list(REGISTRY)[-1]
+    _artifact(artifact_root, "CORRECTNESS_r01.json",
+              {n: _GREEN for n in REGISTRY if n != new})
+    assert ordered_names()[0] == new
+
+
+def test_sweep_order_any_failed_check_is_not_green(artifact_root):
+    """r02 failed the four window queries (None checks plus an err); a
+    single false check is a failure too."""
+    failed = {
+        "window_tumbling": {**_GREEN, "rows_match": False},
+        "window_sliding": {**_GREEN, "schema_match": False},
+        "window_session": {**_GREEN, "hash_match": False},
+        "window_lag_lead": {"rows_match": None, "schema_match": None,
+                            "hash_match": None, "err": "AnalysisException"},
+    }
+    _artifact(artifact_root, "CORRECTNESS_r01.json", {n: _GREEN for n in REGISTRY})
+    _artifact(artifact_root, "CORRECTNESS_r02.json",
+              {n: failed.get(n, _GREEN) for n in REGISTRY})
+    assert set(ordered_names()[:4]) == set(failed)
+
+
+def test_sweep_order_later_green_supersedes_earlier(artifact_root):
+    a, b = list(REGISTRY)[:2]
+    _artifact(artifact_root, "CORRECTNESS_r01.json", {a: _GREEN})
+    _artifact(artifact_root, "CORRECTNESS_r02.json", {b: _GREEN})
+    _artifact(artifact_root, "CORRECTNESS_r03.json", {a: _GREEN})
+    _artifact(artifact_root, "CORRECTNESS_r04.json",
+              {n: _GREEN for n in REGISTRY if n not in (a, b)})
+    assert ordered_names()[:2] == [b, a]
+
+
+def test_sweep_order_same_round_interleaves_by_category(artifact_root):
+    by_cat: dict[str, list[str]] = {}
+    for n, q in REGISTRY.items():
+        by_cat.setdefault(q.category, []).append(n)
+    (x1, x2), (y1, y2) = [ns[:2] for ns in by_cat.values() if len(ns) >= 2][:2]
+    _artifact(artifact_root, "CORRECTNESS_r01.json",
+              {n: _GREEN for n in (x1, x2, y1, y2)})
+    _artifact(artifact_root, "CORRECTNESS_r02.json",
+              {n: _GREEN for n in REGISTRY if n not in (x1, x2, y1, y2)})
+    assert ordered_names()[:4] == [x1, y1, x2, y2]
+
+
+def test_sweep_order_without_artifacts_interleaves_whole_registry(artifact_root):
+    assert ordered_names() == _category_round_robin(list(REGISTRY))
+
+
+def test_sweep_order_skips_malformed_artifacts(artifact_root):
+    new = list(REGISTRY)[-1]
+    _artifact(artifact_root, "CORRECTNESS_r01.json",
+              {n: _GREEN for n in REGISTRY if n != new})
+    expected = ordered_names()
+    assert expected[0] == new
+    (artifact_root / "CORRECTNESS_r02.json").write_text("{not json")
+    (artifact_root / "CORRECTNESS_r03.json").write_bytes(b"\xff\xfe")
+    _artifact(artifact_root, "CORRECTNESS_r04.json", [{new: _GREEN}])
+    _artifact(artifact_root, "CORRECTNESS_r05.json", {new: "green", "x": 1})
+    _artifact(artifact_root, "CORRECTNESS_r06_c8.json", {new: _GREEN})
+    _artifact(artifact_root, "CORRECTNESS_rX.json", {new: _GREEN})
+    assert ordered_names() == expected
+
+
+def test_sweep_order_at_head_is_oldest_green_first():
+    """The live order over the committed artifacts: each name's latest
+    all-three-green round never decreases along queries()."""
+    import glob
+
+    assert registry.ARTIFACT_ROOT == REPO
+    latest: dict[str, int] = {}
+    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
+        m = re.search(r"_r(\d+)\.json$", path)
+        if m is None:
+            continue
+        with open(path) as f:
+            rows = json.load(f)
+        for name, row in rows.items():
+            if all(row.get(k) is True for k in _GREEN):
+                latest[name] = max(latest.get(name, 0), int(m.group(1)))
+    rounds = [latest.get(n, 0) for n in queries()]
+    assert rounds == sorted(rounds)
 
 
 def test_bench_summary_line_fits_driver_tail_window():

@@ -69,6 +69,34 @@ def test_job_running_builder_under_job_group_is_never_memoized(spark):
     registry.release_caches()
 
 
+def test_job_probe_matches_status_tracker(spark):
+    # the gate's probe takes the max on the JVM; it must equal the max
+    # of the tracker's job ids for the caller's group: the null group,
+    # then a job group before and after it runs two jobs
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+
+    def check(group):
+        bus.waitUntilEmpty(10_000)
+        ids = sc.statusTracker().getJobIdsForGroup(group)
+        assert registry._job_probe(spark)() == max(ids, default=-1)
+        return ids
+
+    def two_jobs():
+        spark.range(3).collect()
+        spark.range(3).collect()
+
+    two_jobs()
+    assert len(check(None)) >= 2
+    sc.setJobGroup("probe-check", "job probe vs status tracker")
+    try:
+        assert not check("probe-check")
+        two_jobs()
+        assert len(check("probe-check")) == 2
+    finally:
+        sc._jsc.clearJobGroup()
+
+
 def test_release_drops_owned_plan_entries(spark):
     registry.release_caches()
     # text_tfidf_topk persists interior frames; its (job-free) second
