@@ -16,10 +16,13 @@ Differences, all deliberate:
 - the parallel form accepts a SparkSession OR a SparkContext where the
   reference required a SparkContext (HLL/examples.py:56-67) — modern
   entry points hand you a session;
-- execution is the engine's two-phase Arrow aggregate
-  (`functions/hll64_spark.py`) instead of pickled-row mapPartitions +
-  driver reduce: partials are one small binary row per partition, so
-  the merge shuffles KBs at any input size;
+- each Spark-backed call is ONE job of ONE stage with no shuffle, no
+  DataFrame and no Arrow: the parallel estimate folds each partition
+  into one serialized register array (mapPartitions) and max-merges
+  the ≤ defaultParallelism partials on the driver, as the reference
+  does with mapPartitions + reduce; the exact oracle deduplicates each
+  partition into a set on the cluster and unions the sets on the
+  driver, which already holds the items;
 - the reference's latent bugs are fixed, not reproduced: 32-bit
   high-range NameError (HyperLogLog.py:153) and the raw-k merge
   compatibility check (HyperLogLog.py:165-167, p-compat here).
@@ -158,61 +161,69 @@ def estimate_distinct_elements(items, k: int, hash_func=None) -> float:
     return hll64.estimate(regs)
 
 
+def _spark_context(sc):
+    """The SparkContext behind a SparkSession or SparkContext handle."""
+    return sc.sparkContext if isinstance(sc, SparkSession) else sc
+
+
 def estimate_distinct_elements_parallel(
     lists_of_items, k: int, sc, hash_func=None
 ) -> float:
     """Distributed estimate over a collection of sequences.
 
-    Mirrors HLL/examples.py:56-67 (the reference flagship): one partial
-    sketch per sequence, associatively merged, evaluated once. ``sc``
-    may be a SparkSession or a SparkContext. The engine form builds a
-    one-column DataFrame and runs the two-phase Arrow aggregate — the
-    partial/merge pattern the reference hand-codes with
-    mapPartitions(init_compute_hmaps)+reduce, planned by Catalyst
-    instead. ``hash_func`` forwards the reference constructor's
-    pluggable hash (HyperLogLog.py:58) into the executor-side sketch
-    updates; pass a picklable top-level constructor (hashlib.md5, ...).
+    Mirrors HLL/examples.py:56-67 (the reference flagship): partial
+    sketches on the cluster, associatively merged, evaluated once. ``sc``
+    may be a SparkSession or a SparkContext. One job of one stage: each
+    partition of the flattened, str()-ed elements folds into one register
+    array, the ≤ defaultParallelism serialized partials are collected,
+    and the driver max-merges them and runs ``hll64.estimate``. Register
+    max is an exact merge, so the estimate is bit-identical to
+    ``estimate_distinct_elements`` over the same elements, whatever the
+    sequence split or partitioning. ``hash_func`` forwards the reference
+    constructor's pluggable hash (HyperLogLog.py:58) into the
+    executor-side sketch updates; pass a picklable top-level constructor
+    (hashlib.md5, ...).
     """
-    from hyperloglog_pyspark_spark.functions.hll64_spark import (
-        estimate_distinct,
-    )
+    p = hll64.p_from_k(k)
+    hf = hash_func if hash_func is not None else hashlib.sha1
+    # str() on the driver: the workers then only ever see strings, so
+    # elements whose class is not importable on a worker still work.
+    flat = [str(x) for seq in lists_of_items for x in seq]
 
-    spark = (
-        sc
-        if isinstance(sc, SparkSession)
-        else SparkSession.builder.getOrCreate()
-    )
-    flat = [(str(x),) for seq in lists_of_items for x in seq]
-    # No repartition: the partial/merge aggregate is an exact monoid, so
-    # the estimate is partitioning-independent — mimicking the
-    # reference's one-partition-per-sequence layout would only add a
-    # full-data shuffle for nothing (createDataFrame already splits
-    # across defaultParallelism).
-    df = spark.createDataFrame(flat, "v string")
-    return float(
-        estimate_distinct(df, "v", k, hash_func=hash_func).first().estimate
-    )
+    def partial(values):
+        regs = hll64.empty_registers(p)
+        hll64.update_registers(regs, list(values), p, hash_func=hf)
+        yield hll64.serialize(regs)
+
+    blobs = _spark_context(sc).parallelize(flat).mapPartitions(partial).collect()
+    regs = hll64.empty_registers(p)
+    for blob in blobs:
+        regs = hll64.merge_registers(regs, hll64.deserialize(blob))
+    return hll64.estimate(regs)
 
 
 def calculate_empirical_accuracy(items, estimate: float, sc, relative: bool = True) -> float:
     """Exact-count oracle for an estimate.
 
-    Mirrors HLL/examples.py:70-83: distinct().count() on the cluster,
-    then (cardinality − estimate)/cardinality (relative, the default) or
-    the signed absolute difference. ``sc`` may be a SparkSession or a
+    Mirrors HLL/examples.py:70-83: the exact distinct count, then
+    (cardinality − estimate)/cardinality (relative, the default) or the
+    signed absolute difference. ``sc`` may be a SparkSession or a
     SparkContext.
 
     Distinctness is over the RAW items (Python-object equality), exactly
     as the reference's ``parallelize(items).distinct()`` — note this is a
     *different* equality than the str()-before-sha1 the estimators use
     (HyperLogLog.py:110): to the oracle [11, "11"] has 2 distinct values
-    and [11, 11.0] has 1, while the sketch sees the opposite. The RDD
-    distinct is deliberate here: the contract is arbitrary-Python-object
-    equality over a driver-local sequence, which a typed DataFrame column
-    cannot express without coercion.
+    and [11, 11.0] has 1, while the sketch sees the opposite. One job of
+    one stage: each partition deduplicates into a set on the cluster (the
+    same hash and ``==`` that ``distinct()``'s reduceByKey uses) and the
+    driver, which already holds ``items``, unions the per-partition sets
+    instead of shuffling them.
     """
-    context = sc.sparkContext if isinstance(sc, SparkSession) else sc
-    cardinality = context.parallelize(items).distinct().count()
+    parts = _spark_context(sc).parallelize(items).mapPartitions(
+        lambda it: [set(it)]
+    ).collect()
+    cardinality = len(set().union(*parts))
     if relative:
         return (cardinality - estimate) / cardinality
     return cardinality - estimate

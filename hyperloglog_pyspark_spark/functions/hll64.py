@@ -108,10 +108,12 @@ def update_registers(
     hash_func mirrors the reference constructor's pluggable hash
     (HyperLogLog.py:58, ``HyperLogLog(k, hash_func=hashlib.sha1)``): any
     hashlib-style callable whose digest is ≥ hash_bits long — the hex
-    prefix of its hexdigest is consumed exactly as sha1's is.
+    prefix of its hexdigest is consumed exactly as sha1's is. The prefix
+    is read as the digest's leading hash_bits/8 bytes, big-endian: the
+    same bits as parsing hash_bits/4 hex chars, without the hex round-trip.
     """
     m = 1 << p
-    hex_len = hash_bits // 4
+    n_bytes = hash_bits // 8
     shift = (4 - p % 4) if p % 4 else 0
     # Rank width accounts for the hex-truncation shift: after dropping
     # `shift` bits only hash_bits−shift remain. The reference counts ranks
@@ -124,7 +126,7 @@ def update_registers(
     keys = np.empty(len(values), dtype=np.int64)
     ranks = np.empty(len(values), dtype=np.uint8)
     for i, v in enumerate(values):
-        h = int(hash_func(str(v).encode()).hexdigest()[:hex_len], 16) >> shift
+        h = int.from_bytes(hash_func(str(v).encode()).digest()[:n_bytes], "big") >> shift
         keys[i] = h & (m - 1)
         rest = h >> p
         ranks[i] = rank_bits - p - rest.bit_length() + 1

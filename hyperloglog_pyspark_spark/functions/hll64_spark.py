@@ -90,9 +90,11 @@ def hll64_estimate_col(df: DataFrame, sketch_col: str = "sketch", alias: str = "
 def estimate_distinct(
     df: DataFrame, value_col: str, k: int, hash_func=None
 ) -> DataFrame:
-    """Global distinct estimate — the engine form of the reference flagship
-    estimate_distinct_elements_parallel (HLL/examples.py:56-67): returns a
-    one-row DataFrame (estimate: double)."""
+    """Global distinct estimate of a DataFrame column: returns a one-row
+    DataFrame (estimate: double). This is the DataFrame-input form; the
+    drop-in ``api.estimate_distinct_elements_parallel`` takes driver-local
+    sequences and does not run through here (it is one RDD stage plus a
+    driver-side merge)."""
     sketch = hll64_sketch(
         df.withColumn("__g", F.lit(1)), ["__g"], value_col, k,
         hash_func=hash_func,

@@ -2,11 +2,15 @@
 surface (HLL/examples.py) re-exposed by hyperloglog_pyspark_spark.api
 must reproduce the reference's OWN integration goldens
 (tests/HLL/test_examples.py:86-110) on its own fixtures, called with the
-reference's calling conventions."""
+reference's calling conventions. The goldens need the reference's
+fixture files; the seeded tests at the end run anywhere and pin
+parallel == local bit-exactly, the raw-object oracle and the one-stage
+job shape."""
 
 from __future__ import annotations
 
 import json
+import math
 
 import pytest
 
@@ -102,7 +106,7 @@ def test_hash_func_kwarg_local():
 
 def test_hash_func_kwarg_parallel(spark):
     # local and distributed sketches are the same monoid: with md5
-    # threaded through the Arrow aggregate, the parallel estimate of a
+    # threaded through the worker partials, the parallel estimate of a
     # flattened corpus equals the local estimate of the same elements.
     import hashlib
 
@@ -202,3 +206,100 @@ def test_class_32bit_variant_and_hash_func():
     assert hm.cardinality == pytest.approx(
         estimate_distinct_elements(items, K, hash_func=hashlib.md5), abs=1e-9
     )
+
+
+# --- fixture-free parity: the parallel form is the local sketch, exactly ---
+
+def _mixed_stream(seed: int, n: int = 4000) -> list:
+    """Seeded int/float/str items with repeats, the empty string, unicode
+    and None: about 2k distinct values under str(), enough to put k=65536 in
+    linear counting, k=1024 in the bias-corrected and k=256 in the raw
+    regime."""
+    import random
+
+    rng = random.Random(seed)
+    pool = ["", "ü", "日本語", "𝄞x", None, "None", 11, "11", 11.0]
+    for _ in range(2500):
+        v = rng.randrange(10**6)
+        pool.append(rng.choice((v, v + 0.5, f"s{v}", f"ø{v}")))
+    return [rng.choice(pool) for _ in range(n)]
+
+
+def _regime(items, k, hash_func) -> str:
+    from hyperloglog_pyspark_spark.functions import hll64
+
+    p = hll64.p_from_k(k)
+    regs = hll64.update_registers(
+        hll64.empty_registers(p), [str(x) for x in items], p,
+        hash_func=hash_func,
+    )
+    m = regs.size
+    zeros = int((regs == 0).sum())
+    if zeros and m * math.log(m / zeros) <= hll64.LC_THRESHOLD[p - 4]:
+        return "linear"
+    raw = hll64.alpha(m) * m * m / float((2.0 ** -regs.astype(float)).sum())
+    return "bias-corrected" if raw <= 5 * m else "raw"
+
+
+@pytest.mark.parametrize("hash_name", ["sha1", "md5"])
+@pytest.mark.parametrize(
+    "k,regime", [(65536, "linear"), (1024, "bias-corrected"), (256, "raw")]
+)
+def test_parallel_equals_local_exactly(spark, k, regime, hash_name):
+    import hashlib
+
+    hf = getattr(hashlib, hash_name)
+    items = _mixed_stream(seed=k)
+    assert _regime(items, k, hf) == regime
+    local = estimate_distinct_elements(items, k, hash_func=hf)
+    # two splits of the same items: one sequence, and uneven sequences
+    # with empty ones in between
+    cuts = [0, 1, 1, 700, 2222, 2223, 3999, len(items)]
+    splits = [
+        [items],
+        [items[a:b] for a, b in zip(cuts[:-1], cuts[1:])] + [[]],
+    ]
+    for seqs in splits:
+        assert estimate_distinct_elements_parallel(
+            seqs, k, spark, hash_func=hf
+        ) == local
+
+
+def test_parallel_empty_input_is_zero(spark):
+    assert estimate_distinct_elements([], K) == 0.0
+    assert estimate_distinct_elements_parallel([], K, spark) == 0.0
+    assert estimate_distinct_elements_parallel([[]], K, spark) == 0.0
+
+
+@pytest.mark.parametrize(
+    "items", [[11, "11"], [11, 11.0], [1, True], [None, None, "None"]]
+)
+def test_oracle_is_python_set_cardinality(spark, items):
+    assert calculate_empirical_accuracy(
+        items, 0.0, spark, relative=False
+    ) == len(set(items))
+
+
+def test_each_api_call_is_one_single_stage_job(spark):
+    # the drop-in calls run one job with one stage each: no shuffle, no
+    # exchange between a partial and a merge stage
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    items = _mixed_stream(seed=3)
+    seqs = [items[:1000], items[1000:]]
+    calls = {
+        "parallel": lambda: estimate_distinct_elements_parallel(seqs, K, spark),
+        "accuracy": lambda: calculate_empirical_accuracy(items, 1.0, spark),
+    }
+    for name, call in calls.items():
+        group = f"api-shape-{name}"
+        sc.setJobGroup(group, f"job shape of the {name} call")
+        try:
+            call()
+        finally:
+            sc._jsc.clearJobGroup()
+        bus.waitUntilEmpty(10_000)
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup(group)
+        assert len(jobs) == 1, (name, jobs)
+        assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1, name
