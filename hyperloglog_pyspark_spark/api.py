@@ -16,13 +16,14 @@ Differences, all deliberate:
 - the parallel form accepts a SparkSession OR a SparkContext where the
   reference required a SparkContext (HLL/examples.py:56-67) — modern
   entry points hand you a session;
-- each Spark-backed call is ONE job of ONE stage with no shuffle, no
-  DataFrame and no Arrow: the parallel estimate folds each partition
-  into one serialized register array (mapPartitions) and max-merges
-  the ≤ defaultParallelism partials on the driver, as the reference
-  does with mapPartitions + reduce; the exact oracle deduplicates each
-  partition into a set on the cluster and unions the sets on the
-  driver, which already holds the items;
+- the parallel estimate is ONE job of ONE stage with no shuffle, no
+  DataFrame and no Arrow: it folds each partition into one serialized
+  register array (mapPartitions) and max-merges the ≤
+  defaultParallelism partials on the driver, as the reference does
+  with mapPartitions + reduce;
+- the exact oracle runs no job: the driver already holds the items, so
+  it counts them with ``len(set(items))``, the same raw-object equality
+  as the reference's ``parallelize(items).distinct().count()``;
 - the reference's latent bugs are fixed, not reproduced: 32-bit
   high-range NameError (HyperLogLog.py:153) and the raw-k merge
   compatibility check (HyperLogLog.py:165-167, p-compat here).
@@ -207,23 +208,19 @@ def calculate_empirical_accuracy(items, estimate: float, sc, relative: bool = Tr
 
     Mirrors HLL/examples.py:70-83: the exact distinct count, then
     (cardinality − estimate)/cardinality (relative, the default) or the
-    signed absolute difference. ``sc`` may be a SparkSession or a
-    SparkContext.
+    signed absolute difference.
 
     Distinctness is over the RAW items (Python-object equality), exactly
     as the reference's ``parallelize(items).distinct()`` — note this is a
     *different* equality than the str()-before-sha1 the estimators use
     (HyperLogLog.py:110): to the oracle [11, "11"] has 2 distinct values
-    and [11, 11.0] has 1, while the sketch sees the opposite. One job of
-    one stage: each partition deduplicates into a set on the cluster (the
-    same hash and ``==`` that ``distinct()``'s reduceByKey uses) and the
-    driver, which already holds ``items``, unions the per-partition sets
-    instead of shuffling them.
+    and [11, 11.0] has 1, while the sketch sees the opposite. The count is
+    ``len(set(items))`` on the driver and runs no Spark job: the driver
+    already holds ``items``, and hashing them into a set costs less than
+    pickling them for ``parallelize``. ``sc`` (a SparkSession or
+    SparkContext) is accepted for signature compatibility and unused.
     """
-    parts = _spark_context(sc).parallelize(items).mapPartitions(
-        lambda it: [set(it)]
-    ).collect()
-    cardinality = len(set().union(*parts))
+    cardinality = len(set(items))
     if relative:
         return (cardinality - estimate) / cardinality
     return cardinality - estimate

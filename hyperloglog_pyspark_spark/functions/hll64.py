@@ -41,10 +41,13 @@ Deliberate divergences (correctness over bug-parity, SURVEY.md §4):
   bit-identical either way.
 
 Architecture: not an object-per-element port — registers are numpy arrays
-updated per Arrow batch, exposed to Spark as a two-phase aggregation
-(mapInPandas partial per batch → groupBy().applyInPandas merge), i.e. the
-partial+final combiner pattern the reference hand-rolls with
-mapPartitions + reduce (HLL/examples.py:56-67).
+updated a batch of values at a time. This module is the reference
+implementation of the register recipe: the drop-in api folds each RDD
+partition with ``update_registers`` and max-merges the partials on the
+driver, and the grouped DataFrame sketch (functions/hll64_spark.py)
+computes the same (key, rank) pairs as Catalyst expressions and takes the
+per-key max in Spark's hash aggregate. Both end in ``estimate`` on the
+assembled array, so every path shares one float summation order.
 """
 
 from __future__ import annotations

@@ -1,80 +1,85 @@
-"""Spark integration for the clean-room HLL64 sketch: a two-phase
-distributed aggregate over DataFrames.
+"""Spark integration for the clean-room HLL64 sketch: registers built by
+Spark's own hash aggregate, assembled and estimated in one Arrow node.
 
-Phase 1 (map-side combine): mapInPandas folds each Arrow batch into one
-partial register array per group — the engine-level analog of the
-reference's `mapPartitions(init_compute_hmaps(k))` (HLL/examples.py:39-53),
-but batched through Arrow instead of pickled Python rows.
-
-Phase 2 (final merge): groupBy(group).applyInPandas max-merges the partial
-arrays — the reference's `reduce(lambda x, y: x + y)` (HLL/examples.py:66)
-expressed relationally. Partials are one small binary row per (batch,
-group), so the shuffle moves KBs regardless of input size — the property
-that makes this hold at 100 TB.
-
-Production note: this path exists for bit-parity with the reference's
-sha1-based estimates and as the template for custom sketch UDAFs; for
-plain approximate distinct counts prefer the JVM-side built-ins
-(approx_count_distinct / hll_sketch_agg, operators/sketch.py).
+HLL registers are a per-key max, an exact mergeable aggregate, so the JVM
+builds them bit for bit as ``hll64.update_registers`` does: a Catalyst
+expression hashes each row to its 64-bit prefix h (16 hex chars of sha1 /
+md5 / sha2 as a signed long, >>> the p%4 truncation shift), then
+``groupBy(group, key).max(rank)`` and a per-group ``collect_list`` of keys
+and ranks run as partial/final hash aggregates — the reference's
+mapPartitions + reduce (HLL/examples.py:39-67). One scalar pandas_udf
+scatters each group's lists into the register array; ``hll64_estimate_col``
+chains onto it, so Spark runs both in one ArrowEvalPython node. Plain
+approximate counts: prefer approx_count_distinct / hll_sketch_agg.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import BinaryType, StructField, StructType
 
 from hyperloglog_pyspark_spark.functions import hll64
 
+# hashlib constructors whose hex digest Spark computes natively.
+_JVM_HEX_DIGESTS = {
+    hashlib.sha1: F.sha1,
+    hashlib.md5: F.md5,
+    **{getattr(hashlib, f"sha{n}"): (lambda c, n=n: F.sha2(c, n)) for n in (224, 256, 384, 512)},
+}
 
-def hll64_sketch(
-    df: DataFrame, group_cols: list[str], value_col: str, k: int,
-    hash_func=None,
-) -> DataFrame:
-    """Aggregate `value_col` into one HLL64 sketch per group.
 
-    Returns (group_cols..., sketch: binary). Values are canonicalized with
-    CAST(value AS STRING) to preserve the reference's str()-before-hash
-    equality semantics (HyperLogLog.py:110). ``hash_func`` (default sha1)
-    mirrors the reference constructor's pluggable hash
-    (HyperLogLog.py:58); the callable is closure-captured and shipped to
-    executors with the Arrow UDF — pass a top-level hashlib constructor
-    (hashlib.md5, hashlib.sha256, ...) so it pickles.
+def _registers(df: DataFrame, group_cols: list[str], value_col: str, p: int, hash_func) -> DataFrame:
+    """(group_cols..., __keys, __ranks): each group's nonzero registers, built on
+    the JVM from h, the first 8 bytes of hash_func(UTF-8 of the value) as a long."""
+    v = F.coalesce(F.col(value_col).cast("string"), F.lit("None"))
+    hex_digest = _JVM_HEX_DIGESTS.get(hash_func)
+    if hex_digest is not None:
+        h = F.conv(F.substring(hex_digest(v.cast("binary")), 1, 16), 16, -10).cast("long")
+    else:
+        @F.pandas_udf("long")
+        def prefix(s: pd.Series) -> pd.Series:
+            return s.map(lambda x: int.from_bytes(hash_func(x.encode()).digest()[:8], "big", signed=True))
+
+        h = prefix(v)
+    shift = (4 - p % 4) if p % 4 else 0
+    rest = F.shiftrightunsigned("__h", p)
+    rank = hll64.HASH_BITS - shift - p + 1 - F.when(rest == 0, 0).otherwise(F.length(F.bin(rest)))
+    return (  # h gets its own projection so key and rank share one hash per row
+        df.select(*group_cols, F.shiftrightunsigned(h, shift).alias("__h"))
+        .select(*group_cols, F.col("__h").bitwiseAND((1 << p) - 1).cast("int").alias("__key"),
+                rank.cast("tinyint").alias("__rank"))
+        .groupBy(*group_cols, "__key").agg(F.max("__rank").alias("__rank"))
+        .groupBy(*group_cols)
+        .agg(F.collect_list("__key").alias("__keys"), F.collect_list("__rank").alias("__ranks"))
+    )
+
+
+def hll64_sketch(df: DataFrame, group_cols: list[str], value_col: str, k: int, hash_func=None) -> DataFrame:
+    """Aggregate `value_col` into one HLL64 sketch per group: returns
+    (group_cols..., sketch: binary), the ``hll64.serialize`` bytes of the
+    registers ``hll64.update_registers`` builds from the group's values.
+    Values hash as CAST(value AS STRING), null as "None": the reference's
+    str()-before-hash semantics (HyperLogLog.py:110). A null group key is
+    its own group. ``hash_func`` (default sha1) is the reference's
+    pluggable hash (HyperLogLog.py:58): hashlib's sha1, md5 and sha224-512
+    run on the JVM, any other picklable callable in a pandas_udf.
     """
     p = hll64.p_from_k(k)
-    hf = hash_func if hash_func is not None else hashlib.sha1
-    src = df.select(*group_cols, F.col(value_col).cast("string").alias("__v"))
-    group_fields = [src.schema[c] for c in group_cols]
-    partial_schema = StructType(group_fields + [StructField("sketch", BinaryType())])
+    registers = _registers(df, group_cols, value_col, p, hash_func or hashlib.sha1)
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # One register array per group key seen in this worker's batches.
-        acc: dict[tuple, object] = {}
-        for pdf in batches:
-            for key, vals in pdf.groupby(list(group_cols), sort=False, dropna=False)["__v"]:
-                key = key if isinstance(key, tuple) else (key,)
-                regs = acc.get(key)
-                if regs is None:
-                    regs = acc[key] = hll64.empty_registers(p)
-                hll64.update_registers(regs, vals.to_numpy(), p, hash_func=hf)
-        rows = [(*key, hll64.serialize(regs)) for key, regs in acc.items()]
-        yield pd.DataFrame(rows, columns=[*group_cols, "sketch"])
+    @F.pandas_udf("binary")
+    def assemble(keys: pd.Series, ranks: pd.Series) -> pd.Series:
+        out = []
+        for ks, rs in zip(keys, ranks):
+            regs = hll64.empty_registers(p)
+            regs[ks] = rs  # keys are unique within a group: a scatter is the max
+            out.append(hll64.serialize(regs))
+        return pd.Series(out)
 
-    partials = src.mapInPandas(partial, schema=partial_schema)
-
-    def final_merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = hll64.empty_registers(p)
-        for blob in pdf["sketch"]:
-            merged = hll64.merge_registers(merged, hll64.deserialize(blob))
-        out = pdf.iloc[[0]][list(group_cols)].copy()
-        out["sketch"] = [hll64.serialize(merged)]
-        return out
-
-    return partials.groupBy(*group_cols).applyInPandas(final_merge, schema=partial_schema)
+    return registers.select(*group_cols, assemble("__keys", "__ranks").alias("sketch"))
 
 
 def hll64_estimate_col(df: DataFrame, sketch_col: str = "sketch", alias: str = "estimate") -> DataFrame:
@@ -87,16 +92,9 @@ def hll64_estimate_col(df: DataFrame, sketch_col: str = "sketch", alias: str = "
     return df.withColumn(alias, _est(F.col(sketch_col)))
 
 
-def estimate_distinct(
-    df: DataFrame, value_col: str, k: int, hash_func=None
-) -> DataFrame:
-    """Global distinct estimate of a DataFrame column: returns a one-row
-    DataFrame (estimate: double). This is the DataFrame-input form; the
-    drop-in ``api.estimate_distinct_elements_parallel`` takes driver-local
-    sequences and does not run through here (it is one RDD stage plus a
-    driver-side merge)."""
-    sketch = hll64_sketch(
-        df.withColumn("__g", F.lit(1)), ["__g"], value_col, k,
-        hash_func=hash_func,
-    )
+def estimate_distinct(df: DataFrame, value_col: str, k: int, hash_func=None) -> DataFrame:
+    """Global distinct estimate of a DataFrame column, as a one-row
+    DataFrame (estimate: double). The drop-in api takes driver-local
+    sequences instead (api.estimate_distinct_elements_parallel)."""
+    sketch = hll64_sketch(df.withColumn("__g", F.lit(1)), ["__g"], value_col, k, hash_func=hash_func)
     return hll64_estimate_col(sketch).select("estimate")

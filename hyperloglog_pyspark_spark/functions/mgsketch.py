@@ -1,6 +1,7 @@
 """Misra-Gries heavy-hitters sketch as a two-phase distributed aggregate —
-the frequency-counting sibling of the HLL64 UDAF (functions/hll64_spark.py):
-same Arrow partial/merge shape, different summary algebra.
+the frequency-counting sibling of the HLL64 sketch (functions/hll64_spark.py).
+Its per-partition compression (below) has no Spark aggregate to build it,
+so it runs as an Arrow partial/merge pair.
 
 Summary algebra (Misra & Gries 1982; mergeability per Agarwal et al.,
 "Mergeable Summaries", PODS 2012):

@@ -128,9 +128,9 @@ def hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def hll64_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct users per event_type via the clean-room sha1 HLL64 UDAF
-    (functions/hll64_spark.py) — the reference's own estimator run as a
-    two-phase distributed aggregate, tolerance-checked against exact.
+    """Distinct users per event_type via the clean-room sha1 HLL64 sketch
+    (functions/hll64_spark.py) — the reference's own estimator, registers
+    built by Spark's hash aggregate, tolerance-checked against exact.
 
     p=12 ⇒ stderr 1.04/√4096 ≈ 1.63%; acceptance 3σ, the envelope the
     reference itself demonstrates (−1.14% at p=12, BASELINE.md).

@@ -389,7 +389,7 @@ def test_sql_entry_path_plans_match_dataframe_forms(spark, sf_dir):
 # allowed ONLY where the semantics require Python at all, each one a
 # documented, deliberate boundary.
 ARROW_PYTHON_ALLOWED = {
-    "hll64_parity",              # bit-parity sha1 HLL64 port (two-phase UDAF)
+    "hll64_parity",              # bit-parity sha1 HLL64: JVM registers, one Arrow assemble+estimate
     "multimodal_meta",           # mapInPandas payload decode plumbing
     "multimodal_frame_sample",   # mapInPandas frame sampling
     "multimodal_decode",         # mapInPandas BMP/WAV synth + header parse
