@@ -9,14 +9,17 @@ integer multiply/add makes every iteration bit-identical in Spark and
 DuckDB — the oracle unrolls the same three iterations as CTE stages.
 (Same determinism discipline as the md5-hash sampling operators.)
 
-Scale posture: one iteration = ranks ⋈ edges (broadcast the rank frame —
-node-sized, not edge-sized) + one groupBy(dst) sum — the standard
-edge-partitioned PageRank step. Dangling mass (rank parked on nodes with
-no out-edges) is redistributed uniformly each round — dropping it leaks
-total mass and under-ranks everything downstream of sinks. Every
-``PR_CHECKPOINT_EVERY`` rounds the rank frame is localCheckpoint-ed to
-cut lineage (same move as dedup_cluster_components) so deep iteration
-counts can't stack an unbounded DAG.
+Scale posture: the node-sized rank frame is put on ONE partition once,
+and each round reads it once — ranks ⟕ broadcast (src, dst, outdeg)
+edge frame, exploded into contribution, dangling and zero self rows, one
+groupBy sum and a ``sum(d) over ()`` dangling total — so no round adds an
+exchange and all rounds run in a single stage. Dangling mass (rank
+parked on nodes with no out-edges) is redistributed uniformly each round
+— dropping it leaks total mass and under-ranks everything downstream of
+sinks. The plan grows linearly with the round count; only very deep runs
+localCheckpoint the rank frame, every ``PR_CHECKPOINT_EVERY`` rounds, so
+building the 3-round query runs no job and the plan memo keeps it. A rank
+frame too big for one partition would shuffle each round on ``k``.
 The reference has no graph surface (HLL sketch library only).
 """
 
@@ -30,7 +33,11 @@ from hyperloglog_pyspark_spark.sources.catalog import literal_frame, load_table
 PR_SCALE = 10**12  # integer rank scale
 PR_ITERS = 3
 PR_N = 25  # nations
-PR_CHECKPOINT_EVERY = 2  # localCheckpoint cadence (rounds); 0 disables
+# localCheckpoint cadence in rounds (0 disables); never fires at PR_ITERS.
+# At 50 rounds on the nation graph (4 cores) the uncut plan took 1.5 s to
+# plan and 9-10 s to run; cutting every 16 rounds took 0.03 s and 0.6-0.7 s
+# (every 10: more checkpoint jobs; every 25: 0.5 s and 3.3 s).
+PR_CHECKPOINT_EVERY = 16
 
 
 _EDGES_SQL = """
@@ -93,45 +100,41 @@ def pagerank_scaled(
     redistribution.
 
     ``nodes``: one ``node`` column. ``edges``: ``src``/``dst`` pairs
-    (deduplicated). ``n_nodes`` is passed in, never counted here — no
-    driver-side actions inside operators.
+    (deduplicated, both ends in ``nodes``). ``n_nodes`` is passed in,
+    never counted here — no driver-side actions inside operators.
 
-    Per iteration: (1) dangling mass = Σ rank over nodes absent from
-    ``src`` (left-anti against the node-sized src set), floor-split
-    uniformly; (2) contributions = one broadcast join of the node-sized
-    rank frame into the edge list + a groupBy(dst) sum; (3) new rank =
-    teleport + 85%·(contrib + dangling share), all floor arithmetic.
-    Every ``checkpoint_every`` rounds the node-sized rank frame is
-    localCheckpoint-ed (eager) — lineage stays O(checkpoint_every), not
-    O(iters), which is what makes 50-round runs plannable.
+    Each round reads the one-partition rank frame once: ranks ⟕ the
+    broadcast (src, dst, outdeg) edge frame, each joined row exploded
+    into a contribution row ``(dst, rank div outdeg)``, a dangling row
+    (``rank`` when the node has no out-edges) and a zero self-row (every
+    node keeps a group), then one ``groupBy(k)`` summing ``s`` and ``d``;
+    new rank = teleport + (85 · (s + Σd div N)) div 100, all floor
+    arithmetic. Σd is ``sum(d) over ()``: a global window, but over a
+    node-sized frame already on one partition, so neither it nor the
+    aggregate adds an exchange. Every ``checkpoint_every`` rounds (0
+    disables) the rank frame goes through ``checkpoint_rounds``.
     """
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    edges = tracked_persist(edges.join(deg, "src"))
-    srcs = edges.select("src").distinct()
+    out = F.broadcast(
+        edges.selectExpr("src", "dst", "count(1) OVER (PARTITION BY src) AS outdeg")
+    )
     base = PR_SCALE // n_nodes
     teleport = (PR_SCALE * 15) // (100 * n_nodes)
-    ranks = nodes.withColumn("rank", F.lit(base).cast("long"))
+    ranks = nodes.coalesce(1).withColumn("rank", F.lit(base).cast("long"))
+    rows = F.expr(
+        "inline(array("
+        "named_struct('k', coalesce(dst, node), 'c', coalesce(rank div outdeg, 0L),"
+        " 'd', if(outdeg IS NULL, rank, 0L)),"
+        " named_struct('k', node, 'c', 0L, 'd', 0L)))"
+    )
     for i in range(iters):
-        dangling = (
-            ranks.join(srcs, ranks["node"] == srcs["src"], "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0)).alias("dang_total"))
-            .select(F.expr(f"dang_total div {n_nodes}").alias("dm"))
-        )
-        contrib = (
-            edges.join(F.broadcast(ranks.withColumnRenamed("node", "src")), "src")
-            .select("dst", F.expr("rank div outdeg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
         ranks = (
-            nodes.join(F.broadcast(contrib.withColumnRenamed("dst", "node")), "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
+            ranks.join(out, F.col("node") == F.col("src"), "left")
+            .select(rows)
+            .groupBy(F.col("k").alias("node"))
+            .agg(F.sum("c").alias("s"), F.sum("d").alias("d"))
+            .selectExpr(
                 "node",
-                (
-                    F.lit(teleport)
-                    + F.expr("(85 * (COALESCE(contrib, 0L) + dm)) div 100")
-                ).cast("long").alias("rank"),
+                f"{teleport} + (85 * (s + sum(d) over () div {n_nodes})) div 100 AS rank",
             )
         )
         if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < iters:
@@ -169,8 +172,9 @@ def graph_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three damped PageRank iterations (d = 0.85, teleport mass uniform,
     dangling mass redistributed) over the distinct customer-nation →
     supplier-nation trade edges, in scaled integer arithmetic so the
-    result is bit-exact cross-engine. Rank frames stay node-sized and
-    broadcast; only the edge extraction touches fact-table scale."""
+    result is bit-exact cross-engine. The rank frame stays node-sized on
+    one partition, so its ``sum(d) over ()`` dangling-total window adds
+    no exchange; only the edge extraction touches fact-table scale."""
     edges = _trade_edges(spark, sf_dir)
     na = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     nodes = na.select(F.col("n_name").alias("node"))
@@ -316,7 +320,7 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale — and the visited set grows monotonically (union + min-level
     agg at the end instead of per-round anti-joins would also work; the
     anti-join form keeps frontiers minimal). Each round's frontier is
-    localCheckpoint-ed (the PageRank/components lineage rule): without
+    localCheckpoint-ed (the components lineage rule): without
     it the anti-join re-embeds every earlier round's subplan at every
     reference and the unrolled plan grows combinatorially — the audit
     measured 100 exchanges at depth 4 versus ~10 with the checkpoint.

@@ -1164,7 +1164,7 @@ def embedding_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-array coalesce (a cluster with members contributes every
     dimension, so per-dim and per-array coalesce agree — matching the
     oracle's per-(k, i) LEFT JOIN). The tiny centroid frame is
-    localCheckpoint-ed every round (the PageRank/BFS lineage rule) —
+    localCheckpoint-ed every round (the BFS lineage rule) —
     each round references cent TWICE (assignment and update), so an
     unchained plan doubles the centroid subplan per round: 2^rounds
     copies of the seed build by the final assignment.

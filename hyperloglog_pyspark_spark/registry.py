@@ -118,7 +118,8 @@ def checkpoint_tracked(df: DataFrame) -> DataFrame:
 
 def checkpoint_rounds(df: DataFrame) -> DataFrame:
     """Per-round lineage truncation for FIXED-iteration operators (BFS,
-    k-means, PageRank — loop count independent of the data).
+    k-means — loop count independent of the data; PageRank only past
+    its deep-run cadence).
 
     At execution time (EAGER_CACHES, set by __spark_entry__ / bench /
     the test session) this is checkpoint_tracked: each round runs on a

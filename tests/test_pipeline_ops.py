@@ -364,6 +364,89 @@ def _pr_mirror_no_dangling(nodes, edges, iters, n, scale=10**12):
     return rank
 
 
+def _pr_random_graph(seed=17, n=30):
+    """Seeded directed graph with sinks, isolated nodes and nodes without
+    in-edges: sources are drawn from the first 2/3 of the nodes, targets
+    from the middle 2/3, and the last nodes touch no edge."""
+    import random
+
+    rng = random.Random(seed)
+    nodes = [f"v{i:02d}" for i in range(n)]
+    edges = sorted({
+        (rng.choice(nodes[:20]), rng.choice(nodes[5:25])) for _ in range(70)
+    } - {(v, v) for v in nodes})
+    srcs, dsts = {s for s, _ in edges}, {d for _, d in edges}
+    assert set(nodes) - srcs - dsts, "no isolated node"
+    assert dsts - srcs, "no sink"
+    assert srcs - dsts, "no node without in-edges"
+    return nodes, edges
+
+
+@pytest.mark.parametrize("checkpoint_every", [0, 2])
+@pytest.mark.parametrize("iters", [1, 3, 12])
+def test_pagerank_matches_mirror_on_random_graph(spark, iters, checkpoint_every):
+    from hyperloglog_pyspark_spark.operators.graph import pagerank_scaled
+
+    nodes_l, edges_l = _pr_random_graph()
+    nodes = spark.createDataFrame([(v,) for v in nodes_l], "node: string")
+    edges = spark.createDataFrame(edges_l, "src: string, dst: string")
+    got = pagerank_scaled(
+        nodes, edges, n_nodes=len(nodes_l), iters=iters,
+        checkpoint_every=checkpoint_every,
+    ).collect()
+    assert len(got) == len(nodes_l)
+    assert {r.node: r.rank for r in got} == _pr_mirror(
+        nodes_l, edges_l, iters=iters, n=len(nodes_l)
+    )
+
+
+def _final_exchanges(df) -> int:
+    """Exchange nodes of ``df``'s executed (final adaptive) plan, reused
+    exchanges not counted."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    names = (line.lstrip(" :+-") for line in plan.toString().splitlines())
+    return sum(n.startswith(("Exchange ", "BroadcastExchange ")) for n in names)
+
+
+def test_pagerank_builds_without_jobs_and_hits_plan_memo(spark, sf_dir):
+    """graph_pagerank_nations is a pure builder: building it runs no job,
+    so the plan memo keeps it across a switch to another query; and its
+    rounds add no exchange, so the executed plan has as many exchanges at
+    6 rounds as at 3."""
+    from hyperloglog_pyspark_spark import registry
+    from hyperloglog_pyspark_spark.operators.graph import pagerank_scaled
+
+    assert registry.EAGER_CACHES
+    name = "graph_pagerank_nations"
+    sc = spark.sparkContext
+    registry.release_caches()
+    build = registry.REGISTRY[name].fn.__wrapped__
+    build(spark, sf_dir)  # the first load of each table infers its schema in a job
+    group = "pagerank-build-shape"
+    sc.setJobGroup(group, "jobs run while building graph_pagerank_nations")
+    try:
+        build(spark, sf_dir)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    first = ALL[name](spark, sf_dir)
+    ALL["sample_stratified"](spark, sf_dir)
+    assert ALL[name](spark, sf_dir) is first
+
+    nodes_l, edges_l = _pr_random_graph()
+    nodes = spark.createDataFrame([(v,) for v in nodes_l], "node: string")
+    edges = spark.createDataFrame(edges_l, "src: string, dst: string")
+    n = len(nodes_l)
+    assert _final_exchanges(pagerank_scaled(nodes, edges, n, iters=3)) == (
+        _final_exchanges(pagerank_scaled(nodes, edges, n, iters=6))
+    )
+
+
 def test_no_leaked_caches_after_query_switch(spark, sf_dir):
     """Tracked persists are scoped to the invoking query: running a second
     query releases the first query's caches — only the documented
