@@ -371,7 +371,7 @@ def dedup_minhash_lsh(
     # persist it so the expensive shingle+md5 pass runs once, not once per
     # downstream branch (at warehouse scale this is the checkpointed
     # signature table every production LSH pipeline materializes). Tracked:
-    # released when a different query runs (registry.release_caches).
+    # a registry "cache" entry, evicted under the session's cache budget.
     docs = tracked_persist(_shingled(spark, sf_dir))
     cand = _lsh_candidates(_minhash_sigs(docs), bucket_cap=bucket_cap)
     da = docs.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
@@ -942,7 +942,7 @@ def _cc_materialize(df: DataFrame) -> DataFrame:
     sets a tmp checkpoint dir; durable storage on a real cluster) keeps
     recompute possible with no block-manager footprint; localCheckpoint
     is the fallback on sessions with no checkpoint dir, tracked so the
-    cache registry releases the blocks when the next query runs.
+    memo store frees the blocks once the fixpoint's "_memo" copy exists.
     """
     from hyperloglog_pyspark_spark.registry import checkpoint_tracked
 

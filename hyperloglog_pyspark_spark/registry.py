@@ -45,33 +45,75 @@ class Query:
 REGISTRY: dict[str, Query] = {}
 
 # ---------------------------------------------------------------------------
-# Tracked persists. Operators persist intermediates (e.g. the LSH signature
-# table) that must stay cached across re-invocations of the SAME query
-# (bench reps, warm reruns) but must NOT accumulate across a full
-# sweep — that is a session-long memory leak. Invoking a registered query
-# releases every cache owned by a DIFFERENT query, so at most one query's
-# caches are live at a time; release_caches() frees the rest (tests call it
-# after a sweep and assert sc.getPersistentRDDs is empty).
+# Session memo store. A warm re-invocation in a long-lived session should
+# not redo work whose result cannot have changed: rebuilding a query's
+# plan (0.7-1.2 s of py4j chatter and JVM re-analysis per warm bench
+# rep), re-reading table footers, re-filling persisted intermediates, or
+# re-training a model. One dict, six families:
+#   "plan"  registered-query DataFrames (register's wrapper);
+#   "load"  load_table's normalized scans;
+#   "cache" tracked persists and localCheckpoints, by owning query;
+#   "cc"    connected-components fixpoints (dedup);
+#   "km"    trained k-means centroid rows (similarity);
+#   "pq"    trained PQ codebooks (similarity).
+# The rules, each stated once:
+# - Key: (family, applicationId, session identity, *parts). The session
+#   identity is the py4j id of the JVM session handle (free to read), so
+#   a newSession() never gets its parent's entries. parts: plan (sf_dir,
+#   query), load (sf_dir, table, spread_scan), model families the
+#   semanticHash of each input's analyzed plan. The CacheManager is
+#   shared by all sessions, so cache keys are ("cache", owner, kind,
+#   ident): a persist's ident is its plan's semanticHash (an identical
+#   re-persist adds nothing), a checkpoint's its RDD ids, which the value
+#   holds in place of jplans (unpersist cannot reach those blocks).
+# - sameResult: a model-family hash hit must also sameResult() every
+#   stored analyzed input plan; a collision rebuilds and replaces.
+# - EAGER_CACHES gate: plan, model and cache families engage only at
+#   execution time, so plan-only consumers always build the current code
+#   (the audits see the unrolled loop interior), never run a checkpoint
+#   job, and first free every other query's cache entries (Spark would
+#   substitute their lazy CacheManager entries into matching subplans).
+#   load is always on.
+# - Honesty gate: a plan is stored only when its builder ran zero jobs in
+#   the caller's job group. Builders that do work at build time (sink
+#   writes, eager cache counts, training checkpoints) re-run it every
+#   invocation; nothing execution-shaped is ever skipped.
+# - Budget: at execution time cache entries outlive query switches. A
+#   plan-memo hit only marks its owner recently used (no py4j call); a
+#   miss first evicts least-recently-invoked owners until the cached
+#   bytes (getRDDStorageInfo, memory plus disk) are under CACHE_BUDGET of
+#   storage memory and at most CACHE_OWNERS owners remain (a live cache
+#   also pins driver heap that no byte count shows: without the cap a 1g
+#   driver ran out of heap in an sf0.01 sweep of all queries). Each build
+#   frees its query's earlier checkpoints.
+# - Models: model frames are eager localCheckpoints owned by "_memo",
+#   outside the budget; taking one frees the training rounds'
+#   checkpoints. Each model family keeps at most MEMO_CAP entries, FIFO.
+# - Freeing a persist or a model frame drops every plan entry:
+#   CacheManager substitution and model frames cross queries, so any
+#   memoized plan could read the freed blocks. A query's own checkpoints
+#   are reachable only from its own frames (a builder that checkpoints
+#   runs a job, so is never plan-memoized). A caller holding an evicted
+#   frame cannot collect it again, the usual eviction contract.
+# - Caveat: localCheckpoint blocks are non-reliable. On a real cluster an
+#   executor loss makes a later memo hit fail rather than recompute, so
+#   long-lived multi-tenant sessions should bound memo lifetime below
+#   their executor-churn horizon or use reliable checkpoints.
 # ---------------------------------------------------------------------------
 
+MEMO_CAP = 8
+CACHE_BUDGET = 0.25  # share of the session's storage memory
+CACHE_OWNERS = 8
+_MEMO: dict[tuple, tuple[tuple, DataFrame]] = {}  # key -> (jplans|rdd ids, df)
 _current_query: str | None = None
-# (owner query, dataframe handle, RDD-level cache ids). The ids are only
-# non-empty for localCheckpoint entries: df.unpersist() removes
-# cacheManager entries but NOT a checkpoint's RDD-level blocks (those are
-# invisible to the cache manager and otherwise linger until GC/
-# ContextCleaner) — release_caches unpersists them by id explicitly.
-_live_caches: list[tuple[str, DataFrame, tuple[int, ...]]] = []
 
-# Eager cache materialization: operators that persist an intermediate
-# consumed by both sides of a self-join (dedup_simhash's fingerprint
-# table) build the cache with an explicit count() before joining —
-# measured ~5x faster than letting the join's branches race to fill it.
-# Default OFF: building a registered query's plan must never run a job,
-# so plan-only consumers (layout tests, plan_audit, registry
-# enumeration) are safe without wrapping anything. Execution paths opt
-# in: __spark_entry__ (the driver contract), bench.py, and the pytest
-# session fixture all set this True before running queries; the persist
-# alone still prevents double-compute when a lazily-built plan executes.
+# Eager cache materialization: an intermediate read by both sides of a
+# self-join (dedup_simhash's fingerprint table) is count()ed before the
+# join, ~5x faster than letting the branches race to fill it. Default
+# OFF, so building a plan never runs a job and plan-only consumers
+# (layout tests, plan_audit, registry enumeration) need no wrapping.
+# Execution paths (__spark_entry__, bench.py, the pytest session fixture)
+# set it True; the persist alone still prevents double-compute.
 EAGER_CACHES = False
 
 
@@ -86,33 +128,56 @@ def lazy_caches():
         EAGER_CACHES = prev
 
 
+def memo_key(family: str, spark: SparkSession, *parts) -> tuple:
+    session = spark._jsparkSession._target_id
+    return (family, spark.sparkContext.applicationId, session, *parts)
+
+
+def memo_get(key: tuple, jplans: tuple = ()) -> DataFrame | None:
+    hit = _MEMO.get(key)
+    if hit is None or not all(a.sameResult(b) for a, b in zip(hit[0], jplans)):
+        return None
+    return hit[1]
+
+
+def memo_put(key: tuple, frame: DataFrame, jplans: tuple = ()) -> None:
+    if key in _MEMO:
+        _memo_evict(key)
+    _MEMO[key] = (jplans, frame)
+
+
+def memo_entries(family: str) -> dict[tuple, tuple[tuple, DataFrame]]:
+    """The store's entries of one family (key -> (jplans, frame))."""
+    return {k: v for k, v in _MEMO.items() if k[0] == family}
+
+
+def _memo_drop(pred: Callable[[tuple], bool]) -> None:
+    for k in [k for k in _MEMO if pred(k)]:
+        del _MEMO[k]
+
+
 def tracked_persist(df: DataFrame) -> DataFrame:
-    """persist() with session-scoped bookkeeping (see note above)."""
+    """persist() recorded as a "cache" entry of the running query."""
     df.persist()
-    _live_caches.append((_current_query or "<adhoc>", df, ()))
+    key = ("cache", _current_query or "<adhoc>", "persist", df.semanticHash())
+    if key in _MEMO and not _MEMO[key][1].sameSemantics(df):
+        key += (id(df),)  # a semanticHash collision: track both frames
+    _MEMO.setdefault(key, ((), df))
     return df
 
 
 def _checkpoint(df: DataFrame, owner: str) -> DataFrame:
-    """Eager localCheckpoint tracked under ``owner``.
-
-    The checkpoint's storage lives at the RDD level, which
-    ``DataFrame.unpersist`` cannot reach — so the persistent-RDD ids that
-    appear during the (eager, synchronous) checkpoint are recorded and
-    released by id (``_release_where``)."""
+    """Eager localCheckpoint, a "cache" entry of ``owner`` with its RDD ids."""
     jsc = df.sparkSession.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet().toArray())
     out = df.localCheckpoint(eager=True)
-    new_ids = tuple(
-        k for k in jsc.getPersistentRDDs().keySet().toArray() if k not in before
-    )
-    _live_caches.append((owner, out, new_ids))
+    ids = tuple(set(jsc.getPersistentRDDs().keySet().toArray()) - before)
+    _MEMO[("cache", owner, "checkpoint", ids)] = (ids, out)
     return out
 
 
 def checkpoint_tracked(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint owned by the running query (freed when the
-    next query runs, or by release_caches())."""
+    """Eager localCheckpoint owned by the running query (see the store)."""
     return _checkpoint(df, _current_query or "<adhoc>")
 
 
@@ -139,117 +204,57 @@ def checkpoint_rounds(df: DataFrame) -> DataFrame:
     return checkpoint_tracked(df)
 
 
-def _release_where(drop: Callable[[str, DataFrame], bool]) -> set[str]:
-    """Unpersist every tracked frame ``drop(owner, df)`` selects — its
+def _release(select: Callable[[tuple, DataFrame], bool]) -> None:
+    """Free the cache entries ``select(key, frame)`` picks — the frame's
     cacheManager entry and, for checkpoints, its RDD blocks by id — and
-    return the owners released."""
-    global _live_caches
-    kept: list[tuple[str, DataFrame, tuple[int, ...]]] = []
-    released: set[str] = set()
-    for owner, df, rdd_ids in _live_caches:
-        if not drop(owner, df):
-            kept.append((owner, df, rdd_ids))
-            continue
-        released.add(owner)
+    drop every plan entry if a persist or a model was among them."""
+    picked = [k for k, (_, f) in _MEMO.items() if k[0] == "cache" and select(k, f)]
+    for k in picked:
+        rdd_ids, df = _MEMO.pop(k)
         df.unpersist()
         if rdd_ids:
             jmap = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
             for rid in rdd_ids:
                 if jmap.containsKey(rid):
                     jmap.get(rid).unpersist()
-    _live_caches = kept
-    return released
+    if any(k[2] == "persist" or k[1] == "_memo" for k in picked):
+        _memo_drop(lambda k: k[0] == "plan")
 
 
-# ---------------------------------------------------------------------------
-# Session memo store. A warm re-invocation in a long-lived session should
-# not redo driver-side work whose result cannot have changed: rebuilding a
-# registered query's plan (measured 0.7-1.2 s of py4j chatter and JVM
-# re-analysis per warm bench rep), re-reading a table's footers, or
-# re-running a training loop whose output rides checkpoint-truncated
-# lineage (and so can never be found again by the CacheManager's
-# plan-canonical lookup). One dict holds all of it, in five families:
-#   "plan"  registered-query DataFrames (register's wrapper);
-#   "load"  load_table's normalized scans;
-#   "cc"    connected-components fixpoints (dedup);
-#   "km"    trained k-means centroid rows (similarity);
-#   "pq"    trained PQ codebooks (similarity).
-# The rules, each stated once:
-# - Key: (family, applicationId, session identity, *parts). The session
-#   identity is the py4j id of the JVM session handle (free to read), so
-#   a newSession() sharing the applicationId never gets its parent's
-#   entries. parts: plan (sf_dir, query), load (sf_dir, table,
-#   spread_scan), model families the semanticHash of each input's
-#   analyzed plan.
-# - sameResult: a model-family hash hit must also sameResult() every
-#   stored analyzed input plan; a collision rebuilds and replaces.
-# - EAGER_CACHES gate: plan and model families engage only at execution
-#   time, so plan-only consumers always see a fresh build of the current
-#   code (and the plan audits the unrolled loop interior), and storing
-#   never runs a checkpoint job. load is plan-only work and always on.
-# - Honesty gate: a plan is stored only when its builder ran zero jobs in
-#   the caller's job group. Builders that do work at build time (sink
-#   writes, eager cache counts, training checkpoints) re-run it every
-#   invocation; nothing execution-shaped is ever skipped.
-# - "_memo" ownership: model frames are eager localCheckpoints owned by
-#   "_memo", which survive the per-query release_caches(keep=<query>)
-#   (several queries share one fixpoint or model). A full
-#   release_caches() frees them and empties the store.
-# - Cap: each model family keeps at most MEMO_CAP entries, FIFO.
-#   Evicting or replacing a model entry unpersists its blocks and drops
-#   every plan entry, since a memoized plan may embed the freed
-#   checkpoint. A caller still holding an evicted frame cannot collect it
-#   again — the usual cache-eviction contract; registered queries never
-#   hold one across other queries' training calls.
-# - Plan entries also die with their query's caches: releasing a query's
-#   tracked persists drops its plan entries (a memoized plan over
-#   unpersisted frames would silently recompute them per scan site).
-# - Caveat: localCheckpoint blocks are non-reliable. On a real cluster an
-#   executor loss makes a later memo hit fail rather than recompute, so
-#   long-lived multi-tenant sessions should bound memo lifetime below
-#   their executor-churn horizon or use reliable checkpoints.
-# ---------------------------------------------------------------------------
-
-MEMO_CAP = 8
-_MEMO: dict[tuple, tuple[tuple, DataFrame]] = {}  # key -> (jplans, frame)
+def _touch(owner: str) -> None:
+    """Move ``owner``'s cache entries last: store order is LRU order."""
+    for k in [k for k in _MEMO if k[0] == "cache" and k[1] == owner]:
+        _MEMO[k] = _MEMO.pop(k)
 
 
-def memo_key(family: str, spark: SparkSession, *parts) -> tuple:
-    return (
-        family,
-        spark.sparkContext.applicationId,
-        spark._jsparkSession._target_id,
-        *parts,
-    )
+def _cached_bytes(jsc) -> int:
+    return sum(i.memSize() + i.diskSize() for i in jsc.sc().getRDDStorageInfo())
 
 
-def memo_get(key: tuple, jplans: tuple = ()) -> DataFrame | None:
-    hit = _MEMO.get(key)
-    if hit is None or not all(a.sameResult(b) for a, b in zip(hit[0], jplans)):
-        return None
-    return hit[1]
+def _storage_bytes(jsc) -> int:
+    total, it = 0, jsc.sc().getExecutorMemoryStatus().valuesIterator()
+    while it.hasNext():
+        total += it.next()._1()
+    return total
 
 
-def memo_put(key: tuple, frame: DataFrame, jplans: tuple = ()) -> None:
-    if key in _MEMO:
-        _memo_evict(key)
-    _MEMO[key] = (jplans, frame)
-
-
-def memo_entries(family: str) -> dict[tuple, tuple[tuple, DataFrame]]:
-    """The store's entries of one family (key -> (jplans, frame))."""
-    return {k: v for k, v in _MEMO.items() if k[0] == family}
-
-
-def _memo_drop(pred: Callable[[tuple], bool]) -> None:
-    for k in [k for k in _MEMO if pred(k)]:
-        del _MEMO[k]
+def _evict_over_budget(spark: SparkSession, owner: str) -> None:
+    """Evict least-recently-invoked cache owners other than ``owner`` and
+    "_memo" until the session's caches fit its budget."""
+    cached = (k[1] for k in _MEMO if k[0] == "cache")
+    lru = [o for o in dict.fromkeys(cached) if o not in (owner, "_memo")]
+    if not lru:
+        return
+    jsc = spark.sparkContext._jsc
+    budget = CACHE_BUDGET * _storage_bytes(jsc)
+    while lru and (len(lru) >= CACHE_OWNERS or _cached_bytes(jsc) > budget):
+        victim = lru.pop(0)
+        _release(lambda k, df: k[1] == victim)
 
 
 def _memo_evict(key: tuple) -> None:
     frame = _MEMO.pop(key)[1]
-    if _release_where(lambda owner, df: owner == "_memo" and df is frame):
-        _memo_drop(lambda k: k[0] == "plan")
+    _release(lambda k, df: k[1] == "_memo" and df is frame)
 
 
 def memoized_frame(
@@ -260,19 +265,20 @@ def memoized_frame(
         return build()
     try:
         jplans = tuple(df._jdf.queryExecution().analyzed() for df in inputs)
-        key = memo_key(
-            family,
-            inputs[0].sparkSession,
-            *(j.canonicalized().semanticHash() for j in jplans),
-        )
+        hashes = (j.canonicalized().semanticHash() for j in jplans)
+        key = memo_key(family, inputs[0].sparkSession, *hashes)
     except Exception:  # unexpected py4j surface change: skip memoization
         return build()
     hit = memo_get(key, jplans)
     if hit is not None:
         return hit
-    # checkpointing under "_memo" detaches the result from the training
-    # rounds' blocks, which the next query's release frees
+    before = set(_MEMO)
     out = _checkpoint(build(), "_memo")
+    # the "_memo" copy detaches the model from the training rounds'
+    # checkpoints, which nothing can reach any more
+    _release(
+        lambda k, df: k not in before and k[1] != "_memo" and k[2] == "checkpoint"
+    )
     fifo = [k for k in _MEMO if k[0] == family and k != key]
     while len(fifo) >= MEMO_CAP:
         _memo_evict(fifo.pop(0))
@@ -305,17 +311,10 @@ def _job_probe(spark: SparkSession) -> Callable[[], int | None]:
     return probe
 
 
-def release_caches(keep: str | None = None) -> None:
-    """Unpersist tracked caches, except those owned by query ``keep`` or
-    by "_memo"; a FULL release (keep is None) frees everything and
-    empties the memo store."""
-    released = _release_where(
-        lambda owner, df: keep is None or owner not in (keep, "_memo")
-    )
-    if keep is None:
-        _MEMO.clear()
-    elif released:
-        _memo_drop(lambda k: k[0] == "plan" and k[-1] in released)
+def release_caches() -> None:
+    """Free every tracked persist and checkpoint; empty the memo store."""
+    _release(lambda k, df: True)
+    _MEMO.clear()
 
 
 def _interpolate_doc(fn: QueryFn) -> str:
@@ -355,18 +354,19 @@ def register(
         fn.__doc__ = _interpolate_doc(fn)
 
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # Free caches left behind by other queries (keep our own so
-            # bench reps / warm reruns still hit the persisted plan).
             global _current_query
-            release_caches(keep=name)
-            if not EAGER_CACHES:
-                key, probe = None, lambda: None
-            else:
+            if EAGER_CACHES:
+                _touch(name)
                 key = memo_key("plan", spark, os.path.abspath(sf_dir), name)
                 hit = memo_get(key)
                 if hit is not None:
                     return hit
+                _evict_over_budget(spark, name)
                 probe = _job_probe(spark)
+            else:
+                _release(lambda k, df: k[1] not in (name, "_memo"))
+                key, probe = None, lambda: None
+            _release(lambda k, df: k[1] == name and k[2] == "checkpoint")
             prev, _current_query = _current_query, name
             try:
                 before = probe()

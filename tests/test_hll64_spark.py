@@ -62,11 +62,13 @@ def test_null_value_hashes_as_none_and_null_key_is_a_group(spark):
 @pytest.mark.parametrize("hash_name", ["sha1", "md5", "sha256"])
 def test_jvm_registers_equal_update_registers(spark, hash_name):
     from hyperloglog_pyspark_spark.functions.hll64_spark import _registers
+    from hyperloglog_pyspark_spark.registry import checkpoint_tracked
 
     hf = getattr(hashlib, hash_name)
     rows = _rows()
-    # checkpointed, so the 30 union branches rescan JVM rows, not a Python RDD
-    df = spark.createDataFrame(rows, "g long, v string").localCheckpoint()
+    # checkpointed, so the 30 union branches rescan JVM rows, not a Python
+    # RDD; tracked, so release_caches() frees its blocks
+    df = checkpoint_tracked(spark.createDataFrame(rows, "g long, v string"))
     ps = range(hll64.P_MIN, hll64.P_MAX + 1)
     regs = _registers(df, ["g"], "v", ps[0], hf).withColumn("p", F.lit(ps[0]))
     sketches = hll64_sketch(df, ["g"], "v", 2 ** ps[0], hf).withColumn("p", F.lit(ps[0]))

@@ -447,23 +447,118 @@ def test_pagerank_builds_without_jobs_and_hits_plan_memo(spark, sf_dir):
     )
 
 
-def test_no_leaked_caches_after_query_switch(spark, sf_dir):
-    """Tracked persists are scoped to the invoking query: running a second
-    query releases the first query's caches — only the documented
-    cross-query survivors ("_memo"-owned fixpoint results) may remain —
-    and a FULL release_caches() frees everything, memo blocks included:
-    no RDD accumulates across a long multi-query session."""
+def _is_cached(spark, df) -> bool:
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    return cm.lookupCachedData(df._jdf).isDefined()
+
+
+def _cache_frames(owner):
     from hyperloglog_pyspark_spark import registry
 
-    ALL["dedup_minhash_lsh"](spark, sf_dir).count()
-    assert len(registry._live_caches) > 0
-    ALL["dedup_ngram_jaccard"](spark, sf_dir).count()
-    owners = {o for o, _, _ in registry._live_caches}
-    assert owners - {"_memo"} == {"dedup_ngram_jaccard"}
+    return [df for k, (_, df) in registry.memo_entries("cache").items() if k[1] == owner]
+
+
+def test_no_leaked_caches_after_query_switch(spark, sf_dir, monkeypatch):
+    """Tracked persists are "cache" entries of the invoking query. Under
+    the budget they outlive a switch to another query; with no budget the
+    next query's plan-memo miss evicts every other owner's entries and
+    frees their blocks — only the documented cross-query survivors
+    ("_memo"-owned model checkpoints) remain — and a FULL
+    release_caches() frees everything, memo blocks included: no RDD
+    accumulates across a long multi-query session."""
+    from hyperloglog_pyspark_spark import registry
+
+    def owners():
+        return {k[1] for k in registry.memo_entries("cache")} - {"_memo"}
+
     registry.release_caches()
-    assert registry._live_caches == []
+    ALL["dedup_minhash_lsh"](spark, sf_dir).count()
+    ALL["dedup_ngram_jaccard"](spark, sf_dir).count()
+    assert owners() == {"dedup_minhash_lsh", "dedup_ngram_jaccard"}
+    evicted = _cache_frames("dedup_minhash_lsh") + _cache_frames("dedup_ngram_jaccard")
+    assert all(_is_cached(spark, df) for df in evicted)
+    monkeypatch.setattr(registry, "CACHE_BUDGET", 0.0)
+    ALL["text_tfidf_topk"](spark, sf_dir).count()
+    assert owners() == {"text_tfidf_topk"}
+    assert not any(_is_cached(spark, df) for df in evicted)
+    registry.release_caches()
+    assert not registry._MEMO
     jsc = spark.sparkContext._jsc
     assert jsc.getPersistentRDDs().size() == 0, "leaked persisted RDDs"
+
+
+def test_cache_budget_evicts_least_recently_used_owner(spark, sf_dir, monkeypatch):
+    """Over budget, a plan-memo miss evicts the least-recently-INVOKED
+    owner first (a memo hit counts as an invocation): with the budget set
+    just under the session's cached bytes, one eviction suffices, so the
+    other owner keeps its cached blocks. The evicted owner loses its
+    entries, its blocks and every plan entry, and rebuilds to the same
+    rows."""
+    from hyperloglog_pyspark_spark import registry
+    from tests.helpers import canon_rows
+
+    registry.release_caches()
+    lru, mru = "corpus_overlap_grams", "dedup_minhash_lsh"
+    rows = {}
+    for name in (mru, lru):
+        rows[name] = canon_rows(ALL[name](spark, sf_dir).toPandas())
+        ALL[name](spark, sf_dir)  # the job-free rebuild is memoized
+    assert any(k[-1] == mru for k in registry.memo_entries("plan"))
+    ALL[mru](spark, sf_dir)  # a memo hit: mru becomes most recently used
+    old, kept = _cache_frames(lru), _cache_frames(mru)
+    assert old and kept and all(_is_cached(spark, df) for df in old + kept)
+    jsc = spark.sparkContext._jsc
+    monkeypatch.setattr(
+        registry,
+        "CACHE_BUDGET",
+        (registry._cached_bytes(jsc) - 1) / registry._storage_bytes(jsc),
+    )
+    ALL["scan_project_filter"](spark, sf_dir)  # a miss: evicts lru only
+    assert not _cache_frames(lru)
+    assert not any(_is_cached(spark, df) for df in old)
+    assert _cache_frames(mru) == kept
+    assert all(_is_cached(spark, df) for df in kept)
+    assert not registry.memo_entries("plan")
+    for name in (lru, mru):
+        assert canon_rows(ALL[name](spark, sf_dir).toPandas()) == rows[name]
+    registry.release_caches()
+    assert jsc.getPersistentRDDs().size() == 0, "leaked persisted RDDs"
+
+
+def test_cache_owner_cap_evicts_least_recently_used(spark, sf_dir, monkeypatch):
+    """Besides its bytes, the budget caps live cache owners at
+    CACHE_OWNERS (a live cache also pins driver heap that no byte count
+    shows): a third owner's plan-memo miss evicts the least recently
+    used one."""
+    from hyperloglog_pyspark_spark import registry
+
+    registry.release_caches()
+    monkeypatch.setattr(registry, "CACHE_OWNERS", 2)
+    for name in ("dedup_minhash_lsh", "corpus_overlap_grams", "text_tfidf_topk"):
+        ALL[name](spark, sf_dir)
+    owners = {k[1] for k in registry.memo_entries("cache")}
+    assert owners == {"corpus_overlap_grams", "text_tfidf_topk"}
+    registry.release_caches()
+
+
+def test_rerun_frees_its_earlier_checkpoints(spark, sf_dir):
+    """A builder that checkpoints runs jobs, so it is never plan-memoized
+    and every invocation rebuilds. No rebuilt plan can reach the previous
+    run's localCheckpoint blocks, so each build frees them, and
+    re-persisting an identical plan adds no cache entry: from the second
+    run on, the persistent-RDD count and the store stay flat."""
+    from hyperloglog_pyspark_spark import registry
+    from tests.helpers import canon_rows
+
+    registry.release_caches()
+    jsc = spark.sparkContext._jsc
+    first = canon_rows(ALL["graph_bfs_levels"](spark, sf_dir).toPandas())
+    counts = []
+    for _ in range(3):
+        assert canon_rows(ALL["graph_bfs_levels"](spark, sf_dir).toPandas()) == first
+        counts.append((jsc.getPersistentRDDs().size(), len(registry._MEMO)))
+    assert counts == [counts[0]] * 3
+    registry.release_caches()
 
 
 def test_embedding_cosine_bucket_recall(spark, sf_dir, duck):
@@ -907,6 +1002,40 @@ def test_warm_rerun_is_deterministic(spark, sf_dir):
         assert first == second, f"{name}: warm rerun diverged"
 
 
+def test_warm_rerun_is_deterministic_across_query_switches(spark, sf_dir):
+    """The same check across query switches: a long-lived session serving
+    a query mix in rotation keeps every query's caches and plan entries
+    live, so a stale cache would surface as a second-rotation result that
+    differs from the first. The mix is perfbench's, whose two cache
+    holders must hit the plan memo (same handle) in the second
+    rotation."""
+    from hyperloglog_pyspark_spark import registry
+    from tests.helpers import canon_rows
+
+    mix = (
+        "graph_pagerank_nations", "timeseries_ewma_unbounded",
+        "corpus_overlap_grams", "sink_ddsketch_store",
+        "sink_partitioned_parquet", "udtf_bigrams", "sample_stratified",
+        "dedup_minhash_lsh",
+    )
+    registry.release_caches()
+    for name in mix:  # first reads of each table infer schemas in a job
+        ALL[name](spark, sf_dir)
+    rotations = []
+    for _ in range(2):
+        rot = {}
+        for name in mix:
+            df = ALL[name](spark, sf_dir)
+            rot[name] = (df, canon_rows(df.toPandas()))
+        rotations.append(rot)
+    first, second = rotations
+    for name in mix:
+        assert second[name][1] == first[name][1], f"{name}: diverged after switches"
+    for name in ("corpus_overlap_grams", "dedup_minhash_lsh"):
+        assert second[name][0] is first[name][0], f"{name}: missed the plan memo"
+    registry.release_caches()
+
+
 def test_png_crc_consistent_corruption_still_raises_valueerror():
     """Review regression: corruption whose chunk CRCs are self-consistent
     (a malformed IHDR length, a non-zlib IDAT stream) must still raise
@@ -1276,7 +1405,7 @@ def test_connected_components_memo_survives_query_release(spark):
 def test_connected_components_memo_evicts_replaced_and_overflow(spark, monkeypatch):
     """Memo hygiene: (a) FIFO overflow beyond the store's MEMO_CAP
     unpersists the evicted entry's "_memo"-owned checkpoint blocks and
-    drops its _live_caches row (a long exploratory session over many
+    drops its "cache" entry (a long exploratory session over many
     distinct edge plans must not accumulate blocks unboundedly);
     (b) replacing an existing key releases the old frame's blocks too."""
     from hyperloglog_pyspark_spark import registry
@@ -1285,7 +1414,7 @@ def test_connected_components_memo_evicts_replaced_and_overflow(spark, monkeypat
     registry.release_caches()  # start clean
 
     def n_memo_rows():
-        return sum(1 for owner, *_ in registry._live_caches if owner == "_memo")
+        return sum(1 for k in registry.memo_entries("cache") if k[1] == "_memo")
 
     monkeypatch.setattr(registry, "MEMO_CAP", 2)
     try:
@@ -1295,7 +1424,7 @@ def test_connected_components_memo_evicts_replaced_and_overflow(spark, monkeypat
             frames.append(connected_components(e))
             frames[-1].collect()
         assert len(registry.memo_entries("cc")) == 2  # FIFO evicted the first
-        assert n_memo_rows() == 2  # ...and released its _live_caches row
+        assert n_memo_rows() == 2  # ...and released its "cache" entry
         # the survivors still serve
         assert {tuple(r) for r in frames[1].collect()} == {(11, 11), (12, 11)}
         assert {tuple(r) for r in frames[2].collect()} == {(21, 21), (22, 21)}

@@ -119,3 +119,25 @@ def test_memos_disabled_in_plan_only_mode(spark):
         ALL["similarity_pq_trained_codebook"](spark, SF)
     assert not memo_entries("km") and not memo_entries("pq")
     registry.release_caches()
+
+
+def test_km_training_round_checkpoints_are_freed(spark):
+    """Once the "_memo" copy of the trained centroid row exists, nothing
+    can reach the training rounds' checkpoints, so training frees them:
+    the only locally checkpointed RDD left is the model's, and a memo-hit
+    re-invocation adds none."""
+    registry.release_caches()
+    jsc = spark.sparkContext._jsc
+
+    def checkpointed():
+        rdds = jsc.getPersistentRDDs()
+        return {k for k in rdds.keySet().toArray() if rdds.get(k).rdd().isCheckpointed()}
+
+    got = _rows(ALL["embedding_kmeans_lloyd"](spark, SF))
+    model = checkpointed()
+    assert len(model) == 1
+    memo_owned = [v[0] for k, v in memo_entries("cache").items() if k[1] == "_memo"]
+    assert memo_owned == [tuple(model)]
+    assert _rows(ALL["embedding_kmeans_lloyd"](spark, SF)) == got
+    assert checkpointed() == model
+    registry.release_caches()

@@ -3,8 +3,9 @@ memo store): a PURE builder's second invocation reuses the rep-1
 DataFrame handle (plan construction only — every job still executes per
 invocation); a builder that runs jobs at build time (eager cache counts,
 sink writes, training checkpoints) is never memoized, also when it runs
-under the caller's job group; releasing a query's caches drops its plan
-entries; plan-only mode (lazy_caches) never memoizes."""
+under the caller's job group; a query's plan entry outlives a switch to
+another query, and evicting its caches under the budget drops it;
+plan-only mode (lazy_caches) never memoizes."""
 
 from __future__ import annotations
 
@@ -97,17 +98,23 @@ def test_job_probe_matches_status_tracker(spark):
         sc._jsc.clearJobGroup()
 
 
-def test_release_drops_owned_plan_entries(spark):
+def test_release_drops_owned_plan_entries(spark, monkeypatch):
     registry.release_caches()
     # text_tfidf_topk persists interior frames; its (job-free) second
-    # build memoizes. Another query's invocation releases its caches,
-    # which must drop the plan entry too (a memoized plan over
-    # unpersisted frames would silently recompute them per scan site).
+    # build memoizes. Under the cache budget its caches and plan entry
+    # outlive a switch to another query, so the next invocation hits.
     ALL["text_tfidf_topk"](spark, SF).collect()
     a = ALL["text_tfidf_topk"](spark, SF)
     assert _planned("text_tfidf_topk")
     ALL["text_stats"](spark, SF).collect()
+    assert ALL["text_tfidf_topk"](spark, SF) is a
+    # With no budget, the next plan-memo miss evicts it, which must drop
+    # its plan entry too (a memoized plan over unpersisted frames would
+    # silently recompute them per scan site).
+    monkeypatch.setattr(registry, "CACHE_BUDGET", 0.0)
+    ALL["scan_project_filter"](spark, SF)
     assert not _planned("text_tfidf_topk")
+    assert not [k for k in memo_entries("cache") if k[1] == "text_tfidf_topk"]
     assert ALL["text_tfidf_topk"](spark, SF) is not a
     registry.release_caches()
 
