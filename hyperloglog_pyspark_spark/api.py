@@ -95,13 +95,6 @@ class HyperLogLog:
         )
 
     @property
-    def _raw_estimate(self) -> float:
-        import numpy as np
-
-        harm = float(np.sum(np.exp2(-self.registers.astype(np.float64))))
-        return self.alpha * self.m * self.m / harm
-
-    @property
     def cardinality(self) -> float:
         return hll64.estimate32(self.registers)
 

@@ -932,26 +932,6 @@ def _cc_small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def _cc_materialize(df: DataFrame) -> DataFrame:
-    """Materialize an iteration's edge set AND truncate its lineage.
-
-    Each large-star/small-star round references the previous edge set
-    ~10× (unions + self-grouping joins), so without truncation the
-    logical plan grows ~10^rounds and Catalyst analysis itself OOMs — a
-    plan problem caching can't fix. Reliable checkpoint (configure()
-    sets a tmp checkpoint dir; durable storage on a real cluster) keeps
-    recompute possible with no block-manager footprint; localCheckpoint
-    is the fallback on sessions with no checkpoint dir, tracked so the
-    memo store frees the blocks once the fixpoint's "_memo" copy exists.
-    """
-    from hyperloglog_pyspark_spark.registry import checkpoint_tracked
-
-    sc = df.sparkSession.sparkContext
-    if sc._jsc.sc().getCheckpointDir().isDefined():
-        return df.checkpoint(eager=True)
-    return checkpoint_tracked(df)
-
-
 def _cc_stats(e: DataFrame) -> tuple:
     """Order-independent digest of an edge set (one cheap action over the
     just-checkpointed data): equality ⇒ the iteration reached fixpoint."""
@@ -966,9 +946,9 @@ def connected_components(edges: DataFrame) -> DataFrame:
     """Connected components of an undirected graph given as (u, v) pairs;
     returns (node, component) with component = min node id reachable.
 
-    Scale posture: per round, one checkpoint job over the (small, LSH-
-    sized) edge set plus one digest action on the checkpointed result;
-    lineage depth stays O(1) so round N costs the same as round 1.
+    Scale posture: per round, one localCheckpoint job over the (small,
+    LSH-sized) edge set plus one digest action on the checkpointed
+    result; lineage depth stays O(1) so round N costs the same as round 1.
     Rounds are O(log² n) in component size — not O(diameter) like plain
     label propagation — and the loop raises rather than returning
     silently-wrong labels if CC_MAX_ROUNDS is ever hit. Results memoize
@@ -978,7 +958,13 @@ def connected_components(edges: DataFrame) -> DataFrame:
 
 
 def _cc_fixpoint(edges: DataFrame) -> DataFrame:
-    e = _cc_materialize(
+    # Each round references the previous edge set ~10x (unions and
+    # self-grouping joins): without truncating lineage per round the plan
+    # grows ~10^rounds and Catalyst analysis itself runs out of memory.
+    # The round count needs execution, so truncate even in plan-only mode
+    # (checkpoint_tracked, not checkpoint_rounds); memoized_frame frees the
+    # rounds once the fixpoint's "_memo" copy exists.
+    e = registry_mod.checkpoint_tracked(
         edges.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
@@ -988,7 +974,7 @@ def _cc_fixpoint(edges: DataFrame) -> DataFrame:
     for _ in range(CC_MAX_ROUNDS):
         if converged:
             break
-        e = _cc_materialize(_cc_small_star(_cc_large_star(e)))
+        e = registry_mod.checkpoint_tracked(_cc_small_star(_cc_large_star(e)))
         cur = _cc_stats(e)
         converged = cur == prev
         prev = cur

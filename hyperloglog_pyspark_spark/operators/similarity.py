@@ -1837,32 +1837,6 @@ def similarity_ivf_pq_residual_recall(spark: SparkSession, sf_dir: str) -> DataF
     )
 
 
-def _ann_index_scratch_dir(sf_dir: str, tag: str = "") -> str:
-    """Content-keyed scratch path for the persisted ANN index: keyed by
-    the input data identity (embeddings file path+size+mtime) and the
-    engine code version (the executor package zip's content hash), so
-    repeated invocations in a sweep REUSE one build instead of leaking a
-    fresh mkdtemp each time, and any code or data change keys a fresh
-    path (a stale-layout index can never be served). Mirrors
-    session._package_zip's keying discipline."""
-    import hashlib
-    import os
-    import tempfile
-
-    from hyperloglog_pyspark_spark.session import _package_zip
-
-    h = hashlib.sha256()
-    h.update(os.path.realpath(sf_dir).encode() + b"\0")
-    emb = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(emb)
-    h.update(f"{st.st_size}:{st.st_mtime_ns}".encode() + b"\0")
-    h.update(os.path.basename(_package_zip()).encode())
-    h.update(tag.encode())
-    return os.path.join(
-        tempfile.gettempdir(), f"hllps_ann_index_{h.hexdigest()[:16]}"
-    )
-
-
 @register(
     "sink_ann_index_partitioned",
     category="sink",
@@ -1894,33 +1868,26 @@ def sink_ann_index_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     the raw corpus never could. The scratch location stands in for the
     warehouse path a deployment would use."""
     import os
-    import tempfile
+
+    from hyperloglog_pyspark_spark.operators.sketch import (
+        _build_store_atomically,
+        _store_dir,
+    )
 
     ev, _iassign, iqprobe, refc, model, codes = _residual_index_build(spark, sf_dir)
-    base = _ann_index_scratch_dir(sf_dir)
-    if not os.path.isdir(base):
-        # Build into a unique temp dir, then atomically rename onto the
-        # content-keyed path: reruns (bench REPS, test sweeps) reuse one
-        # dir instead of leaking a fresh mkdtemp per invocation (r10
-        # advice), while never rmtree-ing files a prior invocation's
-        # unconsumed DataFrame still reads (the r10 race). Concurrent
-        # builders race harmlessly: the loser's rename fails and it
-        # serves from the winner's identical artifacts.
-        tmp = tempfile.mkdtemp(prefix="hllps_ann_build_")
+    base = _store_dir(sf_dir, "embeddings", "ann_index")
+
+    def build_into(stage: str) -> None:
         # codes already ride WITH their cell (the partition key, threaded
         # through the encode pass — no corpus re-join); one index row per
         # (vector, subspace)
-        codes.write.partitionBy("cent_id").parquet(os.path.join(tmp, "codes"))
+        codes.write.partitionBy("cent_id").parquet(os.path.join(stage, "codes"))
         model.select(F.explode("cents").alias("c")).select(
             "c.m", "c.k", "c.cv"
-        ).write.parquet(os.path.join(tmp, "codebook"))
-        refc.write.parquet(os.path.join(tmp, "refs"))
-        try:
-            os.rename(tmp, base)
-        except OSError:
-            import shutil
+        ).write.parquet(os.path.join(stage, "codebook"))
+        refc.write.parquet(os.path.join(stage, "refs"))
 
-            shutil.rmtree(tmp, ignore_errors=True)
+    _build_store_atomically(base, build_into)
 
     # ---- serve from the persisted artifacts only ----
     codes_back = spark.read.parquet(os.path.join(base, "codes"))
@@ -2008,12 +1975,16 @@ def sink_ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     index freshness affordable at 100 TB — per-ingest cost ∝ the batch,
     the r9 dedup-admission posture)."""
     import os
-    import shutil
-    import tempfile
 
-    base_dir = _ann_index_scratch_dir(sf_dir, tag="append")
+    from hyperloglog_pyspark_spark.operators.sketch import (
+        _build_store_atomically,
+        _store_dir,
+    )
+
+    base_dir = _store_dir(sf_dir, "embeddings", "ann_index_append")
     codes_path = os.path.join(base_dir, "codes")
-    if not os.path.isdir(base_dir):
+
+    def build_into(stage: str) -> None:
         emb_d = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", as_double("embedding").alias("e")
         )
@@ -2047,22 +2018,21 @@ def sink_ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         codes0 = _pq_assign_codes(rsub, model).select("vec_id", "cent_id", "m", "k")
 
-        # epoch-0 build into a temp dir; atomic rename publishes only a
-        # COMPLETE build+append sequence (reruns must never re-append)
-        tmp = tempfile.mkdtemp(prefix="hllps_ann_append_build_")
-        tcodes = os.path.join(tmp, "codes")
+        # the promote publishes only a COMPLETE build+append sequence
+        # (reruns must never re-append)
+        tcodes = os.path.join(stage, "codes")
         codes0.write.partitionBy("cent_id").parquet(tcodes)
-        icent.write.parquet(os.path.join(tmp, "cents"))
-        refc.write.parquet(os.path.join(tmp, "refs"))
+        icent.write.parquet(os.path.join(stage, "cents"))
+        refc.write.parquet(os.path.join(stage, "refs"))
         model.select(F.explode("cents").alias("c")).select(
             "c.m", "c.k", "c.cv"
-        ).write.parquet(os.path.join(tmp, "codebook"))
+        ).write.parquet(os.path.join(stage, "codebook"))
 
         # ---- append epochs: encoder inputs come from READ-BACK side
         # tables only — the production ingest path needs no live state ----
-        cents_back = spark.read.parquet(os.path.join(tmp, "cents"))
-        refc_back = spark.read.parquet(os.path.join(tmp, "refs"))
-        model_back = _pq_model_row(spark.read.parquet(os.path.join(tmp, "codebook")))
+        cents_back = spark.read.parquet(os.path.join(stage, "cents"))
+        refc_back = spark.read.parquet(os.path.join(stage, "refs"))
+        model_back = _pq_model_row(spark.read.parquet(os.path.join(stage, "codebook")))
         for mod in (3, 7):
             b_e = emb_d.filter(F.col("vec_id") % 10 == mod)
             bassign = (
@@ -2092,10 +2062,8 @@ def sink_ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .partitionBy("cent_id")
                 .parquet(tcodes)
             )
-        try:
-            os.rename(tmp, base_dir)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
+
+    _build_store_atomically(base_dir, build_into)
     back = spark.read.parquet(codes_path)
     return back.select(
         F.col("vec_id").cast("long").alias("vec_id"),
@@ -2724,23 +2692,24 @@ def sink_matryoshka_prefix_sidecar(spark: SparkSession, sf_dir: str) -> DataFram
     atomic rename, so sweep reruns reuse one build and any code/data
     change keys a fresh path."""
     import os
-    import shutil
-    import tempfile
+
+    from hyperloglog_pyspark_spark.operators.sketch import (
+        _build_store_atomically,
+        _store_dir,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double("embedding").alias("e")
     )
-    base = _ann_index_scratch_dir(sf_dir, tag="mrl_sidecar")
-    if not os.path.isdir(base):
-        tmp = tempfile.mkdtemp(prefix="hllps_mrl_build_")
+    base = _store_dir(sf_dir, "embeddings", "ann_index_mrl_sidecar")
+
+    def build_into(stage: str) -> None:
         emb.select(
             "vec_id", F.slice("e", 1, MRL_PREFIX).alias("p")
-        ).write.parquet(os.path.join(tmp, "prefix"))
-        emb.write.parquet(os.path.join(tmp, "full"))
-        try:
-            os.rename(tmp, base)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
+        ).write.parquet(os.path.join(stage, "prefix"))
+        emb.write.parquet(os.path.join(stage, "full"))
+
+    _build_store_atomically(base, build_into)
 
     # ---- serve from the persisted split layout only ----
     pref = spark.read.parquet(os.path.join(base, "prefix"))
@@ -2993,6 +2962,7 @@ def sink_ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from hyperloglog_pyspark_spark.operators.sketch import (
         _build_store_atomically,
+        _store_dir,
     )
 
     # ensure the appended store exists and get its read-back frame
@@ -3000,7 +2970,7 @@ def sink_ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # REGISTRY wrapper would release this query's own caches)
     orig = sink_ann_index_append(spark, sf_dir)
 
-    base = _ann_index_scratch_dir(sf_dir, tag="compact")
+    base = _store_dir(sf_dir, "embeddings", "ann_index_compact")
     codes_path = os.path.join(base, "codes")
 
     def build_into(stage: str) -> None:

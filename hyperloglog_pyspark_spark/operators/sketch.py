@@ -1061,12 +1061,13 @@ def hll_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _sketch_store_dir(sf_dir: str, kind: str = "hll") -> str:
-    """Content-keyed scratch path for a persisted sketch store — same
-    keying discipline as similarity._ann_index_scratch_dir (input file
-    identity + engine code hash), so sweep reruns REUSE one build and
-    any code/data change keys a fresh path. ``kind`` separates sketch
-    families sharing the same input (hll vs dd) into distinct stores."""
+def _store_dir(sf_dir: str, table: str, kind: str) -> str:
+    """Content-keyed scratch path for a build-once store (sketch stores,
+    ANN indexes): keyed by the input table's identity (path, size,
+    mtime) and the engine code version (the executor package zip's
+    content hash), so reruns in a sweep REUSE one build and any code or
+    data change keys a fresh path. ``kind`` separates stores built from
+    the same table."""
     import hashlib
     import os
     import tempfile
@@ -1075,21 +1076,17 @@ def _sketch_store_dir(sf_dir: str, kind: str = "hll") -> str:
 
     h = hashlib.sha256()
     h.update(os.path.realpath(sf_dir).encode() + b"\0")
-    # events.parquet may be a single file (this testdata) or a directory
-    # of part files — os.stat covers both (a directory's mtime advances
-    # on any part add/remove, which is the invalidation we want)
-    ev = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(ev)
+    # the table may be a single file (this testdata) or a directory of
+    # part files — os.stat covers both (a directory's mtime advances on
+    # any part add/remove, which is the invalidation we want)
+    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
     h.update(f"{st.st_size}:{st.st_mtime_ns}".encode() + b"\0")
     h.update(os.path.basename(_package_zip()).encode())
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"hllps_{kind}_sketch_store_{h.hexdigest()[:16]}",
-    )
+    return os.path.join(tempfile.gettempdir(), f"hllps_{kind}_{h.hexdigest()[:16]}")
 
 
 def _build_store_atomically(base: str, build_into) -> None:
-    """Build-once discipline shared by the persisted sketch stores:
+    """Build-once discipline shared by the build-once stores:
     ``build_into(stage_dir)`` writes the full store into a PRIVATE
     staging dir, which is then promoted with ONE atomic os.rename — a
     concurrent session keyed to the same content can never read a
@@ -1193,7 +1190,7 @@ def sink_hll_sketch_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", day.alias("day"),
         F.col("user_id").cast("string").alias("uid"),
     )
-    base = _sketch_store_dir(sf_dir)
+    base = _store_dir(sf_dir, "events", "hll_sketch_store")
     store_path = os.path.join(base, "sketches")
 
     def build_into(stage: str) -> None:
@@ -1340,7 +1337,7 @@ def sink_ddsketch_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("c") >= F.col("lo")) & (F.col("c") < F.col("hi")),
     )
 
-    base = _sketch_store_dir(sf_dir, kind="dd")
+    base = _store_dir(sf_dir, "events", "dd_sketch_store")
     store_path = os.path.join(base, "sketches")
 
     def build_into(stage: str) -> None:

@@ -71,23 +71,24 @@ REGISTRY: dict[str, Query] = {}
 # - EAGER_CACHES gate: plan, model and cache families engage only at
 #   execution time, so plan-only consumers always build the current code
 #   (the audits see the unrolled loop interior), never run a checkpoint
-#   job, and first free every other query's cache entries (Spark would
+#   job, and first free every other query's entries (Spark would
 #   substitute their lazy CacheManager entries into matching subplans).
 #   load is always on.
 # - Honesty gate: a plan is stored only when its builder ran zero jobs in
 #   the caller's job group. Builders that do work at build time (sink
 #   writes, eager cache counts, training checkpoints) re-run it every
 #   invocation; nothing execution-shaped is ever skipped.
-# - Budget: at execution time cache entries outlive query switches. A
-#   plan-memo hit only marks its owner recently used (no py4j call); a
-#   miss first evicts least-recently-invoked owners until the cached
-#   bytes (getRDDStorageInfo, memory plus disk) are under CACHE_BUDGET of
-#   storage memory and at most CACHE_OWNERS owners remain (a live cache
-#   also pins driver heap that no byte count shows: without the cap a 1g
-#   driver ran out of heap in an sf0.01 sweep of all queries). Each build
-#   frees its query's earlier checkpoints.
+# - Owners: a query's plan and cache entries belong to it, and store
+#   order is LRU order. At execution time entries outlive query switches:
+#   a plan-memo hit only moves its owner's entries last (no py4j call); a
+#   miss first evicts least-recently-invoked owners until at most
+#   CACHE_OWNERS remain, the new one included. The cap bounds the plan
+#   family and the driver heap a live cache pins (no byte count shows
+#   it); Spark's block manager bounds the cached bytes themselves, as
+#   persists and localCheckpoints are MEMORY_AND_DISK. Each build frees
+#   its query's earlier checkpoints.
 # - Models: model frames are eager localCheckpoints owned by "_memo",
-#   outside the budget; taking one frees the training rounds'
+#   outside the owner cap; taking one frees the training rounds'
 #   checkpoints. Each model family keeps at most MEMO_CAP entries, FIFO.
 # - Freeing a persist or a model frame drops every plan entry:
 #   CacheManager substitution and model frames cross queries, so any
@@ -98,11 +99,10 @@ REGISTRY: dict[str, Query] = {}
 # - Caveat: localCheckpoint blocks are non-reliable. On a real cluster an
 #   executor loss makes a later memo hit fail rather than recompute, so
 #   long-lived multi-tenant sessions should bound memo lifetime below
-#   their executor-churn horizon or use reliable checkpoints.
+#   their executor-churn horizon.
 # ---------------------------------------------------------------------------
 
 MEMO_CAP = 8
-CACHE_BUDGET = 0.25  # share of the session's storage memory
 CACHE_OWNERS = 8
 _MEMO: dict[tuple, tuple[tuple, DataFrame]] = {}  # key -> (jplans|rdd ids, df)
 _current_query: str | None = None
@@ -167,11 +167,11 @@ def tracked_persist(df: DataFrame) -> DataFrame:
 
 
 def _checkpoint(df: DataFrame, owner: str) -> DataFrame:
-    """Eager localCheckpoint, a "cache" entry of ``owner`` with its RDD ids."""
-    jsc = df.sparkSession.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    """Eager localCheckpoint, a "cache" entry of ``owner`` with its RDD id.
+    The id is read off the checkpoint's LogicalRDD: the checkpoint job may
+    also materialize a persist, whose RDD is not the checkpoint's."""
     out = df.localCheckpoint(eager=True)
-    ids = tuple(set(jsc.getPersistentRDDs().keySet().toArray()) - before)
+    ids = (out._jdf.logicalPlan().rdd().id(),)
     _MEMO[("cache", owner, "checkpoint", ids)] = (ids, out)
     return out
 
@@ -204,52 +204,46 @@ def checkpoint_rounds(df: DataFrame) -> DataFrame:
     return checkpoint_tracked(df)
 
 
+def _owner(key: tuple) -> str | None:
+    """The query owning a plan or cache entry (None for other families)."""
+    if key[0] == "cache":
+        return key[1]
+    return key[-1] if key[0] == "plan" else None
+
+
 def _release(select: Callable[[tuple, DataFrame], bool]) -> None:
-    """Free the cache entries ``select(key, frame)`` picks — the frame's
-    cacheManager entry and, for checkpoints, its RDD blocks by id — and
-    drop every plan entry if a persist or a model was among them."""
-    picked = [k for k, (_, f) in _MEMO.items() if k[0] == "cache" and select(k, f)]
+    """Drop the plan and cache entries ``select(key, frame)`` picks. A
+    cache entry's frame leaves the cacheManager and, for checkpoints, its
+    RDD blocks are freed by id; every plan entry goes too if a persist or
+    a model was among them."""
+    picked = [k for k, (_, f) in _MEMO.items() if _owner(k) and select(k, f)]
     for k in picked:
         rdd_ids, df = _MEMO.pop(k)
+        if k[0] == "plan":
+            continue
         df.unpersist()
         if rdd_ids:
             jmap = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
             for rid in rdd_ids:
                 if jmap.containsKey(rid):
                     jmap.get(rid).unpersist()
-    if any(k[2] == "persist" or k[1] == "_memo" for k in picked):
+    if any(k[0] == "cache" and (k[2] == "persist" or k[1] == "_memo") for k in picked):
         _memo_drop(lambda k: k[0] == "plan")
 
 
 def _touch(owner: str) -> None:
-    """Move ``owner``'s cache entries last: store order is LRU order."""
-    for k in [k for k in _MEMO if k[0] == "cache" and k[1] == owner]:
+    """Move ``owner``'s entries last: store order is LRU order."""
+    for k in [k for k in _MEMO if _owner(k) == owner]:
         _MEMO[k] = _MEMO.pop(k)
 
 
-def _cached_bytes(jsc) -> int:
-    return sum(i.memSize() + i.diskSize() for i in jsc.sc().getRDDStorageInfo())
-
-
-def _storage_bytes(jsc) -> int:
-    total, it = 0, jsc.sc().getExecutorMemoryStatus().valuesIterator()
-    while it.hasNext():
-        total += it.next()._1()
-    return total
-
-
-def _evict_over_budget(spark: SparkSession, owner: str) -> None:
-    """Evict least-recently-invoked cache owners other than ``owner`` and
-    "_memo" until the session's caches fit its budget."""
-    cached = (k[1] for k in _MEMO if k[0] == "cache")
-    lru = [o for o in dict.fromkeys(cached) if o not in (owner, "_memo")]
-    if not lru:
-        return
-    jsc = spark.sparkContext._jsc
-    budget = CACHE_BUDGET * _storage_bytes(jsc)
-    while lru and (len(lru) >= CACHE_OWNERS or _cached_bytes(jsc) > budget):
-        victim = lru.pop(0)
-        _release(lambda k, df: k[1] == victim)
+def _evict_over_owner_cap(owner: str) -> None:
+    """Evict least-recently-invoked owners other than ``owner`` and
+    "_memo" until at most CACHE_OWNERS remain, ``owner`` included."""
+    owners = dict.fromkeys(map(_owner, _MEMO))
+    lru = [o for o in owners if o not in (None, owner, "_memo")]
+    for victim in lru[: max(0, len(lru) + 1 - CACHE_OWNERS)]:
+        _release(lambda k, df: _owner(k) == victim)
 
 
 def _memo_evict(key: tuple) -> None:
@@ -361,12 +355,12 @@ def register(
                 hit = memo_get(key)
                 if hit is not None:
                     return hit
-                _evict_over_budget(spark, name)
+                _evict_over_owner_cap(name)
                 probe = _job_probe(spark)
             else:
-                _release(lambda k, df: k[1] not in (name, "_memo"))
+                _release(lambda k, df: _owner(k) not in (name, "_memo"))
                 key, probe = None, lambda: None
-            _release(lambda k, df: k[1] == name and k[2] == "checkpoint")
+            _release(lambda k, df: k[:3] == ("cache", name, "checkpoint"))
             prev, _current_query = _current_query, name
             try:
                 before = probe()

@@ -113,14 +113,6 @@ def configure(spark: SparkSession) -> SparkSession:
     conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    # Reliable checkpoint dir for iterative operators (connected
-    # components cuts lineage every few rounds). Local tmp here; on a real
-    # cluster point this at durable shared storage (HDFS/S3).
-    sc = spark.sparkContext
-    if not sc._jsc.sc().getCheckpointDir().isDefined():
-        sc.setCheckpointDir(
-            os.path.join(tempfile.gettempdir(), f"hllps_ckpt_{os.getpid()}")
-        )
     return spark
 
 

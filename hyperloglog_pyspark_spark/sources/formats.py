@@ -18,6 +18,8 @@ inferSchema over 100 TB: it double-scans) then convert to columnar.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
 import shutil
 import tempfile
@@ -28,9 +30,19 @@ from hyperloglog_pyspark_spark.registry import register
 from hyperloglog_pyspark_spark.sources.catalog import load_table
 
 
+@functools.cache
+def _scratch_root() -> str:
+    root = tempfile.mkdtemp(prefix="hllps_scratch_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
 def _scratch(kind: str, sf_dir: str) -> str:
+    """A rewrite-every-time writer's path. It lives under this process's
+    scratch root, removed at exit, so two processes on one sf_dir never
+    write to the same path."""
     tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"hllps_io_{kind}_{tag}")
+    return os.path.join(_scratch_root(), f"{kind}_{tag}")
 
 
 CUSTOMER_DDL = "c_custkey long, c_name string, c_nationkey int, c_acctbal double, c_mktsegment string"
@@ -141,12 +153,12 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     across every future join on that key, the defining layout decision
     for fact-fact joins at 100 TB).
 
-    Uses a scratch database (LOCATION /tmp) because bucket metadata lives
-    in the catalog, not the parquet footers.
+    Uses a scratch database (LOCATION under the process's scratch root)
+    because bucket metadata lives in the catalog, not the parquet footers.
     """
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     db = f"hllps_bucketed_{tag}"
-    loc = os.path.join(tempfile.gettempdir(), f"hllps_warehouse_{tag}")
+    loc = _scratch("warehouse", sf_dir)
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")

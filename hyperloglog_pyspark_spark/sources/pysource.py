@@ -182,11 +182,11 @@ def sink_python_datasink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from hyperloglog_pyspark_spark.session import configure
     from hyperloglog_pyspark_spark.sources.catalog import load_table
+    from hyperloglog_pyspark_spark.sources.formats import _scratch
 
     configure(spark)  # package zip on executor PYTHONPATH (pickle-by-reference)
     spark.dataSource.register(TsvSink)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    path = f"/tmp/hllps_pysink_{sf_tag}"
+    path = _scratch("pysink", sf_dir)
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path, exist_ok=True)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")

@@ -27,6 +27,32 @@ def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
+def write_documents(dirpath: str, texts: list, source) -> None:
+    """Write ``texts`` as the documents table under ``dirpath``: doc_id
+    0..n-1, lang 'en', and ``source`` either one string for every
+    document or one string per document."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = len(texts)
+    sources = [source] * n if isinstance(source, str) else list(source)
+    os.makedirs(dirpath, exist_ok=True)
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(n), pa.int64()),
+                "text": pa.array(texts, pa.string()),
+                "lang": pa.array(["en"] * n),
+                "source": pa.array(sources, pa.string()),
+                "n_chars": pa.array([len(t or "") for t in texts], pa.int64()),
+            }
+        ),
+        os.path.join(dirpath, "documents.parquet"),
+    )
+
+
 def _canon_scalar(v):
     if v is None:
         return "\0NULL"

@@ -23,6 +23,7 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 
 from hyperloglog_pyspark_spark.operators.streaming_batch import EWMA_CHUNK
 from hyperloglog_pyspark_spark.registry import REGISTRY, queries
+from tests.helpers import write_documents
 
 queries()
 
@@ -133,24 +134,6 @@ def test_ewma_unbounded_matches_reference(rows, spark, tmp_path_factory):
     assert got == want
 
 
-def _write_documents_min(texts, dirpath):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array(range(len(texts)), pa.int64()),
-                "text": pa.array(texts),
-                "lang": pa.array(["en"] * len(texts)),
-                "source": pa.array(["x"] * len(texts)),
-                "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-            }
-        ),
-        os.path.join(dirpath, "documents.parquet"),
-    )
-
-
 def test_heaps_law_degenerate_fit_is_null_on_both_engines(
     spark, tmp_path_factory
 ):
@@ -167,7 +150,7 @@ def test_heaps_law_degenerate_fit_is_null_on_both_engines(
     from tests.helpers import canon_rows
 
     d = str(tmp_path_factory.mktemp("heapsdegen"))
-    _write_documents_min(["a b c", "a b", "c a", "b c a"], d)
+    write_documents(d, ["a b c", "a b", "c a", "b c a"], "x")
     q = REGISTRY["quality_heaps_law"]
     rows = q.fn(spark, d).collect()
     assert all(

@@ -27,6 +27,7 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 
 from hyperloglog_pyspark_spark.operators.trainprep import SRC_CAP_PCT
 from hyperloglog_pyspark_spark.registry import REGISTRY, queries
+from tests.helpers import write_documents
 
 queries()
 
@@ -36,22 +37,6 @@ _SETTINGS = settings(
     derandomize=True,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-
-
-def _write_documents(rows, dirpath):
-    os.makedirs(dirpath, exist_ok=True)
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-                "text": pa.array([r[1] for r in rows], pa.string()),
-                "lang": pa.array(["en"] * len(rows)),
-                "source": pa.array([r[2] for r in rows]),
-                "n_chars": pa.array([len(r[1] or "") for r in rows], pa.int64()),
-            }
-        ),
-        os.path.join(dirpath, "documents.parquet"),
-    )
 
 
 # --- mixture_source_share_cap ----------------------------------------------
@@ -95,11 +80,12 @@ def supplies(draw):
 @_SETTINGS
 def test_share_cap_matches_reference(supply, spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("capfuzz"))
-    rows = [
-        (i, " ".join(f"t{j}" for j in range(t)), s)
-        for i, (s, t) in enumerate(sorted(supply.items()))
-    ]
-    _write_documents(rows, d)
+    supply_rows = sorted(supply.items())
+    write_documents(
+        d,
+        [" ".join(f"t{j}" for j in range(t)) for _, t in supply_rows],
+        [s for s, _ in supply_rows],
+    )
     cap, grants, kept = _reference_share_cap(supply)
     out = {r["source"]: r for r in
            REGISTRY["mixture_source_share_cap"].fn(spark, d).collect()}
@@ -168,7 +154,7 @@ def mutated_corpora(draw):
 @_SETTINGS
 def test_normalized_exact_matches_reference(texts, spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("normfuzz"))
-    _write_documents([(i, t, "src") for i, t in enumerate(texts)], d)
+    write_documents(d, texts, "src")
     (rg, rd, rr), (ng, nd, nr) = _reference_normalized(texts)
     row = REGISTRY["dedup_normalized_exact"].fn(spark, d).collect()[0]
     assert row["n_docs"] == len(texts)
@@ -196,15 +182,7 @@ def test_r13_operators_agree_under_null_text(spark, tmp_path_factory):
 
     d = str(tmp_path_factory.mktemp("nulldocs"))
     texts = ["aa bb cc", None, "aa bb cc", "dd ee", None, ""]
-    _write_documents(
-        [
-            (i, t, s)
-            for i, (t, s) in enumerate(
-                zip(texts, ["s0", "s0", "s1", "s1", "s2", "s2"])
-            )
-        ],
-        d,
-    )
+    write_documents(d, texts, ["s0", "s0", "s1", "s1", "s2", "s2"])
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW documents AS SELECT * FROM "

@@ -22,13 +22,10 @@ mirroring the registered queries exactly. derandomize keeps CI stable.
 
 from __future__ import annotations
 
-import os
-
-import pyarrow as pa
-import pyarrow.parquet as pq
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from hyperloglog_pyspark_spark import registry
+from tests.helpers import write_documents
 
 # vocabulary deliberately overlaps the BM25 query terms so the
 # restriction is non-trivial, plus filler words it must drop
@@ -49,22 +46,6 @@ def corpora(draw):
     ]
 
 
-def _write_documents(texts, dirpath):
-    os.makedirs(dirpath, exist_ok=True)
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array(range(len(texts)), pa.int64()),
-                "text": pa.array(texts),
-                "lang": pa.array(["en"] * len(texts)),
-                "source": pa.array(["fuzz"] * len(texts)),
-                "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-            }
-        ),
-        os.path.join(dirpath, "documents.parquet"),
-    )
-
-
 @given(texts=corpora())
 @settings(
     max_examples=10,
@@ -80,7 +61,7 @@ def test_shared_tf_pass_matches_naive_tokenization(texts, spark, tmp_path_factor
     )
 
     sf_dir = str(tmp_path_factory.mktemp("tf_fuzz"))
-    _write_documents(texts, sf_dir)
+    write_documents(sf_dir, texts, "fuzz")
     try:
         tf = {
             (r["doc_id"], r["token"]): r["tf"]

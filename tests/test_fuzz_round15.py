@@ -34,23 +34,9 @@ import pyarrow.parquet as pq
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from hyperloglog_pyspark_spark.registry import REGISTRY, queries
+from tests.helpers import write_documents
 
 _WORDS = [f"w{i}" for i in range(6)]
-
-
-def _write_documents(d: str, texts: list[str]) -> None:
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array(range(len(texts)), pa.int64()),
-                "text": pa.array(texts),
-                "lang": pa.array(["en"] * len(texts)),
-                "source": pa.array(["fz"] * len(texts)),
-                "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-            }
-        ),
-        os.path.join(d, "documents.parquet"),
-    )
 
 
 def _write_events(d: str, rows: list[tuple]) -> None:
@@ -123,7 +109,7 @@ def test_weighted_prefix_filter_matches_naive_truth(texts, spark):
     queries()
     d = tempfile.mkdtemp(prefix="fz_wpf_")
     try:
-        _write_documents(d, texts)
+        write_documents(d, texts, "fz")
         got = {
             (r["doc_a"], r["doc_b"]): (r["toks_a"], r["toks_b"], r["sum_min"])
             for r in REGISTRY["dedup_weighted_prefix_filter"].fn(

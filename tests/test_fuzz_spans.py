@@ -22,15 +22,13 @@ registered queries exactly. derandomize keeps CI stable.
 
 from __future__ import annotations
 
-import os
 from collections import defaultdict
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from hyperloglog_pyspark_spark.operators.curation import SPAN_W
 from hyperloglog_pyspark_spark.registry import REGISTRY, queries
+from tests.helpers import write_documents
 
 queries()
 
@@ -52,22 +50,6 @@ def corpora(draw):
         )
         for _ in range(n)
     ]
-
-
-def _write_documents(texts, dirpath):
-    os.makedirs(dirpath, exist_ok=True)
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array(range(len(texts)), pa.int64()),
-                "text": pa.array(texts),
-                "lang": pa.array(["en"] * len(texts)),
-                "source": pa.array(["fuzz"] * len(texts)),
-                "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-            }
-        ),
-        os.path.join(dirpath, "documents.parquet"),
-    )
 
 
 def _reference(texts):
@@ -107,7 +89,7 @@ def _reference(texts):
 )
 def test_span_family_matches_reference(texts, spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("spanfuzz"))
-    _write_documents(texts, d)
+    write_documents(d, texts, "fuzz")
     signal_want, trim_want = _reference(texts)
 
     got_signal = {
@@ -225,7 +207,7 @@ def _reference_xsub(texts, df_cap="derived"):
 )
 def test_exact_substring_matches_reference(texts, spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("xsubfuzz"))
-    _write_documents(texts, d)
+    write_documents(d, texts, "fuzz")
     want = _reference_xsub(texts)
     got = {
         (r["doc_a"], r["doc_b"]): (
@@ -274,7 +256,7 @@ def test_ngram_novelty_matches_reference(texts, spark, tmp_path_factory):
     it, and novelty fractions must track the distinct-shingle sets
     exactly (the operator shingles per-doc-DISTINCT)."""
     d = str(tmp_path_factory.mktemp("novfuzz"))
-    _write_documents(texts, d)
+    write_documents(d, texts, "fuzz")
     want = _reference_novelty(texts)
     got = {
         r["doc_id"]: (r["n_shingles"], r["n_novel"], r["novelty"])
@@ -301,7 +283,7 @@ def test_exact_substring_df_cap_binds(texts, spark, tmp_path_factory):
     from hyperloglog_pyspark_spark.operators.dedup import dedup_exact_substring
 
     d = str(tmp_path_factory.mktemp("xsubcapfuzz"))
-    _write_documents(texts, d)
+    write_documents(d, texts, "fuzz")
     want = _reference_xsub(texts, df_cap=2)
     got = {
         (r["doc_a"], r["doc_b"]): (
@@ -332,7 +314,7 @@ def test_exact_substring_derived_cap_drops_whale_keeps_rare(
         head = splice if d in (0, 1) else []
         texts.append(" ".join(head + filler + boiler))
     d = str(tmp_path_factory.mktemp("xsubcap"))
-    _write_documents(texts, d)
+    write_documents(d, texts, "fuzz")
     got = {
         (r["doc_a"], r["doc_b"]): (r["max_span_tokens"], r["n_spans"])
         for r in REGISTRY["dedup_exact_substring"].fn(spark, d).collect()

@@ -19,11 +19,8 @@ from __future__ import annotations
 
 import hashlib
 import math
-import os
 from collections import Counter, defaultdict
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from hyperloglog_pyspark_spark.operators.textops import (
@@ -32,6 +29,7 @@ from hyperloglog_pyspark_spark.operators.textops import (
     _ZIPF_Q,
 )
 from hyperloglog_pyspark_spark.registry import REGISTRY, queries
+from tests.helpers import write_documents
 
 queries()
 
@@ -47,22 +45,6 @@ def corpora(draw):
         )
         for _ in range(n)
     ]
-
-
-def _write_documents(texts, dirpath):
-    os.makedirs(dirpath, exist_ok=True)
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array(range(len(texts)), pa.int64()),
-                "text": pa.array(texts),
-                "lang": pa.array(["en"] * len(texts)),
-                "source": pa.array(["fuzz"] * len(texts)),
-                "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-            }
-        ),
-        os.path.join(dirpath, "documents.parquet"),
-    )
 
 
 def _q_ln(v: int, q: int) -> int:
@@ -150,7 +132,7 @@ def _reference_features(texts):
 )
 def test_zipf_audit_matches_reference(texts, spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("zipffuzz"))
-    _write_documents(texts, d)
+    write_documents(d, texts, "fuzz")
     want = _reference_zipf(texts)
     got = {}
     for r in REGISTRY["quality_zipf_audit"].fn(spark, d).collect():
@@ -196,7 +178,7 @@ def test_zipf_audit_survives_large_vocab(spark, tmp_path_factory):
     per = (len(toks) + 49) // 50
     texts = [" ".join(toks[i * per:(i + 1) * per]) for i in range(50)]
     texts = [t for t in texts if t]
-    _write_documents(texts, d)
+    write_documents(d, texts, "fuzz")
 
     want = _reference_zipf(texts)
     rows = REGISTRY["quality_zipf_audit"].fn(spark, d).collect()
@@ -235,7 +217,7 @@ def test_zipf_audit_survives_large_vocab(spark, tmp_path_factory):
 )
 def test_hashed_features_matches_reference(texts, spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("featfuzz"))
-    _write_documents(texts, d)
+    write_documents(d, texts, "fuzz")
     want = _reference_features(texts)
     got = {}
     for r in REGISTRY["text_hashed_ngram_features"].fn(spark, d).collect():

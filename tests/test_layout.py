@@ -853,12 +853,12 @@ def test_ann_index_append_layout_and_reuse(spark, sf_dir):
 
     from hyperloglog_pyspark_spark.operators.similarity import (
         PQ_M,
-        _ann_index_scratch_dir,
         sink_ann_index_append,
     )
+    from hyperloglog_pyspark_spark.operators.sketch import _store_dir
 
     rows1 = {tuple(r) for r in sink_ann_index_append(spark, sf_dir).collect()}
-    base = _ann_index_scratch_dir(sf_dir, tag="append")
+    base = _store_dir(sf_dir, "embeddings", "ann_index_append")
     parts = glob.glob(os.path.join(base, "codes", "*", "*.parquet"))
     assert parts, "no code files under the published index dir"
     assert all(
@@ -886,13 +886,13 @@ def test_matryoshka_sidecar_coarse_reads_prefix_only(spark, sf_dir):
     shortlist (its scan count == its point-lookup uses, 2: shortlist
     join + query-vector pick)."""
     from hyperloglog_pyspark_spark.operators.similarity import (
-        _ann_index_scratch_dir,
         sink_matryoshka_prefix_sidecar,
     )
+    from hyperloglog_pyspark_spark.operators.sketch import _store_dir
 
     df = sink_matryoshka_prefix_sidecar(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    base = _ann_index_scratch_dir(sf_dir, tag="mrl_sidecar")
+    base = _store_dir(sf_dir, "embeddings", "ann_index_mrl_sidecar")
     assert os.path.isdir(os.path.join(base, "prefix"))
     # the coarse self-join reads the sidecar twice (queries + corpus)
     n_prefix = plan.count(os.path.join(base, "prefix"))

@@ -460,10 +460,10 @@ def _cache_frames(owner):
 
 def test_no_leaked_caches_after_query_switch(spark, sf_dir, monkeypatch):
     """Tracked persists are "cache" entries of the invoking query. Under
-    the budget they outlive a switch to another query; with no budget the
-    next query's plan-memo miss evicts every other owner's entries and
-    frees their blocks — only the documented cross-query survivors
-    ("_memo"-owned model checkpoints) remain — and a FULL
+    the owner cap they outlive a switch to another query; with a cap of
+    one owner the next query's plan-memo miss evicts every other owner's
+    entries and frees their blocks — only the documented cross-query
+    survivors ("_memo"-owned model checkpoints) remain — and a FULL
     release_caches() frees everything, memo blocks included: no RDD
     accumulates across a long multi-query session."""
     from hyperloglog_pyspark_spark import registry
@@ -477,7 +477,7 @@ def test_no_leaked_caches_after_query_switch(spark, sf_dir, monkeypatch):
     assert owners() == {"dedup_minhash_lsh", "dedup_ngram_jaccard"}
     evicted = _cache_frames("dedup_minhash_lsh") + _cache_frames("dedup_ngram_jaccard")
     assert all(_is_cached(spark, df) for df in evicted)
-    monkeypatch.setattr(registry, "CACHE_BUDGET", 0.0)
+    monkeypatch.setattr(registry, "CACHE_OWNERS", 1)
     ALL["text_tfidf_topk"](spark, sf_dir).count()
     assert owners() == {"text_tfidf_topk"}
     assert not any(_is_cached(spark, df) for df in evicted)
@@ -487,17 +487,17 @@ def test_no_leaked_caches_after_query_switch(spark, sf_dir, monkeypatch):
     assert jsc.getPersistentRDDs().size() == 0, "leaked persisted RDDs"
 
 
-def test_cache_budget_evicts_least_recently_used_owner(spark, sf_dir, monkeypatch):
-    """Over budget, a plan-memo miss evicts the least-recently-INVOKED
-    owner first (a memo hit counts as an invocation): with the budget set
-    just under the session's cached bytes, one eviction suffices, so the
-    other owner keeps its cached blocks. The evicted owner loses its
-    entries, its blocks and every plan entry, and rebuilds to the same
-    rows."""
+def test_cache_owner_cap_evicts_least_recently_used(spark, sf_dir, monkeypatch):
+    """At CACHE_OWNERS live owners, a plan-memo miss evicts the
+    least-recently-INVOKED owner first (a memo hit counts as an
+    invocation): the evicted owner loses its cache entries, its blocks
+    and every plan entry, the other owner keeps its cached blocks, and
+    both rebuild to the same rows."""
     from hyperloglog_pyspark_spark import registry
     from tests.helpers import canon_rows
 
     registry.release_caches()
+    monkeypatch.setattr(registry, "CACHE_OWNERS", 2)
     lru, mru = "corpus_overlap_grams", "dedup_minhash_lsh"
     rows = {}
     for name in (mru, lru):
@@ -507,12 +507,6 @@ def test_cache_budget_evicts_least_recently_used_owner(spark, sf_dir, monkeypatc
     ALL[mru](spark, sf_dir)  # a memo hit: mru becomes most recently used
     old, kept = _cache_frames(lru), _cache_frames(mru)
     assert old and kept and all(_is_cached(spark, df) for df in old + kept)
-    jsc = spark.sparkContext._jsc
-    monkeypatch.setattr(
-        registry,
-        "CACHE_BUDGET",
-        (registry._cached_bytes(jsc) - 1) / registry._storage_bytes(jsc),
-    )
     ALL["scan_project_filter"](spark, sf_dir)  # a miss: evicts lru only
     assert not _cache_frames(lru)
     assert not any(_is_cached(spark, df) for df in old)
@@ -522,22 +516,28 @@ def test_cache_budget_evicts_least_recently_used_owner(spark, sf_dir, monkeypatc
     for name in (lru, mru):
         assert canon_rows(ALL[name](spark, sf_dir).toPandas()) == rows[name]
     registry.release_caches()
+    jsc = spark.sparkContext._jsc
     assert jsc.getPersistentRDDs().size() == 0, "leaked persisted RDDs"
 
 
-def test_cache_owner_cap_evicts_least_recently_used(spark, sf_dir, monkeypatch):
-    """Besides its bytes, the budget caps live cache owners at
-    CACHE_OWNERS (a live cache also pins driver heap that no byte count
-    shows): a third owner's plan-memo miss evicts the least recently
-    used one."""
+def test_pure_builders_alone_stay_under_the_owner_cap(spark, sf_dir, monkeypatch):
+    """A pure builder's plan entry belongs to it like a cache entry, so a
+    session of pure builders alone is bounded too: after every
+    invocation at most CACHE_OWNERS queries hold plan entries, the most
+    recently invoked ones."""
     from hyperloglog_pyspark_spark import registry
 
     registry.release_caches()
     monkeypatch.setattr(registry, "CACHE_OWNERS", 2)
-    for name in ("dedup_minhash_lsh", "corpus_overlap_grams", "text_tfidf_topk"):
+    names = ("scan_project_filter", "sample_stratified", "join_shuffle_agg")
+    planned = []
+    for name in names * 2:
         ALL[name](spark, sf_dir)
-    owners = {k[1] for k in registry.memo_entries("cache")}
-    assert owners == {"corpus_overlap_grams", "text_tfidf_topk"}
+        ALL[name](spark, sf_dir)  # the job-free rebuild is memoized
+        planned.append({k[-1] for k in registry.memo_entries("plan")})
+        assert name in planned[-1] and len(planned[-1]) <= 2
+        assert not registry.memo_entries("cache")
+    assert planned[-1] == set(names[1:])
     registry.release_caches()
 
 
@@ -1441,6 +1441,28 @@ def test_connected_components_memo_evicts_replaced_and_overflow(spark, monkeypat
     assert not spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
+def test_connected_components_leaves_only_its_memo_rdd(spark):
+    """The fixpoint's rounds are tracked localCheckpoints like every other
+    loop's: the session needs no reliable checkpoint directory, and once
+    the fixpoint's "_memo" copy exists the rounds are freed, so the only
+    persistent RDD left is the memo's."""
+    from hyperloglog_pyspark_spark import registry
+    from hyperloglog_pyspark_spark.operators.dedup import connected_components
+
+    registry.release_caches()
+    jsc = spark.sparkContext._jsc
+    e = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], "u long, v long"
+    )
+    got = {tuple(r) for r in connected_components(e).collect()}
+    assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (5, 1), (10, 10), (11, 10)}
+    assert not jsc.sc().getCheckpointDir().isDefined()
+    memo = [v[0] for k, v in registry.memo_entries("cache").items() if k[1] == "_memo"]
+    assert len(memo) == 1
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) == set(memo[0])
+    registry.release_caches()
+
+
 def test_interval_overlap_null_user_ids_match_oracle(spark, sf_dir, tmp_path):
     """n_affected_users must be COUNT(a.user_id) — the oracle skips
     NULL-keyed activity rows, so a NULL user_id active during an incident
@@ -1922,6 +1944,44 @@ def test_package_zip_keyed_by_content(tmp_path):
     real = _package_zip()
     with zipfile.ZipFile(real) as z:
         assert "hyperloglog_pyspark_spark/session.py" in z.namelist()
+
+
+_OTHER_PROCESS_SCRATCH = """
+import os, sys
+sys.path.insert(0, sys.argv[1])
+from hyperloglog_pyspark_spark.sources.formats import _scratch
+path = _scratch("csv", sys.argv[2])
+os.makedirs(path, exist_ok=True)
+marker = os.path.join(path, "other-process")
+open(marker, "w").close()
+print(marker, flush=True)
+sys.stdin.read()
+"""
+
+
+def test_rewrite_writers_keep_to_their_process_scratch(spark, sf_dir):
+    """A writer that rewrites its output on every invocation writes under
+    its own process's scratch root: a second process's output for the
+    same sf_dir survives this process's rewrite, and that process's root
+    is removed when it exits."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    other = subprocess.Popen(
+        [sys.executable, "-c", _OTHER_PROCESS_SCRATCH, repo, sf_dir],
+        stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True,
+    )
+    try:
+        marker = other.stdout.readline().strip()
+        assert marker, "the second process reported no scratch path"
+        ALL["source_csv_roundtrip"](spark, sf_dir).collect()
+        assert os.path.exists(marker), "the rewrite clobbered another process's output"
+    finally:
+        other.communicate("", timeout=120)
+    assert other.returncode == 0
+    assert not os.path.exists(os.path.dirname(os.path.dirname(marker)))
 
 
 def test_compaction_plan_bins_are_sound(spark, sf_dir):

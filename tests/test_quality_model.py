@@ -7,11 +7,8 @@ each also strict-compared against the DuckDB oracle."""
 from __future__ import annotations
 
 import hashlib
-import os
 
 import duckdb
-import pyarrow as pa
-import pyarrow.parquet as pq
 
 from hyperloglog_pyspark_spark.operators.curation import (
     QM_BIAS_MILLI,
@@ -21,23 +18,7 @@ from hyperloglog_pyspark_spark.operators.curation import (
 )
 from hyperloglog_pyspark_spark.operators.textops import FEAT_B
 from hyperloglog_pyspark_spark.registry import REGISTRY, queries
-from tests.helpers import compare
-
-
-def _write_documents(d: str, rows: list[tuple[str, str]]) -> None:
-    """rows: (text, source)"""
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array(range(len(rows)), pa.int64()),
-                "text": pa.array([r[0] for r in rows]),
-                "lang": pa.array(["en"] * len(rows)),
-                "source": pa.array([r[1] for r in rows]),
-                "n_chars": pa.array([len(r[0]) for r in rows], pa.int64()),
-            }
-        ),
-        os.path.join(d, "documents.parquet"),
-    )
+from tests.helpers import compare, write_documents
 
 
 def _duck(d: str) -> duckdb.DuckDBPyConnection:
@@ -92,7 +73,7 @@ def test_quality_model_score_pure_python_parity(spark, tmp_path_factory):
         ("the quick brown fox jumps over the lazy dog", "b"),
         ("lorem ipsum dolor sit amet", "b"),
     ]
-    _write_documents(d, texts)
+    write_documents(d, *zip(*texts))  # (text, source) rows
     q = REGISTRY["quality_model_score"]
     got = {
         (r["source"], r["threshold_milli"]): (
@@ -130,7 +111,7 @@ def test_quality_model_separates_engineered_sources(
     rows = [(good, "hiq") for _ in range(8)] + [
         (bad, "loq") for _ in range(8)
     ]
-    _write_documents(d, rows)
+    write_documents(d, *zip(*rows))
     q = REGISTRY["quality_model_score"]
     out = q.fn(spark, d).collect()
     rates = {
@@ -154,7 +135,7 @@ def test_curriculum_model_bins_orders_by_score(spark, tmp_path_factory):
     # 12 docs in one source with spread-out scores: distinct random-ish
     # single tokens give i.i.d.-uniform weights
     rows = [(f"tok{i} tok{i + 50} tok{i * 7}", "s0") for i in range(12)]
-    _write_documents(d, rows)
+    write_documents(d, *zip(*rows))
     q = REGISTRY["curriculum_model_bins"]
     out = sorted(q.fn(spark, d).collect(), key=lambda r: r["bin"])
     assert [r["bin"] for r in out] == list(range(1, QM_N_BINS + 1))
@@ -222,7 +203,7 @@ def test_signal_agreement_pure_python_spearman(spark, tmp_path_factory):
         "zeta eta theta iota", "alpha alpha alpha", "kappa",
         "lambda mu nu xi omicron", "pi rho sigma",
     ]
-    _write_documents(d, [(t, "s0") for t in texts])
+    write_documents(d, texts, "s0")
     q = REGISTRY["quality_signal_agreement"]
     row = q.fn(spark, d).collect()[0]
     xs = [_py_score(t) for t in texts]
@@ -246,7 +227,7 @@ def test_signal_agreement_degenerate_source_is_null(
     rows = [("same same same", "const") for _ in range(5)] + [
         (f"tok{i} tok{i * 3 + 1} tok{i * 7 + 2}", "mixed") for i in range(9)
     ]
-    _write_documents(d, rows)
+    write_documents(d, *zip(*rows))
     q = REGISTRY["quality_signal_agreement"]
     got = {r["source"]: r for r in q.fn(spark, d).collect()}
     assert got["const"]["spearman_rho"] is None

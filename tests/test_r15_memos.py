@@ -141,3 +141,22 @@ def test_km_training_round_checkpoints_are_freed(spark):
     assert _rows(ALL["embedding_kmeans_lloyd"](spark, SF)) == got
     assert checkpointed() == model
     registry.release_caches()
+
+
+def test_freeing_training_rounds_keeps_the_persist_their_job_filled(spark):
+    """A round's checkpoint job can be the first to read a persisted
+    input, which fills that persist's cache. Freeing the rounds once the
+    "_memo" copy exists must free only the rounds' own blocks: the
+    input's cache stays."""
+    registry.release_caches()
+    jsc = spark.sparkContext._jsc
+    base = registry.tracked_persist(spark.range(70).selectExpr("id % 7 AS k", "id"))
+    model = registry.memoized_frame(
+        "km", (base,), lambda: registry.checkpoint_tracked(base.groupBy("k").count())
+    )
+    assert sorted(tuple(r) for r in model.collect()) == [(k, 10) for k in range(7)]
+    rdds = jsc.getPersistentRDDs()
+    ids = rdds.keySet().toArray()
+    assert len([i for i in ids if not rdds.get(i).rdd().isCheckpointed()]) == 1
+    registry.release_caches()
+    assert jsc.getPersistentRDDs().size() == 0, "leaked persisted RDDs"

@@ -4,7 +4,7 @@ DataFrame handle (plan construction only — every job still executes per
 invocation); a builder that runs jobs at build time (eager cache counts,
 sink writes, training checkpoints) is never memoized, also when it runs
 under the caller's job group; a query's plan entry outlives a switch to
-another query, and evicting its caches under the budget drops it;
+another query, and evicting its owner under the owner cap drops it;
 plan-only mode (lazy_caches) never memoizes."""
 
 from __future__ import annotations
@@ -101,17 +101,17 @@ def test_job_probe_matches_status_tracker(spark):
 def test_release_drops_owned_plan_entries(spark, monkeypatch):
     registry.release_caches()
     # text_tfidf_topk persists interior frames; its (job-free) second
-    # build memoizes. Under the cache budget its caches and plan entry
+    # build memoizes. Under the owner cap its caches and plan entry
     # outlive a switch to another query, so the next invocation hits.
     ALL["text_tfidf_topk"](spark, SF).collect()
     a = ALL["text_tfidf_topk"](spark, SF)
     assert _planned("text_tfidf_topk")
     ALL["text_stats"](spark, SF).collect()
     assert ALL["text_tfidf_topk"](spark, SF) is a
-    # With no budget, the next plan-memo miss evicts it, which must drop
-    # its plan entry too (a memoized plan over unpersisted frames would
-    # silently recompute them per scan site).
-    monkeypatch.setattr(registry, "CACHE_BUDGET", 0.0)
+    # With a cap of one owner, the next plan-memo miss evicts it, which
+    # must drop its plan entry too (a memoized plan over unpersisted
+    # frames would silently recompute them per scan site).
+    monkeypatch.setattr(registry, "CACHE_OWNERS", 1)
     ALL["scan_project_filter"](spark, SF)
     assert not _planned("text_tfidf_topk")
     assert not [k for k in memo_entries("cache") if k[1] == "text_tfidf_topk"]

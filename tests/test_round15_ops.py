@@ -14,7 +14,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from hyperloglog_pyspark_spark.registry import REGISTRY, oracle_sql, queries
-from tests.helpers import compare
+from tests.helpers import compare, write_documents
 
 
 def _write_events(d: str, rows: list[tuple]) -> None:
@@ -34,21 +34,6 @@ def _write_events(d: str, rows: list[tuple]) -> None:
             }
         ),
         os.path.join(d, "events.parquet"),
-    )
-
-
-def _write_documents(d: str, texts: list[str]) -> None:
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array(range(len(texts)), pa.int64()),
-                "text": pa.array(texts),
-                "lang": pa.array(["en"] * len(texts)),
-                "source": pa.array(["fix"] * len(texts)),
-                "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-            }
-        ),
-        os.path.join(d, "documents.parquet"),
     )
 
 
@@ -76,9 +61,8 @@ def test_weighted_jaccard_bucket_boundary_pair_admitted(
     d = str(tmp_path_factory.mktemp("wjbound"))
     base = [f"w{i}" for i in range(160)]
     sup = [f"w{i}" for i in range(178)]
-    _write_documents(
-        d, [" ".join(base), " ".join(sup), " ".join(f"z{i}" for i in range(30))]
-    )
+    texts = [" ".join(base), " ".join(sup), " ".join(f"z{i}" for i in range(30))]
+    write_documents(d, texts, "fix")
     con = _duck(d, "documents")
     df = REGISTRY["dedup_weighted_jaccard"].fn(spark, d)
     compare(df, con, oracle_sql()["dedup_weighted_jaccard"], "wj_boundary")
@@ -104,9 +88,8 @@ def test_weighted_prefix_filter_finds_pair_banding_misses(
     d = str(tmp_path_factory.mktemp("wpf"))
     base = [f"w{i}" for i in range(160)]
     sup = [f"w{i}" for i in range(200)]
-    _write_documents(
-        d, [" ".join(base), " ".join(sup), " ".join(f"z{i}" for i in range(30))]
-    )
+    texts = [" ".join(base), " ".join(sup), " ".join(f"z{i}" for i in range(30))]
+    write_documents(d, texts, "fix")
     con = _duck(d, "documents")
     wpf = REGISTRY["dedup_weighted_prefix_filter"].fn(spark, d)
     compare(
