@@ -487,9 +487,9 @@ def test_no_leaked_caches_after_query_switch(spark, sf_dir, monkeypatch):
     assert jsc.getPersistentRDDs().size() == 0, "leaked persisted RDDs"
 
 
-def test_cache_owner_cap_evicts_least_recently_used(spark, sf_dir, monkeypatch):
-    """At CACHE_OWNERS live owners, a plan-memo miss evicts the
-    least-recently-INVOKED owner first (a memo hit counts as an
+def test_cache_budget_evicts_least_recently_used_owner(spark, sf_dir, monkeypatch):
+    """The cache budget is CACHE_OWNERS live owners. At the cap, a
+    plan-memo miss evicts the least-recently-INVOKED owner first (a memo hit counts as an
     invocation): the evicted owner loses its cache entries, its blocks
     and every plan entry, the other owner keeps its cached blocks, and
     both rebuild to the same rows."""
@@ -518,6 +518,21 @@ def test_cache_owner_cap_evicts_least_recently_used(spark, sf_dir, monkeypatch):
     registry.release_caches()
     jsc = spark.sparkContext._jsc
     assert jsc.getPersistentRDDs().size() == 0, "leaked persisted RDDs"
+
+
+def test_cache_owner_cap_evicts_least_recently_used(spark, sf_dir, monkeypatch):
+    """Cache owners are capped at CACHE_OWNERS (a live cache also pins
+    driver heap that no byte count shows): a third owner's plan-memo miss
+    evicts the least recently used one."""
+    from hyperloglog_pyspark_spark import registry
+
+    registry.release_caches()
+    monkeypatch.setattr(registry, "CACHE_OWNERS", 2)
+    for name in ("dedup_minhash_lsh", "corpus_overlap_grams", "text_tfidf_topk"):
+        ALL[name](spark, sf_dir)
+    owners = {k[1] for k in registry.memo_entries("cache")}
+    assert owners == {"corpus_overlap_grams", "text_tfidf_topk"}
+    registry.release_caches()
 
 
 def test_pure_builders_alone_stay_under_the_owner_cap(spark, sf_dir, monkeypatch):
