@@ -144,8 +144,6 @@ def estimate_distinct_elements(items, k: int, hash_func=None) -> float:
     which the reference's example functions hard-wire away; a port that
     built its sketches with ``hash_func=hashlib.md5`` passes it here.
     """
-    import hashlib
-
     p = hll64.p_from_k(k)
     regs = hll64.empty_registers(p)
     hll64.update_registers(

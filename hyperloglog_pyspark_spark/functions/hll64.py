@@ -104,16 +104,17 @@ def update_registers(
 ) -> np.ndarray:
     """Fold a batch of already-stringified values into the register array.
 
-    Vectorized where it matters: the per-element part is only sha1 + int
-    parse; the register max-merge is a single np.maximum.at scatter.
-    hash_bits=32 gives the reference's base (32-bit) sketch semantics:
-    an 8-hex-char sha1 prefix and ranks counted from bit 32.
-    hash_func mirrors the reference constructor's pluggable hash
-    (HyperLogLog.py:58, ``HyperLogLog(k, hash_func=hashlib.sha1)``): any
-    hashlib-style callable whose digest is ≥ hash_bits long — the hex
-    prefix of its hexdigest is consumed exactly as sha1's is. The prefix
-    is read as the digest's leading hash_bits/8 bytes, big-endian: the
-    same bits as parsing hash_bits/4 hex chars, without the hex round-trip.
+    Vectorized where it matters: the per-element part is only one digest
+    and an ``int.from_bytes`` of its leading bytes; the register max-merge
+    is a single np.maximum.at scatter. hash_bits=32 gives the reference's
+    base (32-bit) sketch semantics: a 4-byte (8-hex-char) sha1 prefix and
+    ranks counted from bit 32. hash_func mirrors the reference
+    constructor's pluggable hash (HyperLogLog.py:58,
+    ``HyperLogLog(k, hash_func=hashlib.sha1)``): any hashlib-style
+    callable whose digest is ≥ hash_bits/8 bytes long — its prefix is
+    consumed exactly as sha1's is. The prefix is the digest's leading
+    hash_bits/8 bytes, big-endian: the same bits the reference parses
+    from hash_bits/4 hex chars, without the hex round-trip.
     """
     m = 1 << p
     n_bytes = hash_bits // 8

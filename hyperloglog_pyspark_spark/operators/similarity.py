@@ -25,6 +25,7 @@ from hyperloglog_pyspark_spark.registry import (
     register,
     tracked_persist,
 )
+from hyperloglog_pyspark_spark.session import _build_store_atomically, _store_dir
 from hyperloglog_pyspark_spark.sources.catalog import load_table
 
 N_QUERIES = 8  # vec_id < 8 act as query vectors
@@ -1869,11 +1870,6 @@ def sink_ann_index_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     warehouse path a deployment would use."""
     import os
 
-    from hyperloglog_pyspark_spark.operators.sketch import (
-        _build_store_atomically,
-        _store_dir,
-    )
-
     ev, _iassign, iqprobe, refc, model, codes = _residual_index_build(spark, sf_dir)
     base = _store_dir(sf_dir, "embeddings", "ann_index")
 
@@ -1975,11 +1971,6 @@ def sink_ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     index freshness affordable at 100 TB — per-ingest cost ∝ the batch,
     the r9 dedup-admission posture)."""
     import os
-
-    from hyperloglog_pyspark_spark.operators.sketch import (
-        _build_store_atomically,
-        _store_dir,
-    )
 
     base_dir = _store_dir(sf_dir, "embeddings", "ann_index_append")
     codes_path = os.path.join(base_dir, "codes")
@@ -2688,15 +2679,10 @@ def sink_matryoshka_prefix_sidecar(spark: SparkSession, sf_dir: str) -> DataFram
     (16/8 dims) shrink it further on MRL-trained embeddings (measured
     unusable on THIS isotropic corpus — see the topk docstring).
 
-    Scratch is content-keyed (data stat + code hash) and built behind an
-    atomic rename, so sweep reruns reuse one build and any code/data
-    change keys a fresh path."""
+    The store lives under the process's scratch root, keyed by the
+    table's stat and published by one rename, so reruns in the process
+    reuse one build and a data change keys a fresh path."""
     import os
-
-    from hyperloglog_pyspark_spark.operators.sketch import (
-        _build_store_atomically,
-        _store_dir,
-    )
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double("embedding").alias("e")
@@ -2941,8 +2927,8 @@ def sink_ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     small-file tax, materialized inside an index). This operator
     rewrites the appended store with ONE file per coarse cell
     (repartition by cent_id before a partitioned write — each cell lands
-    in exactly one task) into a content-keyed compacted store with the
-    same staged-build/atomic-promote discipline as the sketch stores,
+    in exactly one task) into a compacted store with the same
+    stage-then-rename build as the sketch stores,
     then serves per-cell audit rows FROM THE COMPACTED FILES: code
     count, exact checksum aggregates (Σ code_k, Σ vec_id), a
     codes_match boolean (null-safe full-outer frame identity against
@@ -2959,11 +2945,6 @@ def sink_ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     nightly job that keeps probe latency flat as epochs accumulate.
     """
     import os
-
-    from hyperloglog_pyspark_spark.operators.sketch import (
-        _build_store_atomically,
-        _store_dir,
-    )
 
     # ensure the appended store exists and get its read-back frame
     # (module-level callable = the unwrapped operator; calling the

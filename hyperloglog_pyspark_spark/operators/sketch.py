@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from hyperloglog_pyspark_spark.registry import register, tracked_persist
+from hyperloglog_pyspark_spark.session import _build_store_atomically, _store_dir
 from hyperloglog_pyspark_spark.sources.catalog import literal_frame, load_table
 
 # 3-sigma acceptance per the reference's observed envelope (BASELINE.md):
@@ -1061,81 +1062,6 @@ def hll_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _store_dir(sf_dir: str, table: str, kind: str) -> str:
-    """Content-keyed scratch path for a build-once store (sketch stores,
-    ANN indexes): keyed by the input table's identity (path, size,
-    mtime) and the engine code version (the executor package zip's
-    content hash), so reruns in a sweep REUSE one build and any code or
-    data change keys a fresh path. ``kind`` separates stores built from
-    the same table."""
-    import hashlib
-    import os
-    import tempfile
-
-    from hyperloglog_pyspark_spark.session import _package_zip
-
-    h = hashlib.sha256()
-    h.update(os.path.realpath(sf_dir).encode() + b"\0")
-    # the table may be a single file (this testdata) or a directory of
-    # part files — os.stat covers both (a directory's mtime advances on
-    # any part add/remove, which is the invalidation we want)
-    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-    h.update(f"{st.st_size}:{st.st_mtime_ns}".encode() + b"\0")
-    h.update(os.path.basename(_package_zip()).encode())
-    return os.path.join(tempfile.gettempdir(), f"hllps_{kind}_{h.hexdigest()[:16]}")
-
-
-def _build_store_atomically(base: str, build_into) -> None:
-    """Build-once discipline shared by the build-once stores:
-    ``build_into(stage_dir)`` writes the full store into a PRIVATE
-    staging dir, which is then promoted with ONE atomic os.rename — a
-    concurrent session keyed to the same content can never read a
-    half-written store or interleave its appends with ours (the
-    pre-r13 check-rmtree-write-mark sequence could duplicate rows
-    under that race). No-op when ``<base>/_DONE`` already exists."""
-    import os
-    import shutil
-    import uuid
-
-    done = os.path.join(base, "_DONE")
-    if os.path.exists(done):
-        return
-    stage = f"{base}.stage-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    os.makedirs(stage)
-    build_into(stage)
-    with open(os.path.join(stage, "_DONE"), "w") as f:
-        f.write("ok")
-    try:
-        os.rename(stage, base)
-    except OSError:
-        if os.path.exists(done):
-            # a concurrent session promoted an identical build
-            # (content-keyed path) first — serve theirs
-            shutil.rmtree(stage, ignore_errors=True)
-        else:
-            # stale partial dir from a crashed pre-r13 build (it was
-            # never promoted, so no _DONE): clear it and retry once
-            shutil.rmtree(base, ignore_errors=True)
-            try:
-                os.rename(stage, base)
-            except OSError:
-                # Retry also failed. Only discard the stage if some
-                # concurrent session promoted a _DONE store in the
-                # meantime; otherwise nothing was promoted and the
-                # serve phase would die on an opaque path-not-found
-                # after silently discarding the build — fail loudly
-                # instead (r13 advice, sketch.py:1187).
-                if os.path.exists(done):
-                    shutil.rmtree(stage, ignore_errors=True)
-                else:
-                    raise RuntimeError(
-                        "sketch-store promote failed twice and no "
-                        f"completed store exists at {base!r}; the "
-                        f"staged build was left at {stage!r} for "
-                        "inspection"
-                    )
-
-
 @register(
     "sink_hll_sketch_store",
     category="sink",
@@ -1301,9 +1227,10 @@ def sink_ddsketch_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Where the HLL store's register-max merge is idempotent, DDSketch
     merge is ADDITIVE — a duplicated epoch would silently double-count,
-    which is exactly why the build is staged + atomically promoted here
-    (shared _build_store_atomically) and why the streaming twin's
-    per-batch-id epoch OVERWRITE commit is load-bearing
+    which is exactly why the build is staged and published by one rename
+    (session._build_store_atomically: a rerun serves the published store
+    and never re-appends; a failed build is never served) and why the
+    streaming twin's per-batch-id epoch OVERWRITE commit is load-bearing
     (streaming/pipelines.py::ddsketch_store_epoch_writer; the parity
     test re-delivers a micro-batch and the counts must NOT move).
 

@@ -5,6 +5,10 @@ Two entry paths:
 - ``configure(spark)`` applies the runtime-settable confs we rely on to a
   session we did NOT build (the driver hands us one in __spark_entry__).
 
+Every file the engine writes (the executor package zip, the
+rewrite-every-time writers' outputs, the build-once stores) lives under
+one per-process scratch root, ``_scratch_root()``, removed at exit.
+
 Scale notes: the static configs below are tuned for local[32]/128 GiB, but
 every knob is the one you'd turn on a 1000-executor cluster too — AQE for
 runtime re-planning (skew joins, partition coalescing), a shuffle-partition
@@ -13,8 +17,11 @@ count sized to cores, Arrow for any Python-side exchange.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import hashlib
 import os
+import shutil
 import tempfile
 import zipfile
 
@@ -23,6 +30,58 @@ from pyspark.sql import SparkSession
 
 def cpu_count() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+
+
+@functools.cache
+def _scratch_root() -> str:
+    """This process's root for every file the engine writes: the package
+    zip, the rewrite-every-time writers' outputs and the build-once
+    stores. ``mkdtemp`` makes it unique to the process, and it is removed
+    at exit, so no two processes share a path and nothing outlives its
+    process."""
+    root = tempfile.mkdtemp(prefix="hllps_scratch_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def _scratch(kind: str, sf_dir: str) -> str:
+    """A rewrite-every-time writer's path under the scratch root."""
+    tag = os.path.basename(sf_dir.rstrip("/"))
+    return os.path.join(_scratch_root(), f"{kind}_{tag}")
+
+
+def _store_dir(sf_dir: str, table: str, kind: str) -> str:
+    """A build-once store's path under the scratch root, keyed by the
+    input table's identity (path, size, mtime), so reruns in one process
+    reuse one build and a changed table keys a fresh path. ``kind``
+    separates stores built from the same table."""
+    h = hashlib.sha256()
+    h.update(os.path.realpath(sf_dir).encode() + b"\0")
+    # the table may be a single file or a directory of part files;
+    # os.stat covers both (a directory's mtime advances on any part
+    # add/remove, which is the invalidation we want)
+    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
+    h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
+    return os.path.join(_scratch_root(), f"{kind}_{h.hexdigest()[:16]}")
+
+
+def _build_store_atomically(base: str, build_into) -> None:
+    """Build a store once: ``build_into(stage)`` writes the whole store
+    into a private stage dir, which one ``os.rename`` publishes as
+    ``base``. A build that raises removes its stage, so a half-written
+    store is never served and the next call rebuilds. No-op when
+    ``base`` exists."""
+    if os.path.exists(base):
+        return
+    stage = tempfile.mkdtemp(
+        prefix=os.path.basename(base) + ".stage-", dir=os.path.dirname(base)
+    )
+    try:
+        build_into(stage)
+    except BaseException:
+        shutil.rmtree(stage, ignore_errors=True)
+        raise
+    os.rename(stage, base)
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -40,50 +99,21 @@ def _ship_package(spark: SparkSession) -> None:
     sc._hllps_package_shipped = True
 
 
-def _package_zip(pkg_dir: str | None = None) -> str:
-    """Build (or reuse) the executor-shipped package zip; returns its
-    path. Sources are collected deterministically and the zip is keyed
-    by CONTENT HASH — the previous pid-keyed path
-    (hllps_pkg_<pid>.zip + exists-check) collided on pid REUSE across
-    process generations on a long-lived machine, silently shipping a
-    STALE zip: executors then raised AttributeError for any
-    module-level symbol added since that zip was built (caught live in
-    the r10 final sweep — three perceptual queries failed on a
-    resolved-from-zip _perc_audio_synth). A content hash can never
-    alias different code. Factored spark-free so the keying contract is
-    unit-testable (tests/test_pipeline_ops.py)."""
-    if pkg_dir is None:
-        pkg_dir = os.path.dirname(os.path.abspath(__file__))
+@functools.cache
+def _package_zip() -> str:
+    """Zip this package's sources once per process, into the scratch
+    root; returns the zip's path. The root is unique to the process, so
+    a zip built by an earlier process (or older code) is never shipped."""
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
     repo_root = os.path.dirname(pkg_dir)
-    sources = []
-    hasher = hashlib.sha256()
-    for dirpath, dirs, files in os.walk(pkg_dir):
-        dirs.sort()
-        for fn in sorted(files):
-            if fn.endswith(".py"):
-                full = os.path.join(dirpath, fn)
-                rel = os.path.relpath(full, repo_root)
-                with open(full, "rb") as f:
-                    body = f.read()
-                # NUL-delimit the path and length-prefix the body so
-                # field boundaries can't alias across different trees
-                # (path bytes bleeding into body bytes hashing equal).
-                hasher.update(rel.encode() + b"\0")
-                hasher.update(str(len(body)).encode() + b"\0")
-                hasher.update(body)
-                sources.append((full, rel))
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"hllps_pkg_{hasher.hexdigest()[:16]}.zip"
-    )
-    if not os.path.exists(zpath):
-        # unique temp + atomic rename: concurrent sessions building the
-        # same content race harmlessly to an identical file
-        fd, tmp = tempfile.mkstemp(dir=tempfile.gettempdir(), suffix=".zip")
-        os.close(fd)
-        with zipfile.ZipFile(tmp, "w") as z:
-            for full, rel in sources:
-                z.write(full, rel)
-        os.replace(tmp, zpath)
+    zpath = os.path.join(_scratch_root(), "hllps_pkg.zip")
+    with zipfile.ZipFile(zpath, "w") as z:
+        for dirpath, dirs, files in os.walk(pkg_dir):
+            dirs.sort()
+            for fn in sorted(files):
+                if fn.endswith(".py"):
+                    full = os.path.join(dirpath, fn)
+                    z.write(full, os.path.relpath(full, repo_root))
     return zpath
 
 
@@ -116,14 +146,10 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def get_spark(app_name: str = "hyperloglog_pyspark_spark", shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = cpu_count()
-    if shuffle_partitions is None:
-        shuffle_partitions = max(8, cpus)
+def get_spark(app_name: str = "hyperloglog_pyspark_spark") -> SparkSession:
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .master(f"local[{cpu_count()}]")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

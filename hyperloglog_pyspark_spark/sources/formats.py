@@ -18,31 +18,14 @@ inferSchema over 100 TB: it double-scans) then convert to columnar.
 
 from __future__ import annotations
 
-import atexit
-import functools
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from hyperloglog_pyspark_spark.registry import register
+from hyperloglog_pyspark_spark.session import _scratch
 from hyperloglog_pyspark_spark.sources.catalog import load_table
-
-
-@functools.cache
-def _scratch_root() -> str:
-    root = tempfile.mkdtemp(prefix="hllps_scratch_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return root
-
-
-def _scratch(kind: str, sf_dir: str) -> str:
-    """A rewrite-every-time writer's path. It lives under this process's
-    scratch root, removed at exit, so two processes on one sf_dir never
-    write to the same path."""
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(_scratch_root(), f"{kind}_{tag}")
 
 
 CUSTOMER_DDL = "c_custkey long, c_name string, c_nationkey int, c_acctbal double, c_mktsegment string"

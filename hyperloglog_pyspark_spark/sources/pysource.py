@@ -26,6 +26,7 @@ from pyspark.sql.datasource import (
 )
 
 from hyperloglog_pyspark_spark.registry import register
+from hyperloglog_pyspark_spark.session import _scratch, configure
 
 N_ROWS = 50_000
 N_PARTS = 16
@@ -180,9 +181,7 @@ def sink_python_datasink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from hyperloglog_pyspark_spark.session import configure
     from hyperloglog_pyspark_spark.sources.catalog import load_table
-    from hyperloglog_pyspark_spark.sources.formats import _scratch
 
     configure(spark)  # package zip on executor PYTHONPATH (pickle-by-reference)
     spark.dataSource.register(TsvSink)

@@ -24,7 +24,7 @@ def spark():
     from hyperloglog_pyspark_spark import registry
 
     registry.EAGER_CACHES = True
-    spark = get_spark("tests", shuffle_partitions=8)
+    spark = get_spark("tests")
     yield spark
 
 

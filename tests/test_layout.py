@@ -845,17 +845,17 @@ def test_ann_index_append_layout_and_reuse(spark, sf_dir):
     file (epoch-0 build AND the two frozen-artifact appends) lands
     inside a ``cent_id=`` partition directory; every appended vector is
     fully coded (PQ_M subspace rows); and a rerun serves the PUBLISHED
-    build — identical rows, zero new scratch dirs (the atomic-rename
-    publish means a rerun can never double-append)."""
+    build — identical rows, zero new dirs under the process's scratch
+    root (the atomic-rename publish means a rerun can never
+    double-append)."""
     import glob
-    import tempfile
     from collections import Counter
 
     from hyperloglog_pyspark_spark.operators.similarity import (
         PQ_M,
         sink_ann_index_append,
     )
-    from hyperloglog_pyspark_spark.operators.sketch import _store_dir
+    from hyperloglog_pyspark_spark.session import _scratch_root, _store_dir
 
     rows1 = {tuple(r) for r in sink_ann_index_append(spark, sf_dir).collect()}
     base = _store_dir(sf_dir, "embeddings", "ann_index_append")
@@ -868,8 +868,10 @@ def test_ann_index_append_layout_and_reuse(spark, sf_dir):
     assert appended and set(appended.values()) == {PQ_M}, (
         "an appended epoch vector is missing subspace codes"
     )
-    pattern = os.path.join(tempfile.gettempdir(), "hllps_ann_*")
+    assert os.path.dirname(base) == _scratch_root()
+    pattern = os.path.join(_scratch_root(), "*")
     before = set(glob.glob(pattern))
+    assert base in before
     rows2 = {tuple(r) for r in sink_ann_index_append(spark, sf_dir).collect()}
     assert rows2 == rows1, "rerun diverged from the published index"
     assert set(glob.glob(pattern)) == before, "rerun leaked a new scratch dir"
@@ -885,19 +887,30 @@ def test_matryoshka_sidecar_coarse_reads_prefix_only(spark, sf_dir):
     ReadSchema, and the full table's scan joined only via the broadcast
     shortlist (its scan count == its point-lookup uses, 2: shortlist
     join + query-vector pick)."""
+    from plan_audit import walk_plan
+
     from hyperloglog_pyspark_spark.operators.similarity import (
         sink_matryoshka_prefix_sidecar,
     )
-    from hyperloglog_pyspark_spark.operators.sketch import _store_dir
+    from hyperloglog_pyspark_spark.session import _store_dir
 
     df = sink_matryoshka_prefix_sidecar(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    jplan = df._jdf.queryExecution().executedPlan()
+    plan = jplan.toString()
     base = _store_dir(sf_dir, "embeddings", "ann_index_mrl_sidecar")
     assert os.path.isdir(os.path.join(base, "prefix"))
+    # count scans by their root paths: the rendered plan truncates
+    # Location metadata at spark.sql.maxMetadataStringLength, which cuts
+    # a store path under the scratch root before its last component
+    scans = [
+        n.relation().location().rootPaths().head().toString()
+        for n in walk_plan(jplan) if n.nodeName().startswith("Scan parquet")
+    ]
     # the coarse self-join reads the sidecar twice (queries + corpus)
-    n_prefix = plan.count(os.path.join(base, "prefix"))
-    n_full = plan.count(os.path.join(base, "full"))
+    n_prefix = sum(p.endswith(os.path.join(base, "prefix")) for p in scans)
+    n_full = sum(p.endswith(os.path.join(base, "full")) for p in scans)
     assert n_prefix == 2, f"coarse pass should scan the sidecar twice, saw {n_prefix}"
     assert n_full == 2, f"full table is shortlist/query-pick only, saw {n_full} scans"
     # no scan of the ORIGINAL embeddings table: serve is read-back only
     assert "embeddings.parquet" not in plan, "serve phase escaped the persisted layout"
+    assert not [p for p in scans if p.endswith("embeddings.parquet")]

@@ -1107,7 +1107,7 @@ def test_hll_merge_compat_single_parity_still_estimates():
 
     from hyperloglog_pyspark_spark.session import get_spark
 
-    spark = get_spark("tests", shuffle_partitions=4)
+    spark = get_spark("tests")
     df = spark.createDataFrame([(2,), (4,), (6,)], "user_id long")
     agg = df.agg(
         F.hll_sketch_agg(
@@ -1931,72 +1931,90 @@ def test_canonical_bucket_cap_passthrough(spark, sf_dir):
     assert (capped.reclaimed_bytes == (capped.n_members - 1) * capped.kept_bytes).all()
 
 
-def test_package_zip_keyed_by_content(tmp_path):
-    """The executor-shipped package zip must be keyed by CONTENT, never
-    by process identity: the old pid-keyed path + exists-check shipped a
-    STALE zip on pid reuse, and executors raised AttributeError for any
-    symbol added since (three perceptual queries failed live in the r10
-    sweep). Contract: identical content → identical path (reuse);
-    changed content → different path (rebuild); the zip really contains
-    the current bytes."""
+def test_package_zip_keyed_by_content():
+    """The executor-shipped package zip is built once per process, under
+    the process's scratch root, from the current package sources: a zip
+    left by an earlier process or older code is never shipped (a stale
+    zip once made executors raise AttributeError for symbols added since
+    it was built). The zip holds exactly the current bytes of every
+    package source file, and building it writes nothing outside the
+    root."""
+    import glob
+    import os
+    import tempfile
     import zipfile
+    from pathlib import Path
 
-    from hyperloglog_pyspark_spark.session import _package_zip
+    from hyperloglog_pyspark_spark import session
 
-    pkg = tmp_path / "fakepkg"
-    pkg.mkdir()
-    (pkg / "mod.py").write_text("A = 1\n")
-    p1 = _package_zip(str(pkg))
-    assert _package_zip(str(pkg)) == p1  # deterministic reuse
-    with zipfile.ZipFile(p1) as z:
-        assert z.read("fakepkg/mod.py") == b"A = 1\n"
-    (pkg / "mod.py").write_text("A = 2\nB = 3\n")
-    p2 = _package_zip(str(pkg))
-    assert p2 != p1, "content change did not change the zip identity"
-    with zipfile.ZipFile(p2) as z:
-        assert z.read("fakepkg/mod.py") == b"A = 2\nB = 3\n"
-    # the real package's zip builds and carries this very module
-    real = _package_zip()
-    with zipfile.ZipFile(real) as z:
-        assert "hyperloglog_pyspark_spark/session.py" in z.namelist()
+    tmp = tempfile.gettempdir()
+    before = set(glob.glob(os.path.join(tmp, "hllps_*")))
+    zpath = session._package_zip()
+    root = session._scratch_root()
+    assert os.path.dirname(zpath) == root
+    assert set(glob.glob(os.path.join(tmp, "hllps_*"))) - before <= {root}
+    assert session._package_zip() == zpath  # one build per process
+    pkg = Path(session.__file__).resolve().parent
+    want = {str(f.relative_to(pkg.parent)): f.read_bytes() for f in pkg.rglob("*.py")}
+    with zipfile.ZipFile(zpath) as z:
+        got = {n: z.read(n) for n in z.namelist()}
+    assert "hyperloglog_pyspark_spark/session.py" in got
+    assert got == want, "the shipped zip differs from the package sources"
 
 
 _OTHER_PROCESS_SCRATCH = """
 import os, sys
 sys.path.insert(0, sys.argv[1])
-from hyperloglog_pyspark_spark.sources.formats import _scratch
+from hyperloglog_pyspark_spark.session import (
+    _build_store_atomically, _package_zip, _scratch, _store_dir,
+)
 path = _scratch("csv", sys.argv[2])
 os.makedirs(path, exist_ok=True)
 marker = os.path.join(path, "other-process")
 open(marker, "w").close()
-print(marker, flush=True)
+store = _store_dir(sys.argv[2], "customer", "other_store")
+_build_store_atomically(
+    store, lambda stage: open(os.path.join(stage, "payload"), "w").close()
+)
+print(marker, _package_zip(), store, flush=True)
 sys.stdin.read()
 """
 
 
 def test_rewrite_writers_keep_to_their_process_scratch(spark, sf_dir):
-    """A writer that rewrites its output on every invocation writes under
-    its own process's scratch root: a second process's output for the
-    same sf_dir survives this process's rewrite, and that process's root
-    is removed when it exits."""
+    """Every file the engine writes lives under its own process's scratch
+    root: a second process's rewrite-every-time output for the same
+    sf_dir survives this process's rewrite, and once that process exits
+    nothing it wrote remains in the temp dir: not its writer output, its
+    package zip, its build-once store or its root."""
+    import glob
     import os
     import subprocess
     import sys
+    import tempfile
 
+    tmp = tempfile.gettempdir()
+    before = set(glob.glob(os.path.join(tmp, "hllps_*")))
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     other = subprocess.Popen(
         [sys.executable, "-c", _OTHER_PROCESS_SCRATCH, repo, sf_dir],
         stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True,
     )
     try:
-        marker = other.stdout.readline().strip()
-        assert marker, "the second process reported no scratch path"
+        made = other.stdout.readline().split()
+        assert len(made) == 3, "the second process reported no scratch paths"
+        marker, zpath, store = made
+        assert os.path.isfile(zpath) and os.path.isdir(store)
         ALL["source_csv_roundtrip"](spark, sf_dir).collect()
         assert os.path.exists(marker), "the rewrite clobbered another process's output"
     finally:
         other.communicate("", timeout=120)
     assert other.returncode == 0
+    for path in made:
+        assert not os.path.exists(path), f"{path} outlived its process"
     assert not os.path.exists(os.path.dirname(os.path.dirname(marker)))
+    leaked = set(glob.glob(os.path.join(tmp, "hllps_*"))) - before
+    assert not leaked, f"the second process left {sorted(leaked)}"
 
 
 def test_compaction_plan_bins_are_sound(spark, sf_dir):

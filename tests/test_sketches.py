@@ -152,84 +152,52 @@ def test_overlap_matrix_fuzz_matches_set_arithmetic(spark, tmp_path_factory):
 
 
 def test_store_promote_failure_raises_not_silent(tmp_path, monkeypatch):
-    """_build_store_atomically's double-rename-failure path (r13 advice):
-    when both promote attempts fail and NO concurrent session landed a
-    _DONE store, the build must raise a descriptive error and leave the
-    staged files on disk for inspection — the pre-r14 code rmtree'd the
-    stage and fell through to an opaque path-not-found in the serve
-    phase, discarding the build. Also pins the happy path and the
-    concurrent-winner path."""
+    """_build_store_atomically publishes a store only once its build has
+    finished. The happy path publishes the payload; a rerun is a no-op
+    (it never rebuilds, so an append store never re-appends); a
+    build_into that raises propagates its error and leaves neither
+    ``base`` nor its stage behind, so the next call rebuilds; and a
+    publish that fails raises instead of leaving the serve phase to a
+    path-not-found."""
     import os
 
     import pytest
 
-    from hyperloglog_pyspark_spark.operators.sketch import (
-        _build_store_atomically,
-    )
+    from hyperloglog_pyspark_spark.session import _build_store_atomically
 
     def build_into(stage):
         with open(os.path.join(stage, "payload"), "w") as f:
             f.write("data")
 
-    # happy path: builds, promotes, _DONE lands
+    # happy path: builds and publishes exactly the payload
     base = str(tmp_path / "store_ok")
     _build_store_atomically(base, build_into)
-    assert os.path.exists(os.path.join(base, "_DONE"))
-    assert os.path.exists(os.path.join(base, "payload"))
+    assert os.listdir(base) == ["payload"]
     # idempotent: a second call is a no-op (build_into not invoked)
     _build_store_atomically(base, lambda stage: (_ for _ in ()).throw(
-        AssertionError("must not rebuild a promoted store")
+        AssertionError("must not rebuild a published store")
     ))
 
-    # double-failure path: rename always raises, no winner exists
+    # a build that fails midway is never served, and the next call rebuilds
     base2 = str(tmp_path / "store_fail")
-    real_rename = os.rename
+
+    def half_build(stage):
+        build_into(stage)
+        raise OSError("simulated failure midway through the build")
+
+    with pytest.raises(OSError, match="midway"):
+        _build_store_atomically(base2, half_build)
+    assert sorted(os.listdir(tmp_path)) == ["store_ok"], "a failed build left files"
+    _build_store_atomically(base2, build_into)
+    assert os.listdir(base2) == ["payload"]
+
+    # a failed publish raises; nothing is served at base
+    base3 = str(tmp_path / "store_norename")
 
     def deny_rename(src, dst):
-        raise OSError("simulated cross-device failure")
+        raise OSError("simulated rename failure")
 
     monkeypatch.setattr(os, "rename", deny_rename)
-    with pytest.raises(RuntimeError, match="promote failed twice"):
-        _build_store_atomically(base2, build_into)
-    # the staged build survives for inspection
-    stages = [
-        d for d in os.listdir(str(tmp_path))
-        if d.startswith("store_fail.stage-")
-    ]
-    assert len(stages) == 1
-    assert os.path.exists(
-        os.path.join(str(tmp_path), stages[0], "payload")
-    )
-
-    # concurrent-winner path: rename fails but a _DONE store appeared —
-    # serve theirs, discard ours silently
-    base3 = str(tmp_path / "store_race")
-    os.makedirs(base3)
-    with open(os.path.join(base3, "_DONE"), "w") as f:
-        f.write("ok")
-    # _DONE exists up-front → no-op before any build; force the race by
-    # removing the early-exit evidence AFTER build_into runs instead:
-    monkeypatch.setattr(os, "rename", real_rename)
-
-    calls = {"n": 0}
-
-    def racing_rename(src, dst):
-        calls["n"] += 1
-        raise OSError("simulated loser of the promote race")
-
-    base4 = str(tmp_path / "store_race2")
-
-    def build_then_winner_appears(stage):
-        build_into(stage)
-        os.makedirs(base4)
-        with open(os.path.join(base4, "_DONE"), "w") as f:
-            f.write("ok")
-
-    monkeypatch.setattr(os, "rename", racing_rename)
-    _build_store_atomically(base4, build_then_winner_appears)  # no raise
-    assert calls["n"] == 1  # first rename failed, winner detected, done
-    stages4 = [
-        d for d in os.listdir(str(tmp_path))
-        if d.startswith("store_race2.stage-")
-    ]
-    assert stages4 == []  # loser's stage cleaned up
+    with pytest.raises(OSError, match="rename failure"):
+        _build_store_atomically(base3, build_into)
+    assert not os.path.exists(base3)
