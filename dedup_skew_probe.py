@@ -17,15 +17,9 @@ from join skew:
   pairwise output alone is astronomically large. No execution strategy
   fixes that; the CANDIDATE GENERATION must change.
 
-The production mitigation measured here is the BUCKET CAP: buckets up to
-``CAP`` docs do exact pairwise (the LSH fast path, unchanged); larger
-buckets are boilerplate by definition and are handled with a linear
-star (every member pairs to the bucket minimum), which for identical
-documents loses nothing (duplicate clusters are equivalence classes —
-the star spans the same connected component the full clique would) and
-for near-identical ones trades a bounded amount of edge recall for
-bounded work. The capped form's xRs wall should sit near its xRu wall;
-the uncapped form's should degrade quadratically with the whale share.
+Every leg runs a registered form, the code the driver and the bench
+run. A leg whose xRs wall sits near its xRu wall is whale-immune; one
+that degrades quadratically with the whale share is not.
 
 Corpora (documents table, sf0.1 base = 5k docs):
 
@@ -36,14 +30,15 @@ Corpora (documents table, sf0.1 base = 5k docs):
   xRs — xRu, then ~HOT_PCT% of docs' text replaced by ONE shared
         boilerplate string (unsalted → identical across replicas).
 
-Measured per corpus: `dedup_minhash_lsh` (registered, uncapped),
-`capped_minhash_lsh` (inline, CAP=100), `dedup_incremental_probe`
-(registered — its batch probes the persisted band index, so the whale
-bucket hits the probe join too). Ratios as in skew_probe.py:
+Measured per corpus: `dedup_minhash_lsh`, `dedup_incremental_probe`
+(its batch probes the persisted band index, so the whale bucket hits
+the probe join too), the perceptual band self-join, and the
+exact-substring, weighted-Jaccard, weighted-prefix-filter and
+entity-resolution queries. Ratios as in skew_probe.py:
 skew_penalty = (sec_Rs/sec_1x) / (sec_Ru/sec_1x). Results recorded in
-SCALE.md §"Measured skewed decade".
+SCALE.md §"Measured skewed band".
 
-Run: ``python dedup_skew_probe.py [R]`` (default 10).
+Run: ``python dedup_skew_probe.py [R] [op-substring]`` (default R=10).
 """
 
 from __future__ import annotations
@@ -65,7 +60,6 @@ from hyperloglog_pyspark_spark.sources.catalog import load_table
 BASE_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 WORK_DIR = "/tmp/spark_graft_dedup_skew"
 HOT_PCT = 3  # pmod(xxhash64(doc_id), 100) < 3 → ~3% boilerplate docs
-CAP = 100    # bucket-cap: larger buckets switch to the linear star
 BOILER = (
     "this website uses cookies to ensure you get the best experience "
     "on our website by continuing to browse the site you are agreeing "
@@ -159,30 +153,6 @@ def build_customers(spark, out_dir: str, replicas: int, skewed: bool) -> None:
     )
 
 
-def capped_minhash_lsh(spark, sf_dir: str):
-    """The product knob: ``dedup_minhash_lsh(bucket_cap=CAP)`` — ≤CAP
-    buckets do exact pairwise (unchanged LSH fast path); >CAP buckets
-    emit a linear star to the bucket minimum. Same verification as the
-    registered query."""
-    from hyperloglog_pyspark_spark.operators.dedup import dedup_minhash_lsh
-
-    return dedup_minhash_lsh(spark, sf_dir, bucket_cap=CAP)
-
-
-def capped_incremental_probe(spark, sf_dir: str):
-    """The product knob: ``dedup_incremental_probe(bucket_cap=CAP)``
-    (operators/dedup.py ``_incremental_probe_frame``) — index buckets up
-    to CAP keep the registered pairwise probe; larger buckets
-    (boilerplate by definition) route their probing batch docs through
-    an exact-digest equi-join instead of the member-enumerating explode.
-    See the function's docstring for the verdict/count contract."""
-    from hyperloglog_pyspark_spark.operators.dedup import (
-        dedup_incremental_probe,
-    )
-
-    return dedup_incremental_probe(spark, sf_dir, bucket_cap=CAP)
-
-
 def _perc_fingerprints(spark, sf_dir: str, skewed: bool):
     """The perceptual family's fingerprint table over the probe corpus,
     with the media whale planted directly in fingerprint space: ~HOT_PCT%
@@ -221,59 +191,16 @@ def _perc_fingerprints(spark, sf_dir: str, skewed: bool):
     return registry.tracked_persist(h)
 
 
-def _perceptual_banded(cap):
-    def fn(spark, sf_dir: str):
-        from hyperloglog_pyspark_spark.operators.multimodal import (
-            _banded_hamming_pairs,
-        )
-
-        skewed = sf_dir.rstrip("/").endswith("xRs")
-        return _banded_hamming_pairs(
-            _perc_fingerprints(spark, sf_dir, skewed), bucket_cap=cap
-        )
-
-    return fn
-
-
-def _exact_substring(cap):
-    def fn(spark, sf_dir: str):
-        from hyperloglog_pyspark_spark.operators.dedup import (
-            dedup_exact_substring,
-        )
-
-        return dedup_exact_substring(spark, sf_dir, df_cap=cap)
-
-    return fn
-
-
-def _weighted_jaccard(cap):
-    def fn(spark, sf_dir: str):
-        from hyperloglog_pyspark_spark.operators.dedup import (
-            dedup_weighted_jaccard,
-        )
-
-        return dedup_weighted_jaccard(spark, sf_dir, df_cap=cap)
-
-    return fn
-
-
-def _weighted_prefix(spark, sf_dir: str):
-    from hyperloglog_pyspark_spark.operators.dedup import (
-        dedup_weighted_prefix_filter,
+def _perceptual_banded(spark, sf_dir: str):
+    """The perceptual queries' band self-join (``_banded_hamming_pairs``,
+    the code both registered forms run) over the planted-whale
+    fingerprint table."""
+    from hyperloglog_pyspark_spark.operators.multimodal import (
+        _banded_hamming_pairs,
     )
 
-    return dedup_weighted_prefix_filter(spark, sf_dir)
-
-
-def _entity_resolution(cap):
-    def fn(spark, sf_dir: str):
-        from hyperloglog_pyspark_spark.operators.dedup import (
-            entity_resolution_blocked,
-        )
-
-        return entity_resolution_blocked(spark, sf_dir, block_cap=cap)
-
-    return fn
+    skewed = sf_dir.rstrip("/").endswith("xRs")
+    return _banded_hamming_pairs(_perc_fingerprints(spark, sf_dir, skewed))
 
 
 def main() -> None:
@@ -290,57 +217,40 @@ def main() -> None:
         build_documents(spark, os.path.join(WORK_DIR, tag), r, skewed)
         build_customers(spark, os.path.join(WORK_DIR, tag), r, skewed)
 
+    reg = registry.REGISTRY
     runs = [
-        ("minhash_lsh", "uncapped", registry.REGISTRY["dedup_minhash_lsh"].fn),
-        ("minhash_lsh", "capped", capped_minhash_lsh),
-        ("incremental_probe", "registered",
-         registry.REGISTRY["dedup_incremental_probe"].fn),
-        ("incremental_probe", "capped", capped_incremental_probe),
+        ("minhash_lsh", reg["dedup_minhash_lsh"].fn),
+        ("incremental_probe", reg["dedup_incremental_probe"].fn),
         # r9: the perceptual family's band self-join under a fingerprint
         # whale (identical boilerplate media). Unlike _lsh_candidates'
         # bucket AGGREGATION, this is a JOIN — AQE can split the probe
-        # side, but the |b|² pair OUTPUT is still quadratic in the whale;
-        # the cap's linear star is the real mitigation.
-        ("perceptual_banded", "uncapped", _perceptual_banded(None)),
-        ("perceptual_banded", "capped", _perceptual_banded(CAP)),
-        # r11: the positional-gram exact-substring join under a gram
+        # side, but the |b|² pair OUTPUT is still quadratic in the whale.
+        ("perceptual_banded", _perceptual_banded),
+        # r11/r12: the positional-gram exact-substring join under a gram
         # whale (the boilerplate string's ~48 8-grams each sit in every
-        # hot doc, so the uncapped gram equi-join emits df² rows per
-        # gram). The registered df-cap drops corpus-ubiquitous grams
-        # BEFORE the self-join — boilerplate is by definition what the
-        # cap excludes, and a real span survives unless every one of
-        # its grams is ubiquitous.
-        ("exact_substring", "uncapped", _exact_substring(None)),
+        # hot doc). The registered form DERIVES a df-cap from the
+        # gram-df distribution (max(FLOOR, HEADROOM*p99.9)) and drops
+        # corpus-ubiquitous grams BEFORE the self-join; the whale's
+        # grams are <0.1% of distinct grams, so p99.9 stays on the
+        # natural-text df and the whale still drops.
+        ("exact_substring", reg["dedup_exact_substring"].fn),
         # r15: the weighted (bag) Jaccard postings join under the gram
-        # whale (verdict #1): the boilerplate string's word-3-grams each
-        # sit in every hot doc, so the uncapped inverted join emits df²
-        # rows per gram. Ablations: the derived df-cap (drops
-        # corpus-ubiquitous grams, approximate on whale pairs) and the
-        # registered EXACT mitigation, the weighted prefix filter
-        # (rarest-first prefixes keep hot grams out of the candidate
-        # join with zero false negatives).
-        ("weighted_jaccard", "uncapped", _weighted_jaccard(None)),
-        ("weighted_jaccard", "derived_cap", _weighted_jaccard("derived")),
-        ("weighted_jaccard", "prefix_filter", _weighted_prefix),
+        # whale: the boilerplate string's word-3-grams each sit in every
+        # hot doc, so the inverted join emits df² rows per gram. The
+        # weighted prefix filter is the exact mitigation (rarest-first
+        # prefixes keep hot grams out of the candidate join with zero
+        # false negatives).
+        ("weighted_jaccard", reg["dedup_weighted_jaccard"].fn),
+        ("weighted_prefix_filter", reg["dedup_weighted_prefix_filter"].fn),
         # r15: blocked entity resolution under a BLOCK flood — a
         # placeholder name ("UNKNOWN#...") defeats the (nation,
-        # name-prefix) blocking key, so the uncapped block self-join
-        # pays |b|²/2 Levenshteins on the whale block. The stop-block
-        # cap (record-linkage frequency filtering) excludes oversized
-        # blocks from pairing entirely: placeholder floods are data
-        # noise, not linkable evidence.
-        ("entity_resolution", "uncapped", _entity_resolution(None)),
-        ("entity_resolution", "stop_block_cap", _entity_resolution(CAP)),
-        # r12: the registered form DERIVES the cap from the gram-df
-        # distribution (max(FLOOR, HEADROOM*p99.9)); the boilerplate
-        # whale's grams are <0.1% of distinct grams, so p99.9 stays on
-        # the natural-text df and the whale still drops.
-        ("exact_substring", "derived_cap", _exact_substring("derived")),
+        # name-prefix) blocking key, so the block self-join pays
+        # |b|²/2 Levenshteins on the whale block.
+        ("entity_resolution", reg["entity_resolution_blocked"].fn),
     ]
     if only is not None:
         runs = [r for r in runs if only in r[0]]
-    results = []
-    for op, form, fn in runs:
+    for op, fn in runs:
         secs = {}
         for tag in dirs:
             best = None
@@ -358,10 +268,8 @@ def main() -> None:
         r_s = round(secs["xRs"] / max(secs["x1"], 0.05), 2)
         row = {
             "op": op,
-            "form": form,
             "replicas": replicas,
             "hot_pct": HOT_PCT,
-            "cap": CAP,
             "sec_1x": secs["x1"],
             "sec_Ru": secs["xRu"],
             "sec_Rs": secs["xRs"],
@@ -369,21 +277,7 @@ def main() -> None:
             "ratio_skew": r_s,
             "skew_penalty": round(r_s / max(r_u, 0.01), 2),
         }
-        results.append(row)
         print(json.dumps(row), flush=True)
-
-    capped_pen = [r["skew_penalty"] for r in results if r["form"] == "capped"]
-    print(
-        json.dumps(
-            {
-                "metric": "dedup_skew_capped_worst_penalty",
-                "value": max(capped_pen) if capped_pen else None,
-                "replicas": replicas,
-                "hot_pct": HOT_PCT,
-                "cap": CAP,
-            }
-        )
-    )
 
 
 if __name__ == "__main__":

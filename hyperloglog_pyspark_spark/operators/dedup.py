@@ -258,9 +258,7 @@ def _band_table(sigs: DataFrame, band_r: int = BAND_R) -> DataFrame:
     )
 
 
-def _lsh_candidates(
-    sigs: DataFrame, band_r: int = BAND_R, bucket_cap: int | None = None
-) -> DataFrame:
+def _lsh_candidates(sigs: DataFrame, band_r: int = BAND_R) -> DataFrame:
     """Candidate pairs (doc_a < doc_b) from band-hash bucket collisions.
 
     Candidates by bucket aggregation, not a self-join: one shuffle of
@@ -270,19 +268,9 @@ def _lsh_candidates(
     ``band_r`` = signature rows per band: fewer rows → looser buckets →
     higher recall at lower similarity (the (b, r) S-curve knob).
 
-    ``bucket_cap`` is the boilerplate-corpus skew guard (measured by
-    ``dedup_skew_probe.py``, SCALE.md §skewed band): a bucket larger
-    than the cap is near-certainly a shared-boilerplate equivalence
-    class (a cookie banner, a license header) — its |b|²/2 pairwise
-    explode is ONE task's work that no engine mitigation can split
-    (this is an aggregation, not a join, so AQE's skew-join splitter
-    never sees it). Capped buckets emit a linear STAR to the bucket
-    minimum instead: for identical documents the star spans exactly the
-    clique's connected component (dedup clusters are equivalence
-    classes, so downstream CC/canonical-pick results are unchanged);
-    for merely-similar members it trades bounded edge recall for
-    bounded work. ``None`` (the registered queries' default — no
-    testdata bucket comes near any sensible cap) keeps full pairwise."""
+    A boilerplate-whale bucket (a cookie banner shared by thousands of
+    documents) explodes |b|²/2 pairs in one task; SCALE.md §skewed band
+    measures it and why no guard is applied."""
     bands = _band_table(sigs, band_r)
     ids_sorted = F.sort_array(F.collect_list("doc_id"))
     pair_structs = F.flatten(
@@ -299,18 +287,9 @@ def _lsh_candidates(
         .agg(ids_sorted.alias("ids"))
         .filter(F.size("ids") >= 2)
     )
-    pairwise = buckets
-    if bucket_cap is not None:
-        pairwise = buckets.filter(F.size("ids") <= bucket_cap)
-    pairs = pairwise.select(F.explode(pair_structs).alias("p")).select(
+    pairs = buckets.select(F.explode(pair_structs).alias("p")).select(
         "p.doc_a", "p.doc_b"
     )
-    if bucket_cap is not None:
-        star = buckets.filter(F.size("ids") > bucket_cap).select(
-            F.element_at("ids", 1).alias("doc_a"),
-            F.explode(F.slice("ids", 2, F.size("ids"))).alias("doc_b"),
-        )
-        pairs = pairs.union(star)
     return pairs.distinct()
 
 
@@ -353,19 +332,14 @@ def _lsh_candidates(
           / (len(da.sh) + len(db.sh) - len(list_intersect(da.sh, db.sh))) >= {JACCARD_T}
     """,
 )
-def dedup_minhash_lsh(
-    spark: SparkSession, sf_dir: str, bucket_cap: int | None = None
-) -> DataFrame:
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH near-duplicate pairs (word 3-gram shingles, 12
     universal-hash minhash permutations over one md5 per shingle, 4 bands
     × 3 rows), verified with exact Jaccard ≥ 0.8.
 
     Candidate generation is an equi-join on (band, band_hash) — the only
     pairs ever materialized are bucket collisions, which is what keeps
-    near-dup detection feasible on a 100 TB corpus. ``bucket_cap``
-    passes through to ``_lsh_candidates`` (the boilerplate-whale-bucket
-    skew guard, measured in SCALE.md §skewed band); ``None`` — the
-    registered default — keeps exact pairwise in every bucket.
+    near-dup detection feasible on a 100 TB corpus.
     """
     # The shingled corpus feeds signature generation AND pair verification;
     # persist it so the expensive shingle+md5 pass runs once, not once per
@@ -373,7 +347,7 @@ def dedup_minhash_lsh(
     # signature table every production LSH pipeline materializes). Tracked:
     # a registry "cache" entry, evicted under the session's cache budget.
     docs = tracked_persist(_shingled(spark, sf_dir))
-    cand = _lsh_candidates(_minhash_sigs(docs), bucket_cap=bucket_cap)
+    cand = _lsh_candidates(_minhash_sigs(docs))
     da = docs.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     db = docs.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
@@ -1134,9 +1108,7 @@ _INC_NEW = "doc_id % 5 = 0"
     WHERE d.{_INC_NEW}
     """,
 )
-def dedup_incremental_probe(
-    spark: SparkSession, sf_dir: str, bucket_cap: int | None = None
-) -> DataFrame:
+def dedup_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental near-dup screening: an incoming batch (every 5th
     doc_id) is probed against the historical corpus' MinHash band index —
     the ingestion-time shape of dedup, where each new batch is checked
@@ -1151,75 +1123,31 @@ def dedup_incremental_probe(
     with the BATCH side broadcast — per-ingest cost is proportional to
     the batch, never the corpus. Exact verification joins shingles only
     for collided pairs.
-
-    ``bucket_cap`` is the index-side twin of
-    ``_lsh_candidates(bucket_cap=...)`` — the boilerplate-corpus skew
-    guard (measured in SCALE.md §skewed band: registered form degrades
-    3.07× under a 3 %-whale corpus, capped form 1.02×). ``None`` (the
-    registered default — no testdata bucket comes near any sensible cap)
-    keeps the exact probe and the exact registered plan.
     """
-    return _incremental_probe_frame(_shingled(spark, sf_dir), bucket_cap)
+    return _incremental_probe_frame(_shingled(spark, sf_dir))
 
 
-def _sh_digest(col: str | Column) -> Column:
-    """INJECTIVE shingle-set digest: md5 over the per-element md5s,
-    joined. Fixed-width hex elements make the join unambiguous, so
-    digest equality ⇔ identical shingle set even when tokens contain
-    the separator — a plain md5(array_join(sh, '|')) was NOT injective
-    (different sets can join to one string when tokens contain '|',
-    which would let the capped digest route flag a non-identical doc
-    and break its documented no-false-positives contract)."""
-    return F.md5(F.array_join(F.transform(col, F.md5), "|"))
-
-
-def _capped_probe_counts(
-    docs: DataFrame,
-    batch_bands: DataFrame,
-    index_bands: DataFrame,
-    dn: DataFrame,
-    batch_ids: DataFrame,
-    bucket_cap: int | None,
-) -> DataFrame:
-    """Shared core of the incremental probes (one-shot
-    ``_incremental_probe_frame`` and per-epoch
-    ``_incremental_epochs_frame``): band-collision candidates of
-    ``batch_bands`` (new_id, band, band_hash) against ``index_bands``
-    (doc_id, band, band_hash), exact-Jaccard confirmation through the
-    batch docs' broadcast shingles ``dn`` (new_id, sh_n), and — when
-    ``bucket_cap`` is set — the over-cap digest route with cross-route
-    exclusion. Returns one row per ``batch_ids`` doc:
-    (doc_id, n_candidates, n_confirmed), zero-coalesced.
-
-    Cap semantics: buckets up to the cap keep the member-enumerating
-    probe join; larger buckets — boilerplate by definition — route
-    their probing batch docs through an exact-DIGEST comparison
-    (injective shingle-set digest, ``_sh_digest``, equi-joined against
-    the index members' DISTINCT digests), linear on both sides. Digest
-    equality ⇔ identical shingle set ⇒ Jaccard 1, so the route adds no
-    false positives; near-but-not-identical whale-bucket members are
-    caught through their OTHER, small, bands or deliberately traded
-    away — bounded recall for bounded work, same contract as the LSH
-    star. Digest-routed counts summarize distinct digests, not bucket
-    members; digests already represented among the doc's
-    pairwise-confirmed hits are excluded so a duplicate reachable
-    through both routes is counted once, matching the exact probe."""
-    probed = index_bands
-    big_keys = None
-    if bucket_cap is not None:
-        sizes = index_bands.groupBy("band", "band_hash").agg(
-            F.count(F.lit(1)).alias("bsz")
-        )
-        big_keys = sizes.filter(F.col("bsz") > bucket_cap).select(
-            "band", "band_hash"
-        )
-        probed = (
-            index_bands.join(sizes, ["band", "band_hash"])
-            .filter(F.col("bsz") <= bucket_cap)
-            .drop("bsz")
-        )
+def _incremental_probe_frame(shingled: DataFrame) -> DataFrame:
+    """Core of ``dedup_incremental_probe`` over an already-shingled
+    corpus ``(doc_id, sh)`` — split out so tests can inject a synthetic
+    corpus directly. The index is the whole historical corpus (every
+    non-batch doc) and the batch is every 5th doc_id: band-collision
+    candidates of the batch against the index, exact-Jaccard
+    confirmation through the batch docs' broadcast shingles, one
+    zero-coalesced row per batch doc."""
+    docs = tracked_persist(shingled)
+    bands = _band_table(_minhash_sigs(docs))
+    is_new = F.expr(_INC_NEW)
+    batch_bands = bands.filter(is_new).select(
+        F.col("doc_id").alias("new_id"), "band", "band_hash"
+    )
+    dn = docs.filter(is_new).select(
+        F.col("doc_id").alias("new_id"), F.col("sh").alias("sh_n")
+    )
+    batch_ids = docs.filter(is_new).select("doc_id")
     cand = (
-        probed.join(F.broadcast(batch_bands), ["band", "band_hash"])
+        bands.filter(~is_new)
+        .join(F.broadcast(batch_bands), ["band", "band_hash"])
         .select("new_id", F.col("doc_id").alias("hist_id"))
         .distinct()
     )
@@ -1227,7 +1155,7 @@ def _capped_probe_counts(
     # shingles (the corpus side streams through the hist_id join).
     dh = docs.select(F.col("doc_id").alias("hist_id"), F.col("sh").alias("sh_h"))
     inter = F.size(F.array_intersect("sh_n", "sh_h"))
-    conf_pairs = (
+    conf = (
         cand.join(F.broadcast(dn), "new_id")
         .join(dh, "hist_id")
         .withColumn(
@@ -1236,19 +1164,8 @@ def _capped_probe_counts(
             / (F.size("sh_n") + F.size("sh_h") - inter),
         )
         .filter(F.col("j") >= JACCARD_T)
-    )
-    if bucket_cap is not None:
-        # the confirmed pair list is read twice below (counts + the
-        # digest-route exclusion set) — persist the batch-sized frame so
-        # the corpus-side shingle join runs once, and carry the hist
-        # doc's digest (computable from sh_h in place, no extra join)
-        conf_pairs = tracked_persist(
-            conf_pairs.select(
-                "new_id", "hist_id", _sh_digest("sh_h").alias("dg")
-            )
-        )
-    conf = conf_pairs.groupBy("new_id").agg(
-        F.count(F.lit(1)).alias("n_confirmed")
+        .groupBy("new_id")
+        .agg(F.count(F.lit(1)).alias("n_confirmed"))
     )
     cand_counts = cand.groupBy("new_id").agg(F.count(F.lit(1)).alias("n_candidates"))
     counts = (
@@ -1260,97 +1177,11 @@ def _capped_probe_counts(
         .drop("new_id")
         .join(F.broadcast(conf), batch_ids["doc_id"] == conf["new_id"], "left")
         .drop("new_id")
-    )
-    if bucket_cap is None:
-        return counts.select(
+        .select(
             "doc_id",
             F.coalesce("n_candidates", F.lit(0)).alias("n_candidates"),
             F.coalesce("n_confirmed", F.lit(0)).alias("n_confirmed"),
         )
-    # Digest route for batch docs that probed an over-cap bucket: linear
-    # equi-join on the shingle-set digest instead of the |bucket|-wide
-    # member enumeration (the whale bucket never gets exploded).
-    dig = docs.select("doc_id", _sh_digest("sh").alias("dg"))
-    big_new = (
-        batch_bands.join(F.broadcast(big_keys), ["band", "band_hash"])
-        .select("new_id")
-        .distinct()
-    )
-    index_digests = (
-        dig.join(index_bands.select("doc_id").distinct(), "doc_id")
-        .select("dg")
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
-    # Cross-route exclusion: an identical index dup collides in EVERY
-    # band, so a batch doc can reach it through an under-cap bucket
-    # (pair route) AND an over-cap one (digest route); counting both
-    # would report n_confirmed = 2 where the exact probe says 1. A
-    # digest hit whose digest already belongs to one of this doc's
-    # pairwise-confirmed hits IS that same doc — anti-join it away
-    # (non-identical confirmed hits have different digests and never
-    # mask a legitimate hit).
-    conf_dgs = conf_pairs.select("new_id", "dg").distinct()
-    big_conf = (
-        dig.join(F.broadcast(big_new), dig["doc_id"] == big_new["new_id"])
-        .select("new_id", "dg")
-        .join(F.broadcast(conf_dgs), ["new_id", "dg"], "left_anti")
-        .join(index_digests, "dg", "left")
-        .groupBy("new_id")
-        .agg(F.sum(F.coalesce("hit", F.lit(0))).alias("n_digest_hits"))
-    )
-    return (
-        counts.join(
-            F.broadcast(big_conf), counts["doc_id"] == big_conf["new_id"], "left"
-        )
-        .drop("new_id")
-        .select(
-            "doc_id",
-            (
-                F.coalesce("n_candidates", F.lit(0))
-                + F.coalesce("n_digest_hits", F.lit(0))
-            ).alias("n_candidates"),
-            (
-                F.coalesce("n_confirmed", F.lit(0))
-                + F.coalesce("n_digest_hits", F.lit(0))
-            ).alias("n_confirmed"),
-        )
-    )
-
-
-def _incremental_probe_frame(
-    shingled: DataFrame, bucket_cap: int | None = None
-) -> DataFrame:
-    """Core of ``dedup_incremental_probe`` over an already-shingled
-    corpus ``(doc_id, sh)`` — split out so tests can inject a synthetic
-    whale corpus directly. The candidate/confirm/digest machinery is
-    ``_capped_probe_counts`` (shared verbatim with the epochs flow; see
-    its docstring for the ``bucket_cap`` contract): here the index is
-    the whole historical corpus (every non-batch doc) and the batch is
-    every 5th doc_id.
-
-    ``bucket_cap`` is the index-side twin of
-    ``_lsh_candidates(bucket_cap=...)`` — the boilerplate-corpus skew
-    guard (measured in SCALE.md §skewed band). ``None`` (the registered
-    default) keeps the exact probe and the exact registered plan."""
-    docs = tracked_persist(shingled)
-    bands = _band_table(_minhash_sigs(docs))
-    is_new = F.expr(_INC_NEW)
-    if bucket_cap is not None:
-        # The census + the probe + the big-key route all read the band
-        # table — pay its signature pass once.
-        bands = tracked_persist(bands)
-    counts = _capped_probe_counts(
-        docs,
-        bands.filter(is_new).select(
-            F.col("doc_id").alias("new_id"), "band", "band_hash"
-        ),
-        bands.filter(~is_new),
-        docs.filter(is_new).select(
-            F.col("doc_id").alias("new_id"), F.col("sh").alias("sh_n")
-        ),
-        docs.filter(is_new).select("doc_id"),
-        bucket_cap,
     )
     return counts.select(
         "doc_id",
@@ -1446,9 +1277,7 @@ _EPOCHS = 3  # arrival order: doc_id % 3 = epoch 0 (seed), 1, 2
     WHERE d.doc_id % {_EPOCHS} = 2
     """,
 )
-def dedup_incremental_epochs(
-    spark: SparkSession, sf_dir: str, bucket_cap: int | None = None
-) -> DataFrame:
+def dedup_incremental_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-epoch ingest-time dedup — the batch-checkable form of the
     streaming foreachBatch pipeline (`tests/test_streaming.py`'s
     incremental-dedup twin): docs arrive in 3 epochs (epoch = doc_id %
@@ -1465,154 +1294,107 @@ def dedup_incremental_epochs(
     per-epoch cost proportional to the batch, never the corpus; the
     index grows by appending the admitted batch's bands (in production,
     an append to the persisted index table, no recompute).
-    ``bucket_cap`` applies the family's whale-bucket guard to EACH
-    epoch's probe (same census + exact-digest route as
-    ``_incremental_probe_frame``, with digests restricted to the docs
-    in that epoch's index); ``None`` — the registered default — keeps
-    the exact probe and the exact registered plan.
     """
-    return _incremental_epochs_frame(_shingled(spark, sf_dir), bucket_cap)
+    return _incremental_epochs_frame(_shingled(spark, sf_dir))
 
 
-def _incremental_epochs_frame(
-    shingled: DataFrame, bucket_cap: int | None = None
-) -> DataFrame:
+def _incremental_epochs_frame(shingled: DataFrame) -> DataFrame:
     """Core of ``dedup_incremental_epochs`` over an already-shingled
     corpus ``(doc_id, sh)`` — split out so tests can inject a synthetic
-    whale corpus directly (see ``_incremental_probe_frame`` for the
-    bucket-cap contract).
+    corpus directly.
 
-    Round-16 (uncapped path, guide §2.4/§5): the two per-epoch probes
-    are ONE multi-epoch pair join. Every pair either flow examines is a
-    band collision with new_epoch > hist_epoch — (1,0), (2,0), (2,1) —
-    so one band join + one exact-Jaccard confirm pass computes the
-    superset once, PERSISTED at pair grain (plan-canonical: built from
-    the persisted docs/bands frames and literals only, so warm reps
-    cache-hit it). Epoch verdicts are then cheap aggregations: epoch 1
-    reads its (1,0) slice; epoch 2 reads (2,·) minus pairs whose
-    epoch-1 hist was rejected — dropping AFTER the shared confirm
-    instead of pruning the index BEFORE the probe touches only pairs
-    against rejected docs (confirmed duplicates, few by construction),
-    and produces the identical candidate/confirm sets the sequential
-    form had. Plan effect: 2 probe joins + 2 corpus-side confirm joins
-    → 1 + 1. The capped path keeps the sequential per-epoch probes: the
-    whale-bucket census is an index-side property that differs per
-    epoch, and that path is the test-only skew-guard contract."""
+    The two per-epoch probes are ONE multi-epoch pair join. Every pair
+    either probe examines is a band collision with new_epoch >
+    hist_epoch — (1,0), (2,0), (2,1) — so one band join + one
+    exact-Jaccard confirm pass computes the superset once, PERSISTED at
+    pair grain (plan-canonical: built from the persisted docs/bands
+    frames and literals only, so warm reps cache-hit it). Epoch verdicts
+    are then cheap aggregations: epoch 1 reads its (1,0) slice; epoch 2
+    reads (2,·) minus pairs whose epoch-1 hist was rejected — dropping
+    AFTER the shared confirm instead of pruning the index BEFORE the
+    probe touches only pairs against rejected docs (confirmed
+    duplicates, few by construction), and produces the candidate/confirm
+    sets that sequential per-epoch probes against the admitted index
+    would. Plan effect: 2 probe joins + 2 corpus-side confirm joins →
+    1 + 1."""
     docs = tracked_persist(shingled)
     bands = tracked_persist(_band_table(_minhash_sigs(docs)))
-    if bucket_cap is None:
-        ep = F.col("doc_id") % _EPOCHS
-        b = bands.filter(ep > 0).select(
-            F.col("doc_id").alias("new_id"), "band", "band_hash"
+    ep = F.col("doc_id") % _EPOCHS
+    b = bands.filter(ep > 0).select(
+        F.col("doc_id").alias("new_id"), "band", "band_hash"
+    )
+    h = bands.filter(ep < 2).select(
+        F.col("doc_id").alias("hist_id"), "band", "band_hash"
+    )
+    cand = (
+        h.join(F.broadcast(b), ["band", "band_hash"])
+        .filter(F.col("hist_id") % _EPOCHS < F.col("new_id") % _EPOCHS)
+        .select("new_id", "hist_id")
+        .distinct()
+    )
+    dn = docs.filter(ep > 0).select(
+        F.col("doc_id").alias("new_id"), F.col("sh").alias("sh_n")
+    )
+    dh = docs.select(
+        F.col("doc_id").alias("hist_id"), F.col("sh").alias("sh_h")
+    )
+    inter = F.size(F.array_intersect("sh_n", "sh_h"))
+    pairs = tracked_persist(
+        cand.join(F.broadcast(dn), "new_id")
+        .join(dh, "hist_id")
+        .select(
+            "new_id",
+            "hist_id",
+            (
+                inter.cast("double")
+                / (F.size("sh_n") + F.size("sh_h") - inter)
+                >= JACCARD_T
+            ).alias("conf"),
         )
-        h = bands.filter(ep < 2).select(
-            F.col("doc_id").alias("hist_id"), "band", "band_hash"
+    )
+
+    def verdicts(e: int, epairs: DataFrame) -> DataFrame:
+        cand_counts = epairs.groupBy("new_id").agg(
+            F.count(F.lit(1)).alias("n_candidates")
         )
-        cand = (
-            h.join(F.broadcast(b), ["band", "band_hash"])
-            .filter(F.col("hist_id") % _EPOCHS < F.col("new_id") % _EPOCHS)
-            .select("new_id", "hist_id")
-            .distinct()
+        conf_counts = (
+            epairs.filter("conf")
+            .groupBy("new_id")
+            .agg(F.count(F.lit(1)).alias("n_confirmed"))
         )
-        dn = docs.filter(ep > 0).select(
-            F.col("doc_id").alias("new_id"), F.col("sh").alias("sh_n")
-        )
-        dh = docs.select(
-            F.col("doc_id").alias("hist_id"), F.col("sh").alias("sh_h")
-        )
-        inter = F.size(F.array_intersect("sh_n", "sh_h"))
-        pairs = tracked_persist(
-            cand.join(F.broadcast(dn), "new_id")
-            .join(dh, "hist_id")
+        ids = docs.filter(ep == e).select("doc_id")
+        return (
+            ids.join(
+                F.broadcast(cand_counts),
+                ids["doc_id"] == cand_counts["new_id"],
+                "left",
+            )
+            .drop("new_id")
+            .join(
+                F.broadcast(conf_counts),
+                ids["doc_id"] == conf_counts["new_id"],
+                "left",
+            )
+            .drop("new_id")
             .select(
-                "new_id",
-                "hist_id",
-                (
-                    inter.cast("double")
-                    / (F.size("sh_n") + F.size("sh_h") - inter)
-                    >= JACCARD_T
-                ).alias("conf"),
+                "doc_id",
+                F.lit(e).cast("bigint").alias("epoch"),
+                F.coalesce("n_candidates", F.lit(0)).alias("n_candidates"),
+                F.coalesce("n_confirmed", F.lit(0)).alias("n_confirmed"),
+                (F.coalesce("n_confirmed", F.lit(0)) == 0).alias("admitted"),
             )
         )
 
-        def verdicts(e: int, epairs: DataFrame) -> DataFrame:
-            cand_counts = epairs.groupBy("new_id").agg(
-                F.count(F.lit(1)).alias("n_candidates")
-            )
-            conf_counts = (
-                epairs.filter("conf")
-                .groupBy("new_id")
-                .agg(F.count(F.lit(1)).alias("n_confirmed"))
-            )
-            ids = docs.filter(ep == e).select("doc_id")
-            return (
-                ids.join(
-                    F.broadcast(cand_counts),
-                    ids["doc_id"] == cand_counts["new_id"],
-                    "left",
-                )
-                .drop("new_id")
-                .join(
-                    F.broadcast(conf_counts),
-                    ids["doc_id"] == conf_counts["new_id"],
-                    "left",
-                )
-                .drop("new_id")
-                .select(
-                    "doc_id",
-                    F.lit(e).cast("bigint").alias("epoch"),
-                    F.coalesce("n_candidates", F.lit(0)).alias("n_candidates"),
-                    F.coalesce("n_confirmed", F.lit(0)).alias("n_confirmed"),
-                    (F.coalesce("n_confirmed", F.lit(0)) == 0).alias("admitted"),
-                )
-            )
-
-        p1 = pairs.filter(F.col("new_id") % _EPOCHS == 1)
-        rejected1 = (
-            p1.filter("conf").select(F.col("new_id").alias("rej_id")).distinct()
-        )
-        p2 = pairs.filter(F.col("new_id") % _EPOCHS == 2).join(
-            F.broadcast(rejected1),
-            F.col("hist_id") == F.col("rej_id"),
-            "left_anti",
-        )
-        return verdicts(1, p1).unionByName(verdicts(2, p2))
-
-    def probe(e: int, index_bands: DataFrame) -> DataFrame:
-        # One epoch's probe against the accumulated admitted index —
-        # the shared candidate/confirm/digest core, with the digest
-        # route scoped to THIS epoch's index members only.
-        in_epoch = F.col("doc_id") % _EPOCHS == e
-        counts = _capped_probe_counts(
-            docs,
-            bands.filter(in_epoch).select(
-                F.col("doc_id").alias("new_id"), "band", "band_hash"
-            ),
-            index_bands,
-            docs.filter(in_epoch).select(
-                F.col("doc_id").alias("new_id"), F.col("sh").alias("sh_n")
-            ),
-            docs.filter(in_epoch).select("doc_id"),
-            bucket_cap,
-        )
-        return counts.select(
-            "doc_id",
-            F.lit(e).cast("bigint").alias("epoch"),
-            "n_candidates",
-            "n_confirmed",
-            (F.col("n_confirmed") == 0).alias("admitted"),
-        )
-
-    index_bands = bands.filter(F.col("doc_id") % _EPOCHS == 0)
-    m1 = tracked_persist(probe(1, index_bands))  # feeds output AND index 2
-    rejected1 = m1.filter(~F.col("admitted")).select(F.col("doc_id").alias("rej_id"))
-    admitted1_bands = bands.filter(F.col("doc_id") % _EPOCHS == 1).join(
+    p1 = pairs.filter(F.col("new_id") % _EPOCHS == 1)
+    rejected1 = (
+        p1.filter("conf").select(F.col("new_id").alias("rej_id")).distinct()
+    )
+    p2 = pairs.filter(F.col("new_id") % _EPOCHS == 2).join(
         F.broadcast(rejected1),
-        F.col("doc_id") == F.col("rej_id"),
+        F.col("hist_id") == F.col("rej_id"),
         "left_anti",
     )
-    m2 = probe(2, index_bands.unionByName(admitted1_bands))
-    return m1.unionByName(m2)
+    return verdicts(1, p1).unionByName(verdicts(2, p2))
 
 
 @register(
@@ -1733,19 +1515,16 @@ XSUB_DF_FLOOR = 8  # never cap below this (tiny-corpus safety)
 XSUB_DF_HEADROOM = 16  # cap = HEADROOM × p99.9 of the gram-df distribution
 
 
-def _derived_df_whales(
-    dfs: DataFrame, floor: int, headroom: int, gram_col: str = "g"
-) -> DataFrame:
-    """Whale grams under the derived df-cap: given a ``(gram_col, df)``
+def _derived_df_whales(dfs: DataFrame) -> DataFrame:
+    """Whale grams under the derived df-cap: given a ``(gram, df)``
     frame, return the grams whose document frequency exceeds
-    max(floor, headroom × p99.9(df)).
+    max(XSUB_DF_FLOOR, XSUB_DF_HEADROOM × p99.9(df)).
 
     The p99.9 is an exact integer order statistic computed over the
     df HISTOGRAM (#distinct df values — a handful of rows), in pure
     integer arithmetic so both engines derive the identical threshold
-    at every corpus size. Shared by dedup_exact_substring (registered,
-    oracle mirrors the derivation) and the weighted-Jaccard probe
-    ablation (dedup_skew_probe.py)."""
+    at every corpus size (dedup_exact_substring's oracle mirrors the
+    derivation)."""
     dfs = tracked_persist(dfs)
     hist = dfs.groupBy("df").agg(F.count(F.lit(1)).alias("c"))
     cum = hist.select(
@@ -1763,14 +1542,14 @@ def _derived_df_whales(
         .agg(F.min("df").alias("p999"))
         .select(
             F.greatest(
-                F.lit(floor), F.lit(headroom) * F.col("p999")
+                F.lit(XSUB_DF_FLOOR), F.lit(XSUB_DF_HEADROOM) * F.col("p999")
             ).alias("cap")
         )
     )
     return (
         dfs.crossJoin(F.broadcast(cap))
         .filter(F.col("df") > F.col("cap"))
-        .select(gram_col)
+        .select("gram")
     )
 
 
@@ -1823,9 +1602,7 @@ def _derived_df_whales(
     HAVING MAX(span_tokens) >= {XSUB_MIN_SPAN}
     """,
 )
-def dedup_exact_substring(
-    spark: SparkSession, sf_dir: str, df_cap: int | None | str = "derived"
-) -> DataFrame:
+def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document exact-substring detection: for every document pair
     sharing a verbatim token run of >= XSUB_MIN_SPAN tokens, emit the
     longest shared span, the number of distinct shared runs, and the
@@ -1853,10 +1630,9 @@ def dedup_exact_substring(
     the cap unless EVERY one of its grams is corpus-ubiquitous, i.e.
     the span itself is boilerplate. The run-merge window partitions by
     (pair, diagonal) — cardinality is bounded by matched pairs, not the
-    corpus — and the gram join key (``df_cap`` overrides the derivation:
-    an int pins a fixed cap, None is the uncapped probe-only ablation;
-    dedup_skew_probe.py measures both against a boilerplate whale)
-    would shuffle as a 64-bit hash at 100 TB (string kept here only for
+    corpus — and the gram join key (dedup_skew_probe.py measures the
+    guard against a boilerplate whale) would shuffle as a 64-bit hash
+    at 100 TB (string kept here only for
     oracle parity; see dedup_minhash_lsh's md5 anchor note).
     """
     docs = load_table(spark, sf_dir, "documents", spread_scan=True)
@@ -1873,18 +1649,9 @@ def dedup_exact_substring(
             ).alias("pos", "gram"),
         )
     )
-    if df_cap is None:  # probe-only ablation (dedup_skew_probe.py)
-        capped = g
-    else:
-        dfs = g.groupBy("gram").agg(F.count_distinct("doc_id").alias("df"))
-        if df_cap == "derived":
-            whales = _derived_df_whales(
-                dfs, floor=XSUB_DF_FLOOR, headroom=XSUB_DF_HEADROOM,
-                gram_col="gram",
-            )
-        else:
-            whales = dfs.filter(F.col("df") > df_cap).select("gram")
-        capped = g.join(F.broadcast(whales), "gram", "left_anti")
+    dfs = g.groupBy("gram").agg(F.count_distinct("doc_id").alias("df"))
+    whales = _derived_df_whales(dfs)
+    capped = g.join(F.broadcast(whales), "gram", "left_anti")
     a = capped.select(F.col("doc_id").alias("da"), F.col("pos").alias("pa"), "gram")
     b = capped.select(F.col("doc_id").alias("db"), F.col("pos").alias("pb"), "gram")
     pairs = (
@@ -1975,9 +1742,7 @@ ER_MAX_LEV = 1  # blocked pairs at most this edit distance apart are matches
     GROUP BY e.nat
     """,
 )
-def entity_resolution_blocked(
-    spark: SparkSession, sf_dir: str, block_cap: int | None = None
-) -> DataFrame:
+def entity_resolution_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Record-linkage / entity resolution over a STRUCTURED table — the
     classic blocking → pairwise-scoring → transitive-closure pipeline
     the document dedup family (MinHash/SimHash) runs on text, here run
@@ -2003,14 +1768,9 @@ def entity_resolution_blocked(
     100 TB: blocks shard perfectly; no all-pairs anything — UNLESS the
     name data itself defeats the blocking key: a placeholder name
     ("UNKNOWN", "FNU", a call-center default) floods one block and its
-    |b|²/2 pairwise explodes. ``block_cap`` is the standard
-    record-linkage answer (frequency-filtered / stop blocks, Christen
-    2012 §4.5): blocks larger than the cap are EXCLUDED from pairing —
-    a thousand-member identical-prefix block is data noise, not
-    linkable evidence — while still counted in the block census.
-    Registered default None keeps the exact registered plan/oracle;
-    the whale penalty and the cap's flattening are measured in
-    dedup_skew_probe.py (entity legs).
+    |b|²/2 pairwise explodes (measured in dedup_skew_probe.py's entity
+    leg; the standard record-linkage answer is frequency-filtered stop
+    blocks, Christen 2012 §4.5).
     """
     cust = load_table(spark, sf_dir, "customer")
     ent = tracked_persist(
@@ -2021,22 +1781,10 @@ def entity_resolution_blocked(
             F.expr("substr(c_name, 1, length(c_name) - 2)").alias("blk"),
         )
     )
-    if block_cap is not None:
-        stop_blocks = (
-            ent.groupBy("nat", "blk")
-            .agg(F.count(F.lit(1)).alias("bs"))
-            .filter(F.col("bs") > block_cap)
-            .select("nat", "blk")
-        )
-        pairable = ent.join(
-            F.broadcast(stop_blocks), ["nat", "blk"], "left_anti"
-        )
-    else:
-        pairable = ent
-    a = pairable.select(
+    a = ent.select(
         "nat", "blk", F.col("id").alias("u"), F.col("name").alias("name_u")
     )
-    b = pairable.select(
+    b = ent.select(
         "nat", "blk", F.col("id").alias("v"), F.col("name").alias("name_v")
     )
     pairs = tracked_persist(
@@ -2130,9 +1878,7 @@ WJ_T = 0.5  # weighted (multiset) Jaccard report threshold
       AND p.sum_min * 1.0 / (ta.toks + tb.toks - p.sum_min) >= {WJ_T}
     """,
 )
-def dedup_weighted_jaccard(
-    spark: SparkSession, sf_dir: str, df_cap: int | None | str = None
-) -> DataFrame:
+def dedup_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted (multiset / bag) Jaccard near-dup detection — the
     frequency-aware sibling of dedup_ngram_jaccard: J_w(A,B) =
     Σ_g min(tf_A, tf_B) / Σ_g max(tf_A, tf_B) over word-3-gram BAGS
@@ -2155,13 +1901,9 @@ def dedup_weighted_jaccard(
     Exactness: sum_min/toks are exact BIGINTs; the one double division
     is identical bit-for-bit cross-engine (operands < 2^53).
 
-    ``df_cap`` is the probe-only whale guard (dedup_skew_probe.py): an
-    int drops grams whose document frequency exceeds it BEFORE the
-    self-join; "derived" derives the cap from the gram-df distribution
-    exactly as dedup_exact_substring does (max(floor, headroom ×
-    p99.9(df))). None — the registered default — is the exact
-    inverted-index join the oracle mirrors. The EXACT no-false-negative
-    scale path for this threshold is dedup_weighted_prefix_filter.
+    A boilerplate whale gram's df² pairs all land in this join; the
+    EXACT, whale-immune scale path for this threshold is
+    dedup_weighted_prefix_filter.
     """
     docs = load_table(spark, sf_dir, "documents", spread_scan=True)
     t = F.split("text", " ")
@@ -2183,17 +1925,6 @@ def dedup_weighted_jaccard(
         .groupBy("doc_id", "lb", "toks", "g")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
     )
-    if df_cap is not None:
-        # probe-only ablation: one tf row per (doc, gram), so df(g) is a
-        # plain row count; whales leave the postings before the join
-        dfs = tf.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-        if df_cap == "derived":
-            whales = _derived_df_whales(
-                dfs, floor=XSUB_DF_FLOOR, headroom=XSUB_DF_HEADROOM
-            )
-        else:
-            whales = dfs.filter(F.col("df") > df_cap).select("g")
-        tf = tf.join(F.broadcast(whales), "g", "left_anti")
     a = tf.select(
         F.col("doc_id").alias("doc_a"), F.col("lb").alias("lb_a"),
         F.col("toks").alias("toks_a"), "g", F.col("tf").alias("tf_a"),
@@ -2265,10 +1996,7 @@ WPF_T_DEN = 2
           >= {WPF_T_NUM} * (ta.toks + tb.toks - p.sum_min)
     """,
 )
-def dedup_weighted_prefix_filter(
-    spark: SparkSession, sf_dir: str,
-    t_num: int = WPF_T_NUM, t_den: int = WPF_T_DEN,
-) -> DataFrame:
+def dedup_weighted_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted (bag) Jaccard self-join with an EXACT prefix filter —
     the no-false-negative scale path for the weighted family, playing
     the role dedup_prefix_filter (PPJoin) plays for set Jaccard.
@@ -2278,7 +2006,7 @@ def dedup_weighted_prefix_filter(
     probabilities, no length-bucket banding (dedup_weighted_jaccard's
     lb±1 predicate can exclude true pairs whose masses straddle two
     buckets; this operator has no such blind spot and the fixture test
-    pins a pair only it finds), no df-cap recall loss.
+    pins a pair only it finds).
 
     Candidate generation is the mass-weighted AllPairs/PPJoin prefix
     argument: under a GLOBAL gram order (document-frequency ascending,
@@ -2307,22 +2035,20 @@ def dedup_weighted_prefix_filter(
     Scale posture measured in dedup_skew_probe.py (weighted_jaccard
     legs, SCALE.md round-15 table): under a 3 % boilerplate whale this
     plan's skew penalty is 1.11 (flat — whale grams have corpus-scale
-    df, sort LAST, never enter a prefix) vs the uncapped inverted
-    join's 1.34-and-growing-quadratically. The honest trade: at
+    df, sort LAST, never enter a prefix) vs the inverted join's
+    1.34-and-growing-quadratically. The honest trade: at
     t = 0.5 prefixes hold ≥ half of every doc's mass, so the uniform-
     corpus wall runs ~4.5× the inverted join's — prefix-filter
     selectivity grows with t, making this the right plan for
     high-threshold near-dup sweeps (t ≥ 0.8: short prefixes, exact,
-    whale-immune) and the df-cap/MinHash routes the right ones at
-    broad-similarity thresholds. ``t_num``/``t_den`` expose the
-    threshold as an exact rational (registered default
-    {WPF_T_NUM}/{WPF_T_DEN}, the oracle's value): raising t keeps only
-    entries whose suffix mass ≥ t·|doc| in each prefix, so prefixes
-    SHRINK and the candidate join gets cheaper exactly when the sweep
-    gets stricter — the production knob the guidance above refers to.
-    The completeness argument is threshold-generic;
-    tests/test_fuzz_round15.py re-proves the naive-join equality at
-    t = 4/5.
+    whale-immune) and the inverted-join/MinHash routes the right ones at
+    broad-similarity thresholds. The threshold is the exact rational
+    WPF_T_NUM/WPF_T_DEN, read when the plan is built: raising t keeps
+    only entries whose suffix mass ≥ t·|doc| in each prefix, so
+    prefixes SHRINK and the candidate join gets cheaper exactly when
+    the sweep gets stricter. The completeness argument is
+    threshold-generic; tests/test_fuzz_round15.py re-proves the
+    naive-join equality at t = 4/5.
     """
     docs = load_table(spark, sf_dir, "documents", spread_scan=True)
     t = F.split("text", " ")
@@ -2355,7 +2081,7 @@ def dedup_weighted_prefix_filter(
         ).alias("suffix_mass"),
     )
     prefix = ranked.filter(
-        F.col("suffix_mass") * t_den >= F.col("toks") * t_num
+        F.col("suffix_mass") * WPF_T_DEN >= F.col("toks") * WPF_T_NUM
     )
     pa = prefix.select(
         F.col("doc_id").alias("doc_a"), F.col("toks").alias("toks_a"), "g"
@@ -2369,8 +2095,8 @@ def dedup_weighted_prefix_filter(
             (pa["g"] == pb["g"])
             & (F.col("doc_a") < F.col("doc_b"))
             & (
-                F.least("toks_a", "toks_b") * t_den
-                >= F.greatest("toks_a", "toks_b") * t_num
+                F.least("toks_a", "toks_b") * WPF_T_DEN
+                >= F.greatest("toks_a", "toks_b") * WPF_T_NUM
             ),
         )
         .select("doc_a", "doc_b", "toks_a", "toks_b")
@@ -2393,8 +2119,8 @@ def dedup_weighted_prefix_filter(
     )
     return (
         sum_min.filter(
-            F.col("sum_min") * t_den
-            >= t_num
+            F.col("sum_min") * WPF_T_DEN
+            >= WPF_T_NUM
             * (F.col("toks_a") + F.col("toks_b") - F.col("sum_min"))
         )
         .select(

@@ -23,7 +23,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from hyperloglog_pyspark_spark.functions.mediacodec import (
     bmp_gray_grid,
@@ -488,38 +488,18 @@ _PERC_PAIRS_ORACLE = f"""
     """
 
 
-def _banded_hamming_pairs(
-    hashes: DataFrame, bucket_cap: int | None = None
-) -> DataFrame:
+def _banded_hamming_pairs(hashes: DataFrame) -> DataFrame:
     """Near-dup pairs from a persisted 4x16-bit fingerprint table
     (doc_id, b0..b3): explode into (band, value) bucket keys, equi-join
     on the bucket, verify candidates with exact Hamming distance
     <= PERC_HAMMING_T JVM-side (bit_count(xor)), emit distinct pairs.
     Shared by the image-dHash and audio-fingerprint dedups — one copy
     of the banding/verify plan. Exhaustive at T=3 with 4 bands by
-    pigeonhole (<= 3 dirty bits leave >= 1 clean band).
-
-    ``bucket_cap`` is the whale-band skew guard, the same
-    cap-and-star discipline as ``dedup._lsh_candidates``: a band
-    bucket larger than the cap is near-certainly a corpus-wide
-    boilerplate image/jingle whose |b|²/2 pairwise explode is one
-    task's unsplittable work — capped buckets emit a linear STAR to
-    the bucket minimum instead (for identical media the star spans
-    exactly the clique's connected component; for merely-similar
-    members it trades bounded edge recall for bounded work). ``None``
-    — the registered queries' default — keeps exact pairwise; no
-    testdata band comes near any sensible cap."""
+    pigeonhole (<= 3 dirty bits leave >= 1 clean band)."""
     bands = hashes.select(
         "doc_id", "b0", "b1", "b2", "b3",
         F.posexplode(F.array("b0", "b1", "b2", "b3")).alias("band", "bv"),
     )
-    if bucket_cap is not None:
-        w = Window.partitionBy("band", "bv")
-        sized = bands.withColumn("bn", F.count(F.lit(1)).over(w)).withColumn(
-            "bmin", F.min("doc_id").over(w)
-        )
-        bands = sized.filter(F.col("bn") <= bucket_cap).drop("bn", "bmin")
-        star_src = sized.filter(F.col("bn") > bucket_cap)
     a, b = bands.alias("a"), bands.alias("b")
     ham = sum(
         F.bit_count(F.col(f"a.b{i}").bitwiseXOR(F.col(f"b.b{i}"))) for i in range(4)
@@ -538,28 +518,6 @@ def _banded_hamming_pairs(
         )
         .filter(F.col("hamming") <= PERC_HAMMING_T)
     )
-    if bucket_cap is not None:
-        s, m = star_src.alias("s"), star_src.alias("m")
-        star_ham = sum(
-            F.bit_count(F.col(f"s.b{i}").bitwiseXOR(F.col(f"m.b{i}")))
-            for i in range(4)
-        )
-        star = (
-            s.join(
-                m,
-                (F.col("s.band") == F.col("m.band"))
-                & (F.col("s.bv") == F.col("m.bv"))
-                & (F.col("s.doc_id") == F.col("s.bmin"))
-                & (F.col("m.doc_id") > F.col("m.bmin")),
-            )
-            .select(
-                F.col("s.doc_id").alias("doc_a"),
-                F.col("m.doc_id").alias("doc_b"),
-                star_ham.cast("long").alias("hamming"),
-            )
-            .filter(F.col("hamming") <= PERC_HAMMING_T)
-        )
-        pairs = pairs.union(star)
     return pairs.distinct()
 
 
@@ -669,9 +627,7 @@ def _perc_audio_fp(payload: bytes) -> tuple[int, int, int, int]:
     bench=True,
     oracle=_PERC_PAIRS_ORACLE,
 )
-def multimodal_dedup_perceptual(
-    spark: SparkSession, sf_dir: str, bucket_cap: int | None = None
-) -> DataFrame:
+def multimodal_dedup_perceptual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual near-duplicate media pairs: dHash over REAL decoded
     pixels, Hamming-matched via a band-bucketed self-join — the
     resized/re-encoded/brightness-shifted-copy catcher that byte-digest
@@ -692,13 +648,13 @@ def multimodal_dedup_perceptual(
 
     Scale: the only shuffle keys are 16-bit band values + doc ids; pixel
     payloads never leave their scan partition (same posture as the
-    MinHash-LSH family, ``operators/dedup.py``). Bucket skew on
-    whale bands (a corpus-wide boilerplate image) would use the same
-    cap-and-star guard as ``_lsh_candidates``; the planted pattern's
-    per-bit periods (2..65, combined lcm astronomically large) keep
-    testdata buckets tiny — measured in scale_probe.py."""
+    MinHash-LSH family, ``operators/dedup.py``). A whale band (a
+    corpus-wide boilerplate image) explodes |b|²/2 pairs in the band
+    join (dedup_skew_probe.py); the planted pattern's per-bit periods
+    (2..65, combined lcm astronomically large) keep testdata buckets
+    tiny — measured in scale_probe.py."""
     hashes = _fingerprint_table(spark, sf_dir, _perc_image_synth, _perc_image_fp)
-    return _banded_hamming_pairs(hashes, bucket_cap=bucket_cap)
+    return _banded_hamming_pairs(hashes)
 
 
 AUDIO_FP_FRAME = 64          # PCM samples per energy frame
@@ -730,9 +686,7 @@ def _audio_fp_samples(doc_id: int) -> list[int]:
     bench=True,
     oracle=_PERC_PAIRS_ORACLE,
 )
-def multimodal_dedup_audio_fp(
-    spark: SparkSession, sf_dir: str, bucket_cap: int | None = None
-) -> DataFrame:
+def multimodal_dedup_audio_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual near-duplicate AUDIO pairs: chromaprint-style
     energy-delta fingerprint over REAL decoded PCM, Hamming-matched via
     the same band-bucketed self-join as the image dHash — the
@@ -756,7 +710,7 @@ def multimodal_dedup_audio_fp(
     leave their scan partition; the shuffle carries 16-bit band keys +
     ids; the fingerprint table is the persisted checkpoint."""
     hashes = _fingerprint_table(spark, sf_dir, _perc_audio_synth, _perc_audio_fp)
-    return _banded_hamming_pairs(hashes, bucket_cap=bucket_cap)
+    return _banded_hamming_pairs(hashes)
 
 
 # Per-document synthetic media sizes, derived from the container layouts
@@ -793,9 +747,7 @@ PERC_MEDIA_BYTES = PERC_IMG_BYTES + PERC_AUD_BYTES
     FROM comp GROUP BY cluster_id
     """,
 )
-def multimodal_dedup_canonical(
-    spark: SparkSession, sf_dir: str, bucket_cap: int | None = None
-) -> DataFrame:
+def multimodal_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep-one-per-cluster for perceptual MEDIA dedup: connected
     components over the CROSS-MODAL pair graph (the union of the image
     dHash and audio energy-fingerprint near-dup pairs — a doc is a dup
@@ -823,13 +775,10 @@ def multimodal_dedup_canonical(
 
     img = _fingerprint_table(spark, sf_dir, _perc_image_synth, _perc_image_fp)
     aud = _fingerprint_table(spark, sf_dir, _perc_audio_synth, _perc_audio_fp)
-    # bucket_cap passes through to both banded routes — the same
-    # cap-and-star whale guard the pair queries expose (None, the
-    # registered default, keeps exact pairwise; see _banded_hamming_pairs)
     pairs = (
-        _banded_hamming_pairs(img, bucket_cap=bucket_cap)
+        _banded_hamming_pairs(img)
         .select("doc_a", "doc_b")
-        .union(_banded_hamming_pairs(aud, bucket_cap=bucket_cap).select("doc_a", "doc_b"))
+        .union(_banded_hamming_pairs(aud).select("doc_a", "doc_b"))
     )
     comp = connected_components(
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))

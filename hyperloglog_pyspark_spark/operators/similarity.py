@@ -1348,16 +1348,6 @@ def _pq_lloyd_final_sql(src: str, cent: str) -> str:
         ) WHERE rn = 1"""
 
 
-def _d2_long(a, b) -> Column:
-    """Exact integer squared-L2 between two array<long> columns —
-    zip_with/aggregate, JVM codegen, no floats."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 def _pq_ms():
     # built lazily — module import must not require an active SparkContext
     return F.explode(F.array(*[F.lit(m) for m in range(PQ_M)])).alias("m")

@@ -1119,27 +1119,31 @@ def sink_hll_sketch_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _store_dir(sf_dir, "events", "hll_sketch_store")
     store_path = os.path.join(base, "sketches")
 
-    def build_into(stage: str) -> None:
+    def epoch_frame(epoch: int) -> DataFrame:
         # epoch split is a pure function of the day (deterministic on
         # any corpus): roughly 3/4 of days build the base, the rest
         # arrive as the append increment
         is_append = F.pmod(F.dayofmonth("day"), F.lit(4)) == 0
-        for epoch, pred in ((0, ~is_append), (1, is_append)):
-            (
-                typed.filter(pred)
-                .groupBy("event_type", "day")
-                .agg(F.hll_sketch_agg("uid", F.lit(LG_K)).alias("sk"))
-                .withColumn("epoch", F.lit(epoch))
-                .repartition(1)
-                .write.mode("append")
-                .parquet(os.path.join(stage, "sketches"))
+        return (
+            typed.filter(is_append if epoch else ~is_append)
+            .groupBy("event_type", "day")
+            .agg(F.hll_sketch_agg("uid", F.lit(LG_K)).alias("sk"))
+            .withColumn("epoch", F.lit(epoch))
+        )
+
+    def build_into(stage: str) -> None:
+        for epoch in (0, 1):
+            epoch_frame(epoch).repartition(1).write.mode("append").parquet(
+                os.path.join(stage, "sketches")
             )
 
     _build_store_atomically(base, build_into)
 
     # ---- serve from the persisted store only ----
+    # read with the epoch frame's schema: parquet inference runs a job
     stored = (
-        spark.read.parquet(store_path)
+        spark.read.schema(epoch_frame(0).schema)
+        .parquet(store_path)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_days"),
@@ -1267,25 +1271,28 @@ def sink_ddsketch_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _store_dir(sf_dir, "events", "dd_sketch_store")
     store_path = os.path.join(base, "sketches")
 
-    def build_into(stage: str) -> None:
+    def epoch_frame(epoch: int) -> DataFrame:
         # same deterministic day split as the HLL store: ~3/4 of days
         # build the base, the rest arrive as the frozen append epoch
         is_append = F.pmod(F.dayofmonth("day"), F.lit(4)) == 0
-        for epoch, pred in ((0, ~is_append), (1, is_append)):
-            (
-                bucketed.filter(pred)
-                .groupBy("event_type", "day", "bucket", "lo", "hi")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .withColumn("epoch", F.lit(epoch))
-                .repartition(1)
-                .write.mode("append")
-                .parquet(os.path.join(stage, "sketches"))
+        return (
+            bucketed.filter(is_append if epoch else ~is_append)
+            .groupBy("event_type", "day", "bucket", "lo", "hi")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .withColumn("epoch", F.lit(epoch))
+        )
+
+    def build_into(stage: str) -> None:
+        for epoch in (0, 1):
+            epoch_frame(epoch).repartition(1).write.mode("append").parquet(
+                os.path.join(stage, "sketches")
             )
 
     _build_store_atomically(base, build_into)
 
     # ---- serve from the persisted store only ----
-    stored = spark.read.parquet(store_path)
+    # read with the epoch frame's schema: parquet inference runs a job
+    stored = spark.read.schema(epoch_frame(0).schema).parquet(store_path)
     merged = tracked_persist(
         stored.groupBy("event_type", "bucket", "lo", "hi").agg(
             F.sum("n").cast("long").alias("n")

@@ -23,7 +23,7 @@ import re
 import sys
 from collections.abc import Callable
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from itertools import zip_longest
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,7 +39,6 @@ class Query:
     category: str
     doc: str = ""
     bench: bool = False  # included in bench.py headline set
-    tags: tuple[str, ...] = field(default_factory=tuple)
 
 
 REGISTRY: dict[str, Query] = {}
@@ -340,7 +339,6 @@ def register(
     oracle: str | None = None,
     category: str = "misc",
     bench: bool = False,
-    tags: tuple[str, ...] = (),
 ) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
@@ -378,7 +376,7 @@ def register(
         wrapped.__wrapped__ = fn
         REGISTRY[name] = Query(
             name=name, fn=wrapped, oracle=oracle, category=category,
-            doc=(fn.__doc__ or "").strip(), bench=bench, tags=tags,
+            doc=(fn.__doc__ or "").strip(), bench=bench,
         )
         return fn
 

@@ -12,6 +12,7 @@ written down; this test locks that convention:
 
 from __future__ import annotations
 
+import inspect
 import json
 import os
 import re
@@ -91,6 +92,20 @@ def test_every_query_has_an_oracle():
     queries()
     missing = [n for n, q in REGISTRY.items() if q.oracle is None]
     assert not missing, f"queries without oracles: {missing}"
+
+
+def test_every_query_takes_spark_and_sf_dir_only():
+    """The query contract is QueryFn(spark, sf_dir): the register wrapper
+    passes nothing else, so an extra parameter is a code path the
+    driver, the oracle and the bench never run."""
+    queries()
+    extra = {
+        n: list(inspect.signature(q.fn.__wrapped__).parameters)
+        for n, q in REGISTRY.items()
+        if list(inspect.signature(q.fn.__wrapped__).parameters)
+        != ["spark", "sf_dir"]
+    }
+    assert not extra, f"queries with parameters beyond (spark, sf_dir): {extra}"
 
 
 _PLAN_ROW = re.compile(

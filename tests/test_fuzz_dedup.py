@@ -7,15 +7,11 @@ oracle suite can't sweep —
 - identical-doc COMPLETENESS: byte-identical documents share every band,
   so every identical pair must surface as a candidate (MinHash's one
   exact guarantee — J = 1 ⇒ collision probability 1);
-- cap INVARIANCE: the bucket-cap star rewires edges but never splits or
-  merges a candidate-graph component (a bucket's members stay mutually
-  reachable whether clique- or star-connected), for ANY corpus and ANY
-  cap — the graph-level contract behind
-  ``test_lsh_bucket_cap_stars_oversized_buckets``'s fixed example;
-- capped-probe VERDICT soundness (``_incremental_probe_frame``): the
-  digest route never flags a batch doc the exact probe would admit
-  (capped is_dup ⊆ uncapped is_dup), and a batch doc with a
-  byte-identical hist twin stays flagged under any cap.
+- probe VERDICT soundness (``_incremental_probe_frame``): one row per
+  batch doc, confirmations never exceed candidates, and a batch doc
+  with a byte-identical hist twin is always flagged;
+- banded-Hamming EXACTNESS (``_banded_hamming_pairs``): the banded join
+  equals the all-pairs Hamming <= T set on arbitrary fingerprints.
 
 Corpora are tiny (≤ 18 docs) — each example is a real Spark round-trip,
 so example counts are kept low; ``derandomize=True`` keeps CI stable.
@@ -59,41 +55,23 @@ def _shingle_df(spark, texts):
     ).select("doc_id", word_shingles("text", 3).alias("sh"))
 
 
-def _components(pairs, all_ids):
-    parent = {i: i for i in all_ids}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        parent[find(a)] = find(b)
-    groups: dict[int, set[int]] = {}
-    for n in all_ids:
-        groups.setdefault(find(n), set()).add(n)
-    return {frozenset(g) for g in groups.values()}
-
-
-@given(texts=corpora(), cap=st.integers(1, 6))
+@given(texts=corpora())
 @settings(
     max_examples=12,
     deadline=None,
     derandomize=True,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-def test_lsh_candidates_sound_complete_and_cap_invariant(texts, cap, spark):
+def test_lsh_candidates_sound_complete_and_cap_invariant(texts, spark):
     docs = _shingle_df(spark, texts)
     sigs = _minhash_sigs(docs).persist()
     try:
         full = {tuple(r) for r in _lsh_candidates(sigs).collect()}
-        capped = {tuple(r) for r in _lsh_candidates(sigs, bucket_cap=cap).collect()}
     finally:
         sigs.unpersist()
     ids = set(range(len(texts)))
     # soundness: ordered pairs of real ids only
-    for a, b in full | capped:
+    for a, b in full:
         assert a in ids and b in ids and a < b
     # completeness on the exact guarantee: identical docs always collide
     by_text: dict[str, list[int]] = {}
@@ -106,59 +84,33 @@ def test_lsh_candidates_sound_complete_and_cap_invariant(texts, cap, spark):
         for j in range(i + 1, len(g))
     }
     assert identical <= full
-    assert identical <= {
-        (a, b) for comp in _components(capped, ids) for a in comp for b in comp
-    }
-    # cap invariance: star vs clique never changes the candidate graph's
-    # connected components
-    assert _components(capped, ids) == _components(full, ids)
-    # the capped edge set never invents a cross-component edge
-    assert capped <= {
-        (a, b)
-        for comp in _components(full, ids)
-        for a in comp
-        for b in comp
-        if a < b
-    }
 
 
-@given(texts=corpora(), cap=st.integers(1, 6))
+@given(texts=corpora())
 @settings(
     max_examples=8,
     deadline=None,
     derandomize=True,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-def test_incremental_probe_cap_verdict_sound(texts, cap, spark):
+def test_incremental_probe_cap_verdict_sound(texts, spark):
     try:
         full = {
-            r["doc_id"]: (r["is_dup"], r["n_confirmed"])
+            r["doc_id"]: (r["is_dup"], r["n_candidates"], r["n_confirmed"])
             for r in _incremental_probe_frame(_shingle_df(spark, texts)).collect()
-        }
-        capped = {
-            r["doc_id"]: (r["is_dup"], r["n_confirmed"])
-            for r in _incremental_probe_frame(
-                _shingle_df(spark, texts), cap
-            ).collect()
         }
     finally:
         registry.release_caches()
-    assert set(capped) == set(full)  # same batch membership either way
-    # no false positives: the digest/star route only ever flags docs the
-    # exact probe also flags
-    assert {d for d, (dup, _) in capped.items() if dup} <= {
-        d for d, (dup, _) in full.items() if dup
-    }
-    # the capped probe trades recall, never inflates: a dup reachable
-    # through both the pair and digest routes must be counted ONCE, so
-    # capped n_confirmed can never exceed the exact probe's
-    for d, (_, n) in capped.items():
-        assert n <= full[d][1]
-    # byte-identical hist twin ⇒ flagged under any cap
+    # one row per batch doc (every 5th doc_id)
+    assert set(full) == {i for i in range(len(texts)) if i % 5 == 0}
+    # confirmations are a subset of the candidates
+    for _, n_cand, n_conf in full.values():
+        assert 0 <= n_conf <= n_cand
+    # byte-identical hist twin ⇒ flagged
     hist_texts = {t for i, t in enumerate(texts) if i % 5 != 0}
     for d in full:
         if texts[d] in hist_texts:
-            assert capped[d][0] and full[d][0]
+            assert full[d][0]
 
 
 @given(
@@ -167,7 +119,6 @@ def test_incremental_probe_cap_verdict_sound(texts, cap, spark):
         min_size=2,
         max_size=14,
     ),
-    cap=st.integers(2, 5),
 )
 @settings(
     max_examples=30,
@@ -175,20 +126,12 @@ def test_incremental_probe_cap_verdict_sound(texts, cap, spark):
     derandomize=True,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-def test_banded_hamming_sound_complete_and_cap_star(hashes, cap, spark):
+def test_banded_hamming_sound_complete_and_cap_star(hashes, spark):
     """The perceptual family's pigeonhole claim, on ARBITRARY 64-bit
     fingerprints (hypothesis loves adversarial bit patterns, e.g. many
-    identical hashes piling into one band bucket):
-
-    - exactness at cap=None: the banded join's pair set EQUALS the
-      all-pairs Hamming <= T set (T=3 dirty bits cannot dirty all 4
-      bands), with correct per-pair distances;
-    - soundness under any cap: every emitted pair is a real <= T pair
-      with the correct distance, and the pair set is a SUBSET of the
-      exact set (the star only drops whale-bucket edges, never invents);
-    - star connectivity for identical whales: any group of > cap
-      IDENTICAL fingerprints stays fully connected through the bucket
-      minimum (dedup clusters are equivalence classes)."""
+    identical hashes piling into one band bucket): the banded join's
+    pair set EQUALS the all-pairs Hamming <= T set (T=3 dirty bits
+    cannot dirty all 4 bands), with correct per-pair distances."""
     from hyperloglog_pyspark_spark.operators.multimodal import (
         PERC_HAMMING_T,
         _banded_hamming_pairs,
@@ -211,25 +154,6 @@ def test_banded_hamming_sound_complete_and_cap_star(hashes, cap, spark):
     }
     got = {(r.doc_a, r.doc_b): r.hamming for r in _banded_hamming_pairs(df).collect()}
     assert got == exact
-
-    capped = {
-        (r.doc_a, r.doc_b): r.hamming
-        for r in _banded_hamming_pairs(df, bucket_cap=cap).collect()
-    }
-    assert set(capped) <= set(exact)
-    assert all(capped[p] == exact[p] for p in capped)
-    # identical whales stay connected via the star
-    from collections import defaultdict
-
-    groups = defaultdict(list)
-    for i, h in enumerate(hashes):
-        groups[h].append(i)
-    for members in groups.values():
-        if len(members) > cap:
-            hub = min(members)
-            for m in members:
-                if m != hub:
-                    assert (hub, m) in capped, (hub, m, len(members))
 
 
 def test_normalized_exact_catches_reformatted_copies(spark, tmp_path_factory):

@@ -27,6 +27,7 @@ import os
 import shutil
 import tempfile
 from collections import Counter
+from unittest import mock
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -123,18 +124,17 @@ def test_weighted_prefix_filter_matches_naive_truth(texts, spark):
             for r in REGISTRY["dedup_weighted_jaccard"].fn(spark, d).collect()
         }
         assert banded <= set(got)
-        # the threshold knob: at t = 4/5 the prefix filter must still
-        # equal the naive truth — shorter prefixes, same completeness
-        from hyperloglog_pyspark_spark.operators.dedup import (
-            dedup_weighted_prefix_filter,
-        )
+        # the threshold: at t = 4/5 the prefix filter must still equal
+        # the naive truth — shorter prefixes, same completeness. The
+        # module function reads WPF_T_NUM/WPF_T_DEN when it builds the
+        # plan; the registry wrapper's plan memo would serve t = 1/2.
+        from hyperloglog_pyspark_spark.operators import dedup
 
-        strict = {
-            (r["doc_a"], r["doc_b"]): (r["toks_a"], r["toks_b"], r["sum_min"])
-            for r in dedup_weighted_prefix_filter(
-                spark, d, t_num=4, t_den=5
-            ).collect()
-        }
+        with mock.patch.multiple(dedup, WPF_T_NUM=4, WPF_T_DEN=5):
+            strict = {
+                (r["doc_a"], r["doc_b"]): (r["toks_a"], r["toks_b"], r["sum_min"])
+                for r in dedup.dedup_weighted_prefix_filter(spark, d).collect()
+            }
         assert strict == _bag_truth(texts, 4, 5)
     finally:
         shutil.rmtree(d, ignore_errors=True)

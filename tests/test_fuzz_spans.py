@@ -23,6 +23,7 @@ registered queries exactly. derandomize keeps CI stable.
 from __future__ import annotations
 
 from collections import defaultdict
+from unittest import mock
 
 from hypothesis import HealthCheck, given, settings, strategies as st
 
@@ -274,25 +275,29 @@ def test_ngram_novelty_matches_reference(texts, spark, tmp_path_factory):
 )
 def test_exact_substring_df_cap_binds(texts, spark, tmp_path_factory):
     """The whale-guard path under a cap the corpora can actually hit:
-    with df_cap=2, any gram shared by 3+ docs (the spliced splice-chains
-    produce them) must be dropped BEFORE the self-join — distinct-DOC
-    counting, boundary df == cap kept, df == cap+1 dropped — and a span
-    must survive unless every one of its grams crossed the cap. The
-    default-cap fuzz above never binds (corpora are <= 7 docs vs cap
-    64); this one pins the guard itself via the df_cap product knob."""
-    from hyperloglog_pyspark_spark.operators.dedup import dedup_exact_substring
+    with XSUB_DF_FLOOR = 2 and XSUB_DF_HEADROOM = 0 the derived cap is
+    max(2, 0 × p99.9) = 2, so any gram shared by 3+ docs (the spliced
+    splice-chains produce them) must be dropped BEFORE the self-join —
+    distinct-DOC counting, boundary df == cap kept, df == cap+1 dropped
+    — and a span must survive unless every one of its grams crossed
+    the cap. The default-cap fuzz above never binds (corpora are <= 7
+    docs vs cap 64); this one pins the guard itself. It calls the
+    module function, not the registry wrapper, so the patched
+    constants are read when the plan is built."""
+    from hyperloglog_pyspark_spark.operators import dedup
 
     d = str(tmp_path_factory.mktemp("xsubcapfuzz"))
     write_documents(d, texts, "fuzz")
     want = _reference_xsub(texts, df_cap=2)
-    got = {
-        (r["doc_a"], r["doc_b"]): (
-            r["max_span_tokens"],
-            r["n_spans"],
-            r["shared_token_mass"],
-        )
-        for r in dedup_exact_substring(spark, d, df_cap=2).collect()
-    }
+    with mock.patch.multiple(dedup, XSUB_DF_FLOOR=2, XSUB_DF_HEADROOM=0):
+        got = {
+            (r["doc_a"], r["doc_b"]): (
+                r["max_span_tokens"],
+                r["n_spans"],
+                r["shared_token_mass"],
+            )
+            for r in dedup.dedup_exact_substring(spark, d).collect()
+        }
     assert got == want
 
 

@@ -447,6 +447,34 @@ def test_pagerank_builds_without_jobs_and_hits_plan_memo(spark, sf_dir):
     )
 
 
+def test_sketch_stores_build_without_jobs_and_hit_plan_memo(spark, sf_dir, duck):
+    """The two sketch stores read their store back with the schema of
+    the frame they write, so once a store exists building the query runs
+    no job (a schema-less parquet read infers the schema in one) and the
+    plan memo serves the next invocation. The memoized frame matches the
+    oracle on each of two runs."""
+    from hyperloglog_pyspark_spark import registry
+    from hyperloglog_pyspark_spark.registry import REGISTRY
+    from tests.helpers import compare
+
+    assert registry.EAGER_CACHES
+    sc = spark.sparkContext
+    for name in ("sink_ddsketch_store", "sink_hll_sketch_store"):
+        registry.release_caches()
+        ALL[name](spark, sf_dir)  # builds the store once per process
+        group = f"{name}-warm-build"
+        sc.setJobGroup(group, f"jobs run while building {name} again")
+        try:
+            second = ALL[name](spark, sf_dir)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+        assert ALL[name](spark, sf_dir) is second, name
+        for run in (1, 2):
+            compare(second, duck, REGISTRY[name].oracle, f"{name}[{run}]")
+
+
 def _is_cached(spark, df) -> bool:
     cm = spark._jsparkSession.sharedState().cacheManager()
     return cm.lookupCachedData(df._jdf).isDefined()
@@ -1127,121 +1155,39 @@ def test_hll_merge_compat_single_parity_still_estimates():
     assert est == 3
 
 
-def test_lsh_bucket_cap_stars_oversized_buckets(spark):
-    """The boilerplate-skew guard (dedup_skew_probe.py / SCALE.md): an
-    over-cap bucket must emit a linear star to its minimum instead of
-    the |b|²/2 clique, while ≤cap buckets keep exact pairwise — and for
-    identical documents the star spans the SAME connected component as
-    the clique, so cluster-level dedup results are unchanged."""
-    from pyspark.sql import functions as F
-
-    from hyperloglog_pyspark_spark.operators.dedup import (
-        _lsh_candidates,
-        _minhash_sigs,
-    )
-    from hyperloglog_pyspark_spark.functions.texttools import word_shingles
-
-    boiler = " ".join(f"w{i}" for i in range(30))
-    rows = [(i, boiler) for i in range(20)]  # 20 identical docs → whale
-    rows += [(100, "alpha beta gamma delta epsilon zeta"),
-             (101, "alpha beta gamma delta epsilon eta")]  # small near-dup
-    docs = spark.createDataFrame(rows, "doc_id long, text string").select(
-        "doc_id", word_shingles("text", 3).alias("sh")
-    )
-    sigs = _minhash_sigs(docs)
-    full = {tuple(r) for r in _lsh_candidates(sigs).collect()}
-    capped = {tuple(r) for r in _lsh_candidates(sigs, bucket_cap=5).collect()}
-
-    whale_full = {p for p in full if p[0] < 100}
-    whale_capped = {p for p in capped if p[0] < 100 or p[1] < 100}
-    assert len(whale_full) == 20 * 19 // 2  # clique
-    assert whale_capped == {(0, b) for b in range(1, 20)}  # star to min
-    # small buckets are untouched by the cap
-    assert {p for p in capped if p[0] >= 100} == {
-        p for p in full if p[0] >= 100
-    }
-
-    # same connected components either way (star preserves the class)
-    def components(pairs):
-        parent = {}
-
-        def find(x):
-            while parent.setdefault(x, x) != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in pairs:
-            parent[find(a)] = find(b)
-        groups = {}
-        for n in parent:
-            groups.setdefault(find(n), set()).add(n)
-        return {frozenset(g) for g in groups.values()}
-
-    assert components(full) == components(capped)
-
-
-def test_incremental_probe_bucket_cap_digest_route(spark):
-    """Index-side twin of the LSH bucket cap (SCALE.md §skewed band):
-    (a) with every bucket under the cap, the capped probe reduces to the
-    uncapped result exactly; (b) with a whale index bucket, batch docs
-    probing it are routed through the exact-digest leg — byte-identical
-    boilerplate keeps its is_dup verdict, nothing the exact probe would
-    admit gets flagged, and the whale bucket is never pair-exploded
-    (candidate counts collapse from |bucket| members to distinct
-    digests)."""
+def test_incremental_probe_counts_whale_members_and_twins(spark):
+    """The probe's exact counts on two fixed corpora. (a) A 20-doc
+    identical boilerplate whale: each batch whale doc (0, 5, 10, 15)
+    has all 16 hist members as candidates and confirms every one; a
+    batch doc with an identical hist twin has exactly that hit; a novel
+    doc has none. (b) A batch doc whose identical hist twin shares its
+    band buckets with seven low-Jaccard one-word variants: 8 candidates,
+    the twin confirmed once."""
     from hyperloglog_pyspark_spark.functions.texttools import word_shingles
     from hyperloglog_pyspark_spark.operators.dedup import (
         _incremental_probe_frame,
     )
+
+    def run(rows):
+        docs = spark.createDataFrame(rows, "doc_id long, text string").select(
+            "doc_id", word_shingles("text", 3).alias("sh")
+        )
+        return {
+            r["doc_id"]: (r["n_candidates"], r["n_confirmed"], r["is_dup"])
+            for r in _incremental_probe_frame(docs).collect()
+        }
 
     boiler = " ".join(f"w{i}" for i in range(30))
     uniq = "alpha beta gamma delta epsilon zeta eta theta"
     rows = [(i, boiler) for i in range(20)]  # ids 0,5,10,15 = batch; 16 hist
     rows += [(100, uniq), (101, uniq)]  # 100 = batch, identical hist twin
     rows += [(200, "one lone document with entirely novel words here")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string").select(
-        "doc_id", word_shingles("text", 3).alias("sh")
-    )
-
-    def run(cap):
-        return {
-            r["doc_id"]: (r["n_candidates"], r["n_confirmed"], r["is_dup"])
-            for r in _incremental_probe_frame(docs, cap).collect()
-        }
-
-    full = run(None)
-    assert run(100) == full  # whale bucket (16) under cap → exact reduction
-    capped = run(5)
-    assert set(capped) == set(full)
-    # verdicts agree on every doc: whale batch docs stay dropped (digest
-    # hit), the identical unique pair stays dropped (pairwise route
-    # untouched), the novel doc stays admitted
-    assert {d: v[2] for d in full for v in [full[d]]} == {
-        d: v[2] for d in capped for v in [capped[d]]
+    got = run(rows)
+    assert got == {
+        **{w: (16, 16, True) for w in (0, 5, 10, 15)},
+        100: (1, 1, True),
+        200: (0, 0, False),
     }
-    for whale_id in (0, 5, 10, 15):
-        assert full[whale_id][0] == 16  # uncapped enumerates the bucket
-        assert capped[whale_id] == (1, 1, True)  # one distinct digest
-    assert capped[100] == full[100]  # small bucket: same pairwise numbers
-    assert capped[200] == (0, 0, False)
-
-
-def test_incremental_probe_cross_route_counts_once(spark):
-    """A duplicate reachable through BOTH probe routes is counted once:
-    doc 0 (batch) has a byte-identical hist twin (doc 1) that shares its
-    under-cap band buckets (pairwise confirmation) while a whale of
-    low-Jaccard one-word variants floods ONE band over the cap, routing
-    doc 0 through the digest leg — which hits the same twin's digest.
-    Pre-fix n_confirmed = 2 (pair + digest) where the exact probe says 1;
-    the digest route now anti-joins away digests already represented
-    among the doc's pairwise-confirmed hists. (Texts pinned from a
-    search over one-word variants; the minhash permutations are fixed,
-    so the band split is deterministic.)"""
-    from hyperloglog_pyspark_spark.functions.texttools import word_shingles
-    from hyperloglog_pyspark_spark.operators.dedup import (
-        _incremental_probe_frame,
-    )
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota"
     variants = [
@@ -1249,54 +1195,37 @@ def test_incremental_probe_cross_route_counts_once(spark):
         for w in ("xi", "pi", "rho", "phi", "chi", "v0", "v4")
     ]
     rows = [(0, base), (1, base)] + list(zip([2, 3, 4, 6, 7, 8, 9], variants))
-    docs = spark.createDataFrame(rows, "doc_id long, text string").select(
-        "doc_id", word_shingles("text", 3).alias("sh")
-    )
-
-    def run(cap):
-        return {
-            r["doc_id"]: (r["n_candidates"], r["n_confirmed"], r["is_dup"])
-            for r in _incremental_probe_frame(docs, cap).collect()
-        }
-
-    full = run(None)
-    assert full == {0: (8, 1, True)}  # exact: 8 candidates, twin confirmed once
-    capped = run(5)
-    # whale band (twin + 7 variants = 8 > cap) digest-routed; under-cap
-    # bands confirm the twin pairwise; the digest hit is excluded
-    assert capped[0][1] == 1  # counted ONCE (pre-fix: 2)
-    assert capped[0][2] and capped[0][1] <= full[0][1]
+    assert run(rows) == {0: (8, 1, True)}
 
 
-def test_sh_digest_is_injective_over_separator_bearing_tokens(spark):
-    """The capped probe's digest route claims digest equality ⇔
-    identical shingle set; a plain md5(array_join(sh, '|')) broke that
-    for tokens containing '|' — ['x|y', 'z'] and ['x', 'y|z'] join to
-    the same string. The per-element-md5 digest keeps them distinct
-    (fixed-width hex elements make the join unambiguous) while still
-    mapping identical sets to one digest."""
-    from hyperloglog_pyspark_spark.operators.dedup import _sh_digest
-
-    df = spark.createDataFrame(
-        [(1, ["x|y", "z"]), (2, ["x", "y|z"]), (3, ["x|y", "z"])],
-        "doc_id long, sh array<string>",
-    ).select("doc_id", _sh_digest("sh").alias("dg"))
-    got = {r["doc_id"]: r["dg"] for r in df.collect()}
-    assert got[1] != got[2]  # old encoding collided these
-    assert got[1] == got[3]  # identical sets still share one digest
-
-
-def test_incremental_epochs_bucket_cap_digest_route(spark):
-    """The epochs flow's whale guard: per-epoch census + digest route.
-    (a) caps above every bucket reduce exactly to the uncapped result;
-    (b) a whale seed bucket keeps rejecting identical later-epoch docs
-    under a small cap (digest hit), admission verdicts never diverge
-    from the exact probe; (c) epoch chaining still works through the
-    capped path — an epoch-1 admit rejects its epoch-2 twin."""
+def test_incremental_epochs_counts_whale_chain_and_twin(spark):
+    """The epochs flow's exact counts on two fixed corpora. (a) An
+    18-doc identical whale, 6 per epoch: every later-epoch whale doc
+    confirms the 6 admitted members it can see (epoch 1 the seed
+    whales; epoch 2 the seed whales, the epoch-1 whales being rejected)
+    and is rejected; a seed twin rejects its epoch-1 copy; an epoch-1
+    admit rejects its epoch-2 twin (epoch chaining); a novel doc is
+    admitted. (b) An epoch-1 doc whose identical seed twin shares its
+    band buckets with seven one-word variants: 8 candidates, the twin
+    confirmed once."""
     from hyperloglog_pyspark_spark.functions.texttools import word_shingles
     from hyperloglog_pyspark_spark.operators.dedup import (
         _incremental_epochs_frame,
     )
+
+    def run(rows):
+        docs = spark.createDataFrame(rows, "doc_id long, text string").select(
+            "doc_id", word_shingles("text", 3).alias("sh")
+        )
+        return {
+            r["doc_id"]: (
+                r["epoch"],
+                r["n_candidates"],
+                r["n_confirmed"],
+                r["admitted"],
+            )
+            for r in _incremental_epochs_frame(docs).collect()
+        }
 
     boiler = " ".join(f"w{i}" for i in range(30))
     uniq = "alpha beta gamma delta epsilon zeta eta theta"
@@ -1305,48 +1234,13 @@ def test_incremental_epochs_bucket_cap_digest_route(spark):
     rows += [(99, uniq), (100, uniq)]  # seed + identical epoch-1 twin
     rows += [(103, chain), (104, chain)]  # epoch-1 admit + epoch-2 twin
     rows += [(200, "one lone document with entirely novel words here")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string").select(
-        "doc_id", word_shingles("text", 3).alias("sh")
-    )
-
-    def run(cap):
-        return {
-            r["doc_id"]: (
-                r["epoch"],
-                r["n_candidates"],
-                r["n_confirmed"],
-                r["admitted"],
-            )
-            for r in _incremental_epochs_frame(docs, cap).collect()
-        }
-
-    full = run(None)
-    assert run(100) == full  # whale bucket (6) under cap → exact reduction
-    capped = run(3)
-    assert set(capped) == set(full)
-    assert {d: v[3] for d, v in full.items()} == {
-        d: v[3] for d, v in capped.items()
-    }  # admission verdicts identical
-    for whale_id in (1, 4, 7, 10, 13, 16):  # epoch-1 whales
-        assert full[whale_id][1:] == (6, 6, False)  # uncapped enumerates
-        assert capped[whale_id] == (1, 1, 1, False)  # one distinct digest
-    for whale_id in (2, 5, 8, 11, 14, 17):  # epoch-2 whales stay rejected
-        assert not capped[whale_id][3]
-    assert capped[100] == full[100] == (1, 1, 1, False)  # pairwise route
-    assert capped[103][3] and capped[104] == (2, 1, 1, False)  # chaining
-    assert capped[200] == (2, 0, 0, True)
-
-
-def test_incremental_epochs_cross_route_counts_once(spark):
-    """Epochs twin of test_incremental_probe_cross_route_counts_once:
-    the same pinned band-split corpus re-keyed onto the epoch layout
-    (doc 1 = epoch-1 batch, doc 0 + the variants = epoch-0 index). The
-    identical twin reachable through both an under-cap band (pairwise)
-    and the whale band (digest) must count once."""
-    from hyperloglog_pyspark_spark.functions.texttools import word_shingles
-    from hyperloglog_pyspark_spark.operators.dedup import (
-        _incremental_epochs_frame,
-    )
+    assert run(rows) == {
+        **{w: (w % 3, 6, 6, False) for w in range(18) if w % 3},
+        100: (1, 1, 1, False),
+        103: (1, 0, 0, True),
+        104: (2, 1, 1, False),
+        200: (2, 0, 0, True),
+    }
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota"
     variants = [
@@ -1355,21 +1249,7 @@ def test_incremental_epochs_cross_route_counts_once(spark):
     ]
     rows = [(1, base), (0, base)]  # 1 = epoch-1 batch, 0 = identical seed
     rows += list(zip([3, 6, 9, 12, 15, 18, 21], variants))  # epoch-0 whale
-    docs = spark.createDataFrame(rows, "doc_id long, text string").select(
-        "doc_id", word_shingles("text", 3).alias("sh")
-    )
-
-    def run(cap):
-        return {
-            r["doc_id"]: (r["n_candidates"], r["n_confirmed"], r["admitted"])
-            for r in _incremental_epochs_frame(docs, cap).collect()
-        }
-
-    full = run(None)
-    assert full[1] == (8, 1, False)  # exact: twin confirmed once
-    capped = run(5)
-    assert capped[1][1] == 1  # counted ONCE across routes (pre-fix: 2)
-    assert not capped[1][2] and capped[1][1] <= full[1][1]
+    assert run(rows) == {1: (1, 8, 1, False)}
 
 
 def test_connected_components_memo_survives_query_release(spark):
@@ -1855,39 +1735,6 @@ def test_ivf_pq_consistent_with_adc_scoring(spark, sf_dir):
         assert grp["adc_d2"].is_monotonic_increasing
 
 
-def test_banded_hamming_bucket_cap_star_fallback(spark):
-    """The perceptual family's whale-band skew guard (_banded_hamming_pairs
-    bucket_cap), same discipline as _lsh_candidates: a planted clique of
-    6 IDENTICAL fingerprints (a corpus-wide boilerplate image) under
-    cap=4 must emit the linear STAR to the clique minimum (5 edges at
-    hamming 0 — spanning the same connected component as the C(6,2)=15
-    pairwise edges), while an under-cap near-dup pair elsewhere keeps
-    exact pairwise. cap=None reproduces full pairwise on the clique."""
-    from hyperloglog_pyspark_spark.operators.multimodal import (
-        _banded_hamming_pairs,
-    )
-
-    rows = [(i, 7, 7, 7, 7) for i in range(6)]          # identical clique
-    rows += [(10, 100, 200, 300, 400), (11, 101, 200, 300, 400)]  # 1-bit pair
-    hashes = spark.createDataFrame(
-        rows, "doc_id long, b0 long, b1 long, b2 long, b3 long"
-    )
-    capped = {
-        (r.doc_a, r.doc_b): r.hamming
-        for r in _banded_hamming_pairs(hashes, bucket_cap=4).collect()
-    }
-    star = {(0, b) for b in range(1, 6)}
-    assert {p for p in capped if p[0] < 10} == star
-    assert all(capped[p] == 0 for p in star)
-    assert capped[(10, 11)] == 1
-    full = {
-        (r.doc_a, r.doc_b)
-        for r in _banded_hamming_pairs(hashes).collect()
-        if r.doc_a < 10
-    }
-    assert len(full) == 15
-
-
 def test_ivf_pq_recall_report_bounds(spark, sf_dir):
     """The IVF-PQ recall monitor's structural contract: one row per
     query, n_exact = TOP_K, 0 <= n_hits <= n_exact, recall =
@@ -1903,32 +1750,6 @@ def test_ivf_pq_recall_report_bounds(spark, sf_dir):
     assert (rep["n_exact"] == TOP_K).all()
     assert ((rep["n_hits"] >= 0) & (rep["n_hits"] <= rep["n_exact"])).all()
     assert (rep["recall"] == (rep["n_hits"] / rep["n_exact"]).round(4)).all()
-
-
-def test_canonical_bucket_cap_passthrough(spark, sf_dir):
-    """The canonical pick exposes the same cap-and-star whale guard as
-    its pair-query siblings; exercise the cap path end-to-end through
-    CC + accounting (r10 review flagged it as untested surface):
-
-    - a cap larger than every band bucket is a NO-OP — output equals
-      the uncapped run exactly;
-    - a tiny cap still yields well-formed clusters whose keeper IS the
-      component label (MIN doc_id), and the capped star edges keep the
-      planted same-group members connected (the r9 cap contract)."""
-    from hyperloglog_pyspark_spark.operators.multimodal import (
-        multimodal_dedup_canonical,
-    )
-
-    base = {tuple(r) for r in multimodal_dedup_canonical(spark, sf_dir).collect()}
-    nocap = {
-        tuple(r)
-        for r in multimodal_dedup_canonical(spark, sf_dir, bucket_cap=10**6).collect()
-    }
-    assert nocap == base
-    capped = multimodal_dedup_canonical(spark, sf_dir, bucket_cap=2).toPandas()
-    assert len(capped) > 0
-    assert (capped.canonical_doc == capped.cluster_id).all()
-    assert (capped.reclaimed_bytes == (capped.n_members - 1) * capped.kept_bytes).all()
 
 
 def test_package_zip_keyed_by_content():

@@ -377,16 +377,14 @@ def test_autocorrelation_alternating_series_and_dense_spine(
     assert got[("sparse", 1)]["total_events"] == 2
 
 
-def test_entity_resolution_stop_block_cap_drops_placeholder_flood(
+def test_entity_resolution_placeholder_flood_matches_oracle(
     spark, tmp_path_factory
 ):
     """A placeholder name flooding one (nation, name-prefix) block is
-    the blocking key's failure mode: 120 'UNKNOWN#...' rows produce
-    ~7k pairwise Levenshteins uncapped. The stop-block cap (frequency
-    filtering) must exclude that block from pairing entirely — zero
-    whale pairs — while an honest near-dup pair in a small block keeps
-    matching; the registered (uncapped) form still hash-matches its
-    recursive-CTE oracle on the same fixture."""
+    the blocking key's failure mode: 96 'UNKNOWN#...' rows pay every
+    one of their 96·95/2 pairwise Levenshteins, while an honest near-dup
+    pair in a small block matches once; the query hash-matches its
+    recursive-CTE oracle on the fixture."""
     queries()
     d = str(tmp_path_factory.mktemp("erstop"))
     names = ["Customer#000000001", "Customer#000000002"]  # lev 1, one block
@@ -412,21 +410,6 @@ def test_entity_resolution_stop_block_cap_drops_placeholder_flood(
     con = _duck(d, "customer")
     df = REGISTRY["entity_resolution_blocked"].fn(spark, d)
     compare(df, con, oracle_sql()["entity_resolution_blocked"], "er_stop")
-    uncapped = {r["nationkey"]: r for r in df.collect()}
-    assert uncapped[0]["n_pairs"] == 96 * 95 // 2
-    assert uncapped[3]["n_pairs"] == 1 and uncapped[3]["n_matches"] == 1
-
-    from hyperloglog_pyspark_spark.operators.dedup import (
-        entity_resolution_blocked,
-    )
-
-    capped = {
-        r["nationkey"]: r
-        for r in entity_resolution_blocked(spark, d, block_cap=50).collect()
-    }
-    # whale block excluded from pairing; census still counts it
-    assert capped[0]["n_pairs"] == 0 and capped[0]["n_matches"] == 0
-    assert capped[0]["n_entities"] == 96 and capped[0]["n_blocks"] == 1
-    # the honest pair in the small block is untouched
-    assert capped[3]["n_pairs"] == 1 and capped[3]["n_matches"] == 1
-    assert capped[3]["n_clusters"] == 1 and capped[3]["n_merged_rows"] == 2
+    got = {r["nationkey"]: r for r in df.collect()}
+    assert got[0]["n_pairs"] == 96 * 95 // 2
+    assert got[3]["n_pairs"] == 1 and got[3]["n_matches"] == 1
