@@ -1155,78 +1155,95 @@ def test_hll_merge_compat_single_parity_still_estimates():
     assert est == 3
 
 
-def test_incremental_probe_counts_whale_members_and_twins(spark):
-    """The probe's exact counts on two fixed corpora. (a) A 20-doc
-    identical boilerplate whale: each batch whale doc (0, 5, 10, 15)
-    has all 16 hist members as candidates and confirms every one; a
-    batch doc with an identical hist twin has exactly that hit; a novel
-    doc has none. (b) A batch doc whose identical hist twin shares its
-    band buckets with seven low-Jaccard one-word variants: 8 candidates,
-    the twin confirmed once."""
+def _probe_counts(spark, rows):
+    """doc_id -> (n_candidates, n_confirmed, is_dup) of the incremental
+    probe over a fixed (doc_id, text) corpus."""
     from hyperloglog_pyspark_spark.functions.texttools import word_shingles
     from hyperloglog_pyspark_spark.operators.dedup import (
         _incremental_probe_frame,
     )
 
-    def run(rows):
-        docs = spark.createDataFrame(rows, "doc_id long, text string").select(
-            "doc_id", word_shingles("text", 3).alias("sh")
-        )
-        return {
-            r["doc_id"]: (r["n_candidates"], r["n_confirmed"], r["is_dup"])
-            for r in _incremental_probe_frame(docs).collect()
-        }
-
-    boiler = " ".join(f"w{i}" for i in range(30))
-    uniq = "alpha beta gamma delta epsilon zeta eta theta"
-    rows = [(i, boiler) for i in range(20)]  # ids 0,5,10,15 = batch; 16 hist
-    rows += [(100, uniq), (101, uniq)]  # 100 = batch, identical hist twin
-    rows += [(200, "one lone document with entirely novel words here")]
-    got = run(rows)
-    assert got == {
-        **{w: (16, 16, True) for w in (0, 5, 10, 15)},
-        100: (1, 1, True),
-        200: (0, 0, False),
+    docs = spark.createDataFrame(rows, "doc_id long, text string").select(
+        "doc_id", word_shingles("text", 3).alias("sh")
+    )
+    return {
+        r["doc_id"]: (r["n_candidates"], r["n_confirmed"], r["is_dup"])
+        for r in _incremental_probe_frame(docs).collect()
     }
 
-    base = "alpha beta gamma delta epsilon zeta eta theta iota"
-    variants = [
-        "alpha beta gamma delta epsilon %s eta theta iota" % w
-        for w in ("xi", "pi", "rho", "phi", "chi", "v0", "v4")
-    ]
-    rows = [(0, base), (1, base)] + list(zip([2, 3, 4, 6, 7, 8, 9], variants))
-    assert run(rows) == {0: (8, 1, True)}
 
-
-def test_incremental_epochs_counts_whale_chain_and_twin(spark):
-    """The epochs flow's exact counts on two fixed corpora. (a) An
-    18-doc identical whale, 6 per epoch: every later-epoch whale doc
-    confirms the 6 admitted members it can see (epoch 1 the seed
-    whales; epoch 2 the seed whales, the epoch-1 whales being rejected)
-    and is rejected; a seed twin rejects its epoch-1 copy; an epoch-1
-    admit rejects its epoch-2 twin (epoch chaining); a novel doc is
-    admitted. (b) An epoch-1 doc whose identical seed twin shares its
-    band buckets with seven one-word variants: 8 candidates, the twin
-    confirmed once."""
+def _epochs_counts(spark, rows):
+    """doc_id -> (epoch, n_candidates, n_confirmed, admitted) of the
+    incremental epochs flow over a fixed (doc_id, text) corpus."""
     from hyperloglog_pyspark_spark.functions.texttools import word_shingles
     from hyperloglog_pyspark_spark.operators.dedup import (
         _incremental_epochs_frame,
     )
 
-    def run(rows):
-        docs = spark.createDataFrame(rows, "doc_id long, text string").select(
-            "doc_id", word_shingles("text", 3).alias("sh")
+    docs = spark.createDataFrame(rows, "doc_id long, text string").select(
+        "doc_id", word_shingles("text", 3).alias("sh")
+    )
+    return {
+        r["doc_id"]: (
+            r["epoch"],
+            r["n_candidates"],
+            r["n_confirmed"],
+            r["admitted"],
         )
-        return {
-            r["doc_id"]: (
-                r["epoch"],
-                r["n_candidates"],
-                r["n_confirmed"],
-                r["admitted"],
-            )
-            for r in _incremental_epochs_frame(docs).collect()
-        }
+        for r in _incremental_epochs_frame(docs).collect()
+    }
 
+
+# A batch doc whose identical hist twin shares its band buckets with
+# seven low-Jaccard one-word variants (texts pinned from a search over
+# one-word variants; the minhash permutations are fixed, so the band
+# split is deterministic).
+_TWIN_BASE = "alpha beta gamma delta epsilon zeta eta theta iota"
+_TWIN_VARIANTS = [
+    "alpha beta gamma delta epsilon %s eta theta iota" % w
+    for w in ("xi", "pi", "rho", "phi", "chi", "v0", "v4")
+]
+
+
+def test_incremental_probe_bucket_cap_digest_route(spark):
+    """The probe's exact counts on a whale corpus (the name is kept from
+    when it also covered the removed bucket-cap digest route): a 20-doc
+    identical boilerplate whale, where each batch whale doc (0, 5, 10,
+    15) has all 16 hist members as candidates and confirms every one; a
+    batch doc with an identical hist twin has exactly that hit; a novel
+    doc has none."""
+    boiler = " ".join(f"w{i}" for i in range(30))
+    uniq = "alpha beta gamma delta epsilon zeta eta theta"
+    rows = [(i, boiler) for i in range(20)]  # ids 0,5,10,15 = batch; 16 hist
+    rows += [(100, uniq), (101, uniq)]  # 100 = batch, identical hist twin
+    rows += [(200, "one lone document with entirely novel words here")]
+    assert _probe_counts(spark, rows) == {
+        **{w: (16, 16, True) for w in (0, 5, 10, 15)},
+        100: (1, 1, True),
+        200: (0, 0, False),
+    }
+
+
+def test_incremental_probe_cross_route_counts_once(spark):
+    """A duplicate reachable through several band buckets is counted once
+    (the name is kept from when it also covered the removed digest
+    route): batch doc 0's identical hist twin (doc 1) shares its band
+    buckets with seven one-word variants, so doc 0 has 8 candidates and
+    the twin is confirmed once."""
+    rows = [(0, _TWIN_BASE), (1, _TWIN_BASE)]
+    rows += list(zip([2, 3, 4, 6, 7, 8, 9], _TWIN_VARIANTS))
+    assert _probe_counts(spark, rows) == {0: (8, 1, True)}
+
+
+def test_incremental_epochs_bucket_cap_digest_route(spark):
+    """The epochs flow's exact counts on a whale corpus (the name is kept
+    from when it also covered the removed capped per-epoch path): an
+    18-doc identical whale, 6 per epoch, where every later-epoch whale
+    doc confirms the 6 admitted members it can see (epoch 1 the seed
+    whales; epoch 2 the seed whales, the epoch-1 whales being rejected)
+    and is rejected; a seed twin rejects its epoch-1 copy; an epoch-1
+    admit rejects its epoch-2 twin (epoch chaining); a novel doc is
+    admitted."""
     boiler = " ".join(f"w{i}" for i in range(30))
     uniq = "alpha beta gamma delta epsilon zeta eta theta"
     chain = "kappa lambda mu nu xi omicron pi rho"
@@ -1234,7 +1251,7 @@ def test_incremental_epochs_counts_whale_chain_and_twin(spark):
     rows += [(99, uniq), (100, uniq)]  # seed + identical epoch-1 twin
     rows += [(103, chain), (104, chain)]  # epoch-1 admit + epoch-2 twin
     rows += [(200, "one lone document with entirely novel words here")]
-    assert run(rows) == {
+    assert _epochs_counts(spark, rows) == {
         **{w: (w % 3, 6, 6, False) for w in range(18) if w % 3},
         100: (1, 1, 1, False),
         103: (1, 0, 0, True),
@@ -1242,14 +1259,15 @@ def test_incremental_epochs_counts_whale_chain_and_twin(spark):
         200: (2, 0, 0, True),
     }
 
-    base = "alpha beta gamma delta epsilon zeta eta theta iota"
-    variants = [
-        "alpha beta gamma delta epsilon %s eta theta iota" % w
-        for w in ("xi", "pi", "rho", "phi", "chi", "v0", "v4")
-    ]
-    rows = [(1, base), (0, base)]  # 1 = epoch-1 batch, 0 = identical seed
-    rows += list(zip([3, 6, 9, 12, 15, 18, 21], variants))  # epoch-0 whale
-    assert run(rows) == {1: (1, 8, 1, False)}
+
+def test_incremental_epochs_cross_route_counts_once(spark):
+    """Epochs twin of test_incremental_probe_cross_route_counts_once: the
+    same pinned corpus re-keyed onto the epoch layout (doc 1 = epoch-1
+    batch, doc 0 + the variants = epoch-0 index). Doc 1 has 8
+    candidates and its identical seed twin is confirmed once."""
+    rows = [(1, _TWIN_BASE), (0, _TWIN_BASE)]
+    rows += list(zip([3, 6, 9, 12, 15, 18, 21], _TWIN_VARIANTS))
+    assert _epochs_counts(spark, rows) == {1: (1, 8, 1, False)}
 
 
 def test_connected_components_memo_survives_query_release(spark):
